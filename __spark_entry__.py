@@ -19,75 +19,75 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from easy_solr4files_index_spark.functions import dedup, multimodal, similarity, textstats
 from easy_solr4files_index_spark.functions.tokenizer import tokenize_py
-from easy_solr4files_index_spark.operators.index_build import FtsIndex, IndexConfig, build_index
-from easy_solr4files_index_spark.operators.query import access_filter, search
-from easy_solr4files_index_spark.operators.update import delete_by_repo
+from easy_solr4files_index_spark.operators.index_build import IndexConfig
+from easy_solr4files_index_spark.operators.postings import (PhysicalIndex,
+                                                            open_index,
+                                                            write_index)
+from easy_solr4files_index_spark.operators.query import access_filter
+from easy_solr4files_index_spark.operators.wand import (search_blockmax,
+                                                        search_with_found)
 from easy_solr4files_index_spark.oracle import duckdb_sql as osql
 from easy_solr4files_index_spark.sources.docs_source import ingest_acl_filter, load_docs
 
 _INDEX_CACHE: dict[tuple[int, str, str], object] = {}
 
 
-def _index(spark: SparkSession, sf_dir: str) -> FtsIndex:
-    key = (id(spark), sf_dir, "logical")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_index(spark, load_docs(spark, sf_dir))
-    return _INDEX_CACHE[key]
+def _authjoin_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S7+J4: the corpus joined with the auth-info TABLE at ingest
+    (sources/docs_source.auth_info_table + join_auth_info) — the
+    Spark-native form of the reference's per-file auth-info HTTP fetch
+    (AuthorisationComponent.scala:41-51) feeding the accessibility gate
+    and the indexed access fields (FileItem.scala:36-37)."""
+    from easy_solr4files_index_spark.sources.docs_source import (
+        auth_info_table, join_auth_info)
+
+    return join_auth_info(load_docs(spark, sf_dir, with_acl=False),
+                          auth_info_table(spark, sf_dir))
 
 
-def _index_arrow(spark: SparkSession, sf_dir: str) -> FtsIndex:
-    """Same corpus indexed through the pandas-UDF tokenizer chain
-    (IndexConfig.use_arrow_tokenizer) — behavior-identical to the codegen
-    expression chain, and gated by the same oracle."""
-    key = (id(spark), sf_dir, "arrow")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_index(
-            spark, load_docs(spark, sf_dir), IndexConfig(use_arrow_tokenizer=True))
-    return _INDEX_CACHE[key]
+# index variant -> (corpus, IndexConfig); every variant is gated by the
+# same DuckDB oracle with the matching ingest/analyzer settings
+_VARIANTS: dict[str, Callable[[SparkSession, str], tuple[DataFrame, IndexConfig]]] = {
+    "default": lambda spark, d: (load_docs(spark, d), IndexConfig()),
+    # pandas-UDF tokenizer chain — behavior-identical to the codegen chain
+    "arrow": lambda spark, d: (load_docs(spark, d),
+                               IndexConfig(use_arrow_tokenizer=True)),
+    # P6 ingest accessibility filter: accessible_to == NONE docs never
+    # enter the index (doc_ids are ranks over the filtered corpus)
+    "acl": lambda spark, d: (ingest_acl_filter(load_docs(spark, d)),
+                             IndexConfig()),
+    # reference-exact stopwords: the reference ships an EMPTY
+    # stopwords.txt (schema.xml:507), so 'the' is searchable
+    "nostop": lambda spark, d: (load_docs(spark, d), IndexConfig(stopwords=())),
+    "authjoin": lambda spark, d: (_authjoin_docs(spark, d), IndexConfig()),
+    # X4 catenateWords=1 (schema.xml:592): every multi-part word also
+    # indexes its delimiter-deleted form, e.g. the path word
+    # docs/00000007.txt indexes docs, 00000007, txt AND docs00000007txt
+    "catenate": lambda spark, d: (load_docs(spark, d),
+                                  IndexConfig(catenate_words=True)),
+}
 
 
-def _index_physical(spark: SparkSession, sf_dir: str):
-    """The on-disk physical index (varbyte/delta blocks, term-bucket
-    partitioning) queried through block-max WAND — the at-scale engine
-    path, under the same DuckDB oracle as the logical path."""
+def _index(spark: SparkSession, sf_dir: str,
+           variant: str = "default") -> PhysicalIndex:
+    """The on-disk index (varbyte/delta blocks, term-bucket partitioning,
+    queried through block-max WAND) of one corpus variant, written once
+    per session and sf dir."""
     import tempfile
 
-    from easy_solr4files_index_spark.operators.postings import open_index, write_index
-
-    key = (id(spark), sf_dir, "physical")
+    key = (id(spark), sf_dir, variant)
     if key not in _INDEX_CACHE:
-        d = tempfile.mkdtemp(prefix="fts_entry_phys_")
-        write_index(spark, load_docs(spark, sf_dir), d, lineage_groups=1)
+        docs, config = _VARIANTS[variant](spark, sf_dir)
+        d = tempfile.mkdtemp(prefix=f"fts_entry_{variant}_")
+        write_index(spark, docs, d, config, lineage_groups=1)
         _INDEX_CACHE[key] = open_index(spark, d)
-    return _INDEX_CACHE[key]
-
-
-def _index_acl(spark: SparkSession, sf_dir: str) -> FtsIndex:
-    """Index built with the P6 ingest accessibility filter applied:
-    accessible_to == NONE docs never enter the index (doc_ids are ranks
-    over the filtered corpus, like the reference never submitting them)."""
-    key = (id(spark), sf_dir, "acl")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_index(
-            spark, ingest_acl_filter(load_docs(spark, sf_dir)))
-    return _INDEX_CACHE[key]
-
-
-def _index_nostop(spark: SparkSession, sf_dir: str) -> FtsIndex:
-    """Reference-exact stopword behavior: the reference ships an EMPTY
-    stopwords.txt (schema.xml:507), so 'the' is searchable — reachable
-    here via IndexConfig(stopwords=())."""
-    key = (id(spark), sf_dir, "nostop")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_index(
-            spark, load_docs(spark, sf_dir), IndexConfig(stopwords=()))
     return _INDEX_CACHE[key]
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: multi-term BM25 top-k over sf0.001."""
-    idx = _index(spark, "/root/testdata/sf0.001")
-    return search(idx, "spark join merge", k=10)
+    return search_blockmax(_index(spark, "/root/testdata/sf0.001"),
+                           "spark join merge", k=10)
 
 
 # ---------------------------------------------------------------- queries
@@ -120,21 +120,16 @@ def _mk_search(params):
     text, k, skip, filters = params
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return search(_index(spark, sf_dir), text, k=k, skip=skip, filters=filters)
+        return search_blockmax(_index(spark, sf_dir), text, k=k, skip=skip,
+                               filters=filters)
 
     return run
 
 
-def _q_numfound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = _index(spark, sf_dir)
-    terms = sorted(set(tokenize_py("spark join")))
-    matched = idx.tf.filter(F.col("term").isin(terms)).select("doc_id").distinct()
-    return matched.join(idx.docs_store, "doc_id").agg(F.count("*").alias("found"))
-
-
 def _q_termstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index(spark, sf_dir)
-    return idx.termstats.filter(F.col("term").isin(["spark", "join", "dup", "customer"]))
+    return (idx.termstats.filter(F.col("term").isin(["spark", "join", "dup", "customer"]))
+            .select("term", "df"))
 
 
 def _q_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,15 +149,8 @@ def _q_sha256(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.docs_store.select("repo", "path", "sha256")
 
 
-def _q_delete_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """id:<bagId>* delete analog, then per-repo survivor counts."""
-    idx = delete_by_repo(_index(spark, sf_dir), "src0")
-    return idx.docs_store.groupBy("repo").agg(F.count("*").alias("cnt"))
-
-
 def _q_topk_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from easy_solr4files_index_spark.operators.wand import search_blockmax
-    return search_blockmax(_index_physical(spark, sf_dir), "spark join merge", k=10)
+    return search_blockmax(_index(spark, sf_dir), "spark join merge", k=10)
 
 
 def _q_cached_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,7 +161,7 @@ def _q_cached_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing of the deterministic total order)."""
     from easy_solr4files_index_spark.operators.caches import SearcherCaches
 
-    caches = SearcherCaches(_index_physical(spark, sf_dir))
+    caches = SearcherCaches(_index(spark, sf_dir))
     caches.search("spark join merge", k=10)           # populate
     page = caches.search_df("spark join merge", k=10)  # LRU hit
     assert caches.results.hits >= 1
@@ -189,7 +177,6 @@ def _index_maint(spark: SparkSession, sf_dir: str, mode: str):
 
     from easy_solr4files_index_spark.operators.maintenance import (
         delete_repo_physical, upsert_repos_physical)
-    from easy_solr4files_index_spark.operators.postings import write_index
 
     key = (id(spark), sf_dir, f"maint_{mode}")
     if key not in _INDEX_CACHE:
@@ -211,7 +198,6 @@ def _q_delete_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal a fresh build of the remaining corpus (scores incl. the
     N/avgdl/df shifts the delete causes). No doc_id column: tombstoned
     indexes keep id gaps; scores and keys are what must match."""
-    from easy_solr4files_index_spark.operators.wand import search_blockmax
     idx = _index_maint(spark, sf_dir, "del")
     return (search_blockmax(idx, "spark", k=100000)
             .select("repo", "path", "lang", "score"))
@@ -220,14 +206,13 @@ def _q_delete_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_upsert_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full match listing after delete-before-insert of repo src1 with
     appended content — must equal a fresh build of the modified corpus."""
-    from easy_solr4files_index_spark.operators.wand import search_blockmax
     idx = _index_maint(spark, sf_dir, "ups")
     return (search_blockmax(idx, "spark updatedmarker", k=100000)
             .select("repo", "path", "lang", "score"))
 
 
 def _q_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return search(_index_arrow(spark, sf_dir), "table scan", k=10)
+    return search_blockmax(_index(spark, sf_dir, "arrow"), "table scan", k=10)
 
 
 # metadata-side operator parity over the TPC-H-ish tables: the reference's
@@ -263,16 +248,16 @@ def _q_meta_vocab_join_abr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_topk_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 query-side synonym expansion: 'join' ORs in its synonym 'merge'
     (SynonymGraphFilter analog; empty map = reference default identity)."""
-    return search(_index(spark, sf_dir), "join", k=10,
-                  synonyms={"join": ["merge"]})
+    return search_blockmax(_index(spark, sf_dir), "join", k=10,
+                           synonyms={"join": ["merge"]})
 
 
 def _q_topk_synonyms_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 MULTI-WORD synonym entries (SynonymGraphFilter `a => b c`,
     schema.xml:520-525): the synonym string runs through the analyzer and
     every resulting term joins the dismax disjunction."""
-    return search(_index(spark, sf_dir), "join", k=10,
-                  synonyms={"join": ["Table Scan"]})
+    return search_blockmax(_index(spark, sf_dir), "join", k=10,
+                           synonyms={"join": ["Table Scan"]})
 
 
 def _q_topk_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,53 +266,47 @@ def _q_topk_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lucene BM25 phrase scoring). Reachable surface: SearchServlet.scala
     :79-88 passes user text unescaped into dismax, which keeps balanced
     quotes as operators."""
-    return search(_index(spark, sf_dir), '"spark join" merge', k=10)
+    return search_blockmax(_index(spark, sf_dir), '"spark join" merge', k=10)
 
 
 def _q_topk_must(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 dismax `+` operator: required clause (Lucene MUST) — docs
     lacking 'spark' never match, 'join' stays optional scoring."""
-    return search(_index(spark, sf_dir), "+spark join", k=10)
+    return search_blockmax(_index(spark, sf_dir), "+spark join", k=10)
 
 
 def _q_topk_prohibit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 dismax `-` operator: prohibited clause (Lucene MUST_NOT) —
     docs containing 'join' are excluded outright."""
-    return search(_index(spark, sf_dir), "spark -join", k=10)
+    return search_blockmax(_index(spark, sf_dir), "spark -join", k=10)
 
 
 def _q_topk_boolean_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9+Q10 composed: required phrase + optional term + prohibited term
     in one dismax query."""
-    return search(_index(spark, sf_dir), '+"spark join" merge -parse', k=10)
+    return search_blockmax(_index(spark, sf_dir), '+"spark join" merge -parse',
+                           k=10)
 
 
 def _q_numfound_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """numFound for a boolean/phrase query (the matched-set count the
     envelope always carries)."""
-    from easy_solr4files_index_spark.operators.query import num_found
-
-    found = num_found(_index(spark, sf_dir), '+"spark join" merge -parse')
+    _, found = search_with_found(_index(spark, sf_dir),
+                                 '+"spark join" merge -parse')
     return spark.createDataFrame([(found,)], "found long")
 
 
 def _q_phrase_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9 over the PHYSICAL index: the positions/ dataset (term-bucket
-    partition-pruned, Lucene .prx analog) scores the phrase; same oracle
-    as the logical path."""
-    from easy_solr4files_index_spark.operators.wand import search_blockmax
-
-    return search_blockmax(_index_physical(spark, sf_dir),
+    """Q9: the positions/ dataset (term-bucket partition-pruned, Lucene
+    .prx analog) scores the phrase."""
+    return search_blockmax(_index(spark, sf_dir),
                            '+"spark join" merge -parse', k=10)
 
 
 def _q_numfound_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """numFound over the PHYSICAL path, single scoring pass
-    (search_with_found — Solr always returns found, Solr.scala:91-103)."""
-    from easy_solr4files_index_spark.operators.wand import search_with_found
-
-    idx = _index_physical(spark, sf_dir)
-    _, found = search_with_found(idx, "spark join")
+    """numFound from a single scoring pass (search_with_found — Solr
+    always returns found, Solr.scala:91-103)."""
+    _, found = search_with_found(_index(spark, sf_dir), "spark join")
     return spark.createDataFrame([(found,)], "found long")
 
 
@@ -390,53 +369,36 @@ def _q_empty_value_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_access_anon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9 anonymous access fq: ANONYMOUS AND available<=NOW
     (SearchServlet.scala:106-111)."""
-    return search(_index(spark, sf_dir), "spark join", k=10,
-                  filters=access_filter(None))
+    return search_blockmax(_index(spark, sf_dir), "spark join", k=10,
+                           filters=access_filter(None))
 
 
 def _q_access_authed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10 authed access fq: cross-key OR (ANONYMOUS OR KNOWN OR
     depositor:user3) AND (available<=NOW OR depositor:user3)
     (SearchServlet.scala:112-118)."""
-    return search(_index(spark, sf_dir), "spark join", k=10,
-                  filters=access_filter("user3"))
+    return search_blockmax(_index(spark, sf_dir), "spark join", k=10,
+                           filters=access_filter("user3"))
 
 
 def _q_ingest_acl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6: search over an index that never ingested accessible_to=NONE
     docs (EasySolr4filesIndexApp.scala:125-144)."""
-    return search(_index_acl(spark, sf_dir), "table scan", k=10)
-
-
-def _index_authjoin(spark: SparkSession, sf_dir: str) -> FtsIndex:
-    """S7+J4: the corpus joined with the auth-info TABLE at ingest
-    (sources/docs_source.auth_info_table + join_auth_info) — the
-    Spark-native form of the reference's per-file auth-info HTTP fetch
-    (AuthorisationComponent.scala:41-51) feeding the accessibility gate
-    and the indexed access fields (FileItem.scala:36-37)."""
-    from easy_solr4files_index_spark.sources.docs_source import (
-        auth_info_table, join_auth_info)
-
-    key = (id(spark), sf_dir, "authjoin")
-    if key not in _INDEX_CACHE:
-        docs = join_auth_info(load_docs(spark, sf_dir, with_acl=False),
-                              auth_info_table(spark, sf_dir))
-        _INDEX_CACHE[key] = build_index(spark, docs)
-    return _INDEX_CACHE[key]
+    return search_blockmax(_index(spark, sf_dir, "acl"), "table scan", k=10)
 
 
 def _q_auth_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 + P10 end-to-end: index over the auth-info JOIN (NONE files
     never ingested), queried with the authed access filter — the joined
     owner/accessibleTo/dateAvailable columns are what the filter reads."""
-    return search(_index_authjoin(spark, sf_dir), "spark join", k=10,
-                  filters=access_filter("user3"))
+    return search_blockmax(_index(spark, sf_dir, "authjoin"), "spark join",
+                           k=10, filters=access_filter("user3"))
 
 
 def _q_topk_nostop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 behavior-compat: empty stopword list (schema.xml:507) makes
     'the' a searchable term."""
-    return search(_index_nostop(spark, sf_dir), "the spark", k=10)
+    return search_blockmax(_index(spark, sf_dir, "nostop"), "the spark", k=10)
 
 
 def _q_path_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,25 +679,13 @@ def _q_mm_extract(spark, sf_dir):
         multimodal.attach_markup_payload(_docs_raw(spark, sf_dir)))
 
 
-def _index_catenate(spark: SparkSession, sf_dir: str) -> FtsIndex:
-    """X4 catenateWords=1 on the DEFAULT Catalyst chain (reference's
-    identifier analyzer emits parts + the catenated word,
-    schema.xml:592): every multi-part word additionally indexes its
-    delimiter-deleted form — e.g. the path word docs/00000007.txt
-    indexes docs, 00000007, txt AND docs00000007txt."""
-    key = (id(spark), sf_dir, "catenate")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_index(
-            spark, load_docs(spark, sf_dir), IndexConfig(catenate_words=True))
-    return _INDEX_CACHE[key]
-
-
 def _q_topk_catenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: a single-token query hits a term that only EXISTS via
     catenation, mixed with a normal term — dl/avgdl/df all shift under
     the catenate chain, so the whole scoring pipeline is re-derived by
     the oracle with the same chain."""
-    return search(_index_catenate(spark, sf_dir), "spark docs00000007txt", k=10)
+    return search_blockmax(_index(spark, sf_dir, "catenate"),
+                           "spark docs00000007txt", k=10)
 
 
 def _q_ann_batch(spark, sf_dir):
@@ -766,7 +716,7 @@ def _q_budgeted_full(spark, sf_dir):
     (budget exhausted mid-plan) is gated in tests/test_query_surface.py."""
     from easy_solr4files_index_spark.operators.wand import search_budgeted
 
-    page, partial = search_budgeted(_index_physical(spark, sf_dir),
+    page, partial = search_budgeted(_index(spark, sf_dir),
                                     "spark join merge", k=10,
                                     time_allowed_ms=1e12)
     assert partial is False
@@ -779,7 +729,7 @@ def _q_envelope(spark, sf_dir):
     91-103, api.yml:172-256) — the whole envelope under the oracle."""
     from easy_solr4files_index_spark.operators.wand import search_envelope_df
 
-    return search_envelope_df(_index_physical(spark, sf_dir),
+    return search_envelope_df(_index(spark, sf_dir),
                               "spark join", k=10)
 
 
@@ -960,7 +910,7 @@ def _q_build_metrics(spark, sf_dir):
     import json
     import os
 
-    idx = _index_physical(spark, sf_dir)
+    idx = _index(spark, sf_dir)
     with open(os.path.join(idx.index_dir, "globals.json")) as fh:
         meta = json.load(fh)
     return (idx.metrics.agg(
@@ -1058,11 +1008,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       dedup_ngram_jaccard                ⊂ dedup_apply (same Jaccard verify)
       scan_bags / meta_typed_id          ⊂ scan_stores (same derivation family;
                                            green r01-r03, pytest-gated)
-      fts_numfound (logical)             ⊂ fts_numfound_physical (same oracle)
-      fts_delete_prefix (logical S12)    ⊂ fts_delete_physical
       meta_vocab_join                    ⊂ meta_vocab_join_abr (adds the twin col)
       fts_topk_synonyms                  ⊂ fts_topk_synonyms_phrase
-      fts_topk_phrase/must/prohibit      ⊂ fts_topk_boolean_mixed (logical path)
+      fts_topk_phrase/must/prohibit      ⊂ fts_topk_boolean_mixed (same
+                                           boolean/phrase scorer)
       fts_topk_access_authed             ⊂ fts_auth_join (same access_filter)
       dedup_minhash_lsh / dedup_simhash  ⊂ dedup_apply / dedup_simhash_cand
       ann_ivf_assign / ann_ivf_topk      ⊂ ann_ivf_mat_topk (materialized IVF)
@@ -1109,8 +1058,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_ngram_jaccard": _q_dedup_jaccard,
         "scan_bags": _q_scan_bags,
         "meta_typed_id": _q_meta_typed_id,
-        "fts_numfound": _q_numfound,
-        "fts_delete_prefix": _q_delete_prefix,
         "meta_vocab_join": _q_meta_vocab_join,
         "fts_topk_synonyms": _q_topk_synonyms,
         "fts_topk_phrase": _q_topk_phrase,
@@ -1142,7 +1089,6 @@ def oracle_sql() -> dict[str, str]:
     # oracle rebuilds tf/df/dl/avgdl under the catenateWords analyzer
     out["fts_topk_catenate"] = osql.bm25_topk_sql(
         tokenize_py("spark docs00000007txt"), k=10, catenate=True)
-    out["fts_numfound"] = osql.numfound_sql(tokenize_py("spark join"))
     out["fts_termstats"] = osql.termstats_sql(["spark", "join", "dup", "customer"])
     out["fts_global_stats"] = osql.global_stats_sql()
     out["fts_build_metrics"] = osql.build_metrics_sql()
@@ -1165,7 +1111,6 @@ def oracle_sql() -> dict[str, str]:
         bench_where="doc_id % 83 = 0", snippet_tokens=15)
     out["fts_doc_stats"] = osql.doc_stats_sql("src3")
     out["fts_sha256"] = osql.sha256_sql()
-    out["fts_delete_prefix"] = osql.delete_prefix_sql("src0")
     out["fts_topk_physical"] = osql.bm25_topk_sql(tokenize_py("spark join merge"), k=10)
     out["fts_cached_topk"] = osql.bm25_topk_sql(tokenize_py("spark join merge"), k=10)
     out["fts_topk_arrow_tok"] = osql.bm25_topk_sql(tokenize_py("table scan"), k=10)

@@ -77,22 +77,13 @@ def cmd_query(args: argparse.Namespace) -> int:
     """One scoring pass returns the page AND numFound — the reference's
     envelope always carries `found` (Solr.scala:91-103, api.yml:181)."""
     from .operators.postings import open_index
-    from .operators.wand import search_with_found
+    from .operators.wand import search_envelope_physical
 
     spark = _spark("fts-query", args.cpus)
     idx = open_index(spark, args.index)
     filters = json.loads(args.filters) if args.filters else None
-    page, found = search_with_found(idx, args.text, k=args.k, skip=args.skip,
-                                    filters=filters)
-    rows = page.collect()
-    print(json.dumps({
-        "summary": {"text": args.text if args.text is not None else "*",
-                    "skip": args.skip, "limit": args.k,
-                    "time_allowed": 5000, "found": found,
-                    "returned": len(rows)},
-        "fileitems": [{"repo": r["repo"], "path": r["path"], "lang": r["lang"],
-                       "score": r["score"]} for r in rows],
-    }))
+    print(search_envelope_physical(idx, args.text, k=args.k, skip=args.skip,
+                                   filters=filters))
     return 0
 
 

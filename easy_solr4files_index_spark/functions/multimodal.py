@@ -478,13 +478,6 @@ FROM m
 # png/jpeg remain behind the documented real_image_decode stub (their
 # codecs genuinely aren't in this container).
 
-def _bmp_dims(doc_id_col):
-    """Deterministic per-doc dimensions, sign-safe (pmod)."""
-    w = F.pmod(doc_id_col, F.lit(13)) + 4
-    h = F.pmod(doc_id_col * 5, F.lit(11)) + 3
-    return w.cast("int"), h.cast("int")
-
-
 def _bmp_bytes(doc_id: int, w: int, h: int) -> bytes:
     """One real 24-bit BMP: pixel (x, y) channel c∈{R,G,B} has value
     (7·doc_id + 3·x + 5·y + 11·c) mod 256 — closed-form, so the DuckDB

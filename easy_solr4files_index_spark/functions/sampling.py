@@ -27,11 +27,24 @@ ids, and skew is bounded by the cap itself (only the first n survive).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .textstats import MD5INT_DUCK, MD5INT_SPARK
 
-_M = 1_000_000  # sampling resolution: keep iff pmod(h, _M) < rate * _M
+_M = 1_000_000  # sampling resolution: keep iff pmod(h, _M) < _cutoff(rate)
+
+
+def _cutoff(rate: float) -> int:
+    """Integer hash cutoff for a keep-rate, computed ONCE in Python and
+    embedded as a literal in both engines' plans — no float arithmetic
+    happens inside either engine. Rounds half up: int() would truncate
+    0.3 * 1e6 to 299999 (a realized rate a hair below nominal), and
+    round() rounds a .5 product to even, so every sampler here uses this
+    one rule — at equal rates hash_sample and domain_mixture keep
+    exactly the same rows."""
+    return int(math.floor(min(1.0, rate) * _M + 0.5))
 
 
 def _hash_col(cols: tuple[str, ...], salt: str) -> Column:
@@ -51,9 +64,7 @@ def hash_sample(docs: DataFrame, rate: float, salt: str = "",
     """Deterministic Bernoulli sample: keep iff
     ``pmod(md5int(cols, salt), 1e6) < rate * 1e6``. Map-only; exactly
     reproducible for a given (data, cols, salt, rate)."""
-    # round, not int: int(0.3 * 1e6) truncates the binary-float product
-    # to 299999 — a realized rate a hair below nominal (ADVICE r4)
-    keep = F.pmod(_hash_col(cols, salt), F.lit(_M)) < round(rate * _M)
+    keep = F.pmod(_hash_col(cols, salt), F.lit(_M)) < _cutoff(rate)
     return docs.filter(keep)
 
 
@@ -61,7 +72,7 @@ def hash_sample_sql(rate: float, salt: str = "",
                     cols: tuple[str, ...] = ("doc_id",),
                     source: str = "documents") -> str:
     return (f"SELECT * FROM {source} "
-            f"WHERE {_hash_sql(cols, salt)} % {_M} < {round(rate * _M)}")
+            f"WHERE {_hash_sql(cols, salt)} % {_M} < {_cutoff(rate)}")
 
 
 def cap_per_key(docs: DataFrame, key: str, n: int,
@@ -90,14 +101,9 @@ WHERE _rn <= {n}
 
 def _mix_cutoffs(rate: float, weights: dict[str, float],
                  default_weight: float) -> tuple[dict[str, int], int]:
-    """Integer per-domain hash cutoffs, computed ONCE in Python and
-    embedded as literals in BOTH engines' plans — no float arithmetic
-    ever happens inside either engine, so there is no cross-engine
-    rounding surface at all."""
-    def cut(w: float) -> int:
-        import math
-        return int(math.floor(min(1.0, rate * w) * _M + 0.5))
-    return ({k: cut(w) for k, w in weights.items()}, cut(default_weight))
+    """Integer per-domain hash cutoffs (see _cutoff)."""
+    return ({k: _cutoff(rate * w) for k, w in weights.items()},
+            _cutoff(rate * default_weight))
 
 
 def domain_mixture(docs: DataFrame, rate: float,

@@ -205,8 +205,15 @@ class SearcherCaches:
         # materialize concurrently (thread-per-dataset, like the
         # build's _run_parallel) so warm-up pays one wall-clock scan
         from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=len(warmed) or 1) as ex:
-            list(ex.map(lambda d: d.count(), warmed))
+        try:
+            with ThreadPoolExecutor(max_workers=len(warmed) or 1) as ex:
+                list(ex.map(lambda d: d.count(), warmed))
+        except BaseException:
+            # a failed warm-up must not strand executor storage: nothing
+            # is recorded in _warmed, so clear() could not release these
+            for df in warmed:
+                df.unpersist()
+            raise
         self._warmed = warmed
 
     def _searcher_key(self) -> tuple:

@@ -13,8 +13,8 @@ escapes every Lucene metacharacter EXCEPT three user-facing operators:
 so ``+"block max" wand -lucene`` is reachable surface of the reference's
 ``GET /filesearch`` endpoint. This module parses exactly that grammar
 into occur-tagged clauses; scoring semantics live in
-operators/query.py (logical) and operators/wand.py
-(_score_boolean_physical, physical).
+operators/wand.py (_score_boolean_physical) and
+operators/query.py (score_phrase, combine_clause_rows).
 
 Parity notes vs Lucene/Solr:
   * odd number of quotes -> all quotes stripped

@@ -1,20 +1,15 @@
-"""Inverted-index build: the Spark-native replacement for what the
-reference delegates to Solr/Lucene (postings, df, doc lengths — implied
-by schema.xml:213,510-526 + BM25 default solrconfig.xml:39).
+"""Index configuration and the analysis pass every index build shares:
+the Spark-native replacement for what the reference delegates to
+Solr/Lucene (postings, df, doc lengths — implied by
+schema.xml:213,510-526 + BM25 default solrconfig.xml:39).
 
-Logical index tables (all derivable, all Catalyst-optimized):
-
-  docs_store(doc_id, repo, path, commit, lang, sha256, dl)
-      — stored fields + per-row content invariant (input_hint: sha256
-        equality vs source) + exact doc length (Lucene quantizes dl to
-        1 byte; we keep it exact, SURVEY.md §2.9 Q4).
-  tf(term, doc_id, tf, dl)
-      — one row per posting. groupBy(term, doc_id) is a partial+final
-        hash aggregate: map-side combine absorbs per-doc repetition, and
-        doc_id spreads hot terms across reducers (no skew at this stage).
-  termstats(term, df)
-      — document frequency per term.
-  scalars N (doc count incl. empty docs) and avgdl (mean dl incl. 0).
+``enrich_docs`` turns docs-with-ids into the stored-fields rows
+(doc_id, repo, path, commit, lang, extras…, sha256, tokens, meta_only,
+dl): stored fields, the per-row content invariant (input_hint: sha256
+equality vs source), the analyzed token stream and the exact doc length
+(Lucene quantizes dl to 1 byte; we keep it exact, SURVEY.md §2.9 Q4).
+operators/postings.write_index writes them as ``docs_store`` and derives
+positions, postings blocks and termstats from the stored tokens.
 
 The searchable token stream is tokenize(content) ++ tokenize(path) — the
 reference copies the file path into the catch-all ``text`` field
@@ -24,14 +19,12 @@ our metadata columns likewise stay plain filterable columns.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark import StorageLevel
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.tokenizer import (LUCENE_STOPWORDS, make_tokenize_udf,
                                    tokenize_expr, tokenize_expr_catenate)
-from .docids import assign_doc_ids
 
 
 @dataclass(frozen=True)
@@ -55,30 +48,6 @@ class IndexConfig:
                                        # queries); Lucene always indexes
                                        # positions for text fields — disable
                                        # only for term-only workloads
-
-
-@dataclass
-class FtsIndex:
-    spark: SparkSession
-    config: IndexConfig
-    docs_store: DataFrame
-    tf: DataFrame
-    termstats: DataFrame
-    n_docs: int
-    avgdl: float
-    postings: DataFrame | None = None  # physical encoded blocks (see postings.py)
-    cached: DataFrame | None = None    # the persisted enriched docs (tokens+dl)
-    positions: DataFrame | None = None  # (term, doc_id, dl, positions) — lazy
-                                        # plan, executed only by phrase queries
-
-    def unpersist(self) -> None:
-        for df in (self.docs_store, self.tf, self.cached):
-            if df is None:
-                continue
-            try:
-                df.unpersist()
-            except Exception:
-                pass
 
 
 def _searchable_text(config: IndexConfig):
@@ -131,45 +100,3 @@ def enrich_docs(docs_with_ids: DataFrame, config: IndexConfig) -> DataFrame:
         # filter on it like any metadata column.
         (F.coalesce(F.trim(F.col("content")), F.lit("")) == "").alias("meta_only"),
     ).withColumn("dl", F.size("tokens").cast("long"))
-
-
-def build_index(spark: SparkSession, docs: DataFrame, config: IndexConfig | None = None,
-                persist: bool = True) -> FtsIndex:
-    config = config or IndexConfig()
-    with_ids = assign_doc_ids(docs)
-
-    enriched = enrich_docs(with_ids, config)
-    if persist:
-        # single cache holds tokens; docs_store/tf are cheap projections off it
-        enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-
-    docs_store = enriched.drop("tokens")
-    tf = (
-        enriched.select("doc_id", "dl", F.explode("tokens").alias("term"))
-        .groupBy("term", "doc_id", "dl")            # dl functionally dep. on doc_id — free key
-        .agg(F.count("*").alias("tf"))
-    )
-    if persist:
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-
-    termstats = tf.groupBy("term").agg(F.count("*").alias("df"))
-
-    # positional postings for phrase queries (operators/dismax.py) — a
-    # pure plan over the same enriched cache, so it costs nothing unless
-    # a phrase clause actually runs. Positions index the stopword-
-    # filtered stream (see dismax.py parity notes). sort_array: the
-    # collect_list order after a shuffle is not contractual.
-    positions = (
-        enriched.select("doc_id", "dl", F.posexplode("tokens").alias("pos", "term"))
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-    )
-
-    g = docs_store.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n_docs = g["n"] or 0
-    avgdl = float(g["avgdl"] or 0.0)
-    return FtsIndex(spark=spark, config=config, docs_store=docs_store, tf=tf,
-                    termstats=termstats, n_docs=n_docs, avgdl=avgdl,
-                    cached=enriched if persist else None, positions=positions)

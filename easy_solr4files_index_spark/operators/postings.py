@@ -56,7 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .docids import assign_doc_ids
-from .index_build import FtsIndex, IndexConfig, enrich_docs
+from .index_build import IndexConfig, enrich_docs
 
 POSTINGS_SCHEMA = ("term string, bucket long, n int, doc_ids binary, tfs binary, "
                    "dls binary, max_tfnorm double, tbucket int")

@@ -1,6 +1,8 @@
-"""Query-side: dismax-style free-text BM25 top-k + filter queries +
-pagination + match-all — the semantics of ``GET /filesearch``
-(reference: SearchServlet.scala:74-104) executed Spark-native.
+"""Query-side building blocks shared by the physical index's search
+paths (operators/wand.py): fq predicates and their validation, the BM25
+idf expression, the SQL-string plan fragments, phrase scoring and the
+boolean clause combiner. Together they carry the semantics of
+``GET /filesearch`` (reference: SearchServlet.scala:74-104).
 
 Semantics preserved from the reference:
   * free text is analyzed with the SAME chain as indexing and the terms
@@ -24,14 +26,9 @@ BM25 (Lucene ≥6 defaults, k1=1.2 b=0.75 — solrconfig.xml:39, no
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.tokenizer import tokenize_py
-from .index_build import FtsIndex
-
-RESULT_COLS = ["repo", "path", "lang", "score"]
 
 
 class QueryParseError(ValueError):
@@ -135,48 +132,13 @@ def access_filter(user: str | None = None, now: str | None = None):
                    ["=", "depositor", user]]]
 
 
-def score_terms(index: FtsIndex, terms: list[str],
-                fq_ids: DataFrame | None = None) -> DataFrame:
-    """(doc_id, score) for every doc matching ≥1 query term — exact BM25.
-
-    Plan shape (scale notes): the term filter prunes the tf scan
-    (predicate pushdown on the physical index's term-bucket partitioning
-    — see postings.py); termstats for ≤ a handful of query terms is tiny
-    ⇒ broadcast join; groupBy(doc_id) is a partial+final hash agg whose
-    keys are near-unique ⇒ no skew. ``fq_ids`` (doc_id-only) pushes the
-    filter-query semijoin BELOW the aggregate: with a selective fq the
-    sum never runs for excluded docs, and the semijoin shuffles on the
-    aggregate's own key so the exchange is reused.
-    """
-    k1, b = index.config.k1, index.config.b
-    uniq = sorted(set(terms))
-    ts = index.termstats.filter(F.col("term").isin(uniq)).withColumn("idf", _idf_expr(index.n_docs))
-    cand = index.tf.filter(F.col("term").isin(uniq)).join(F.broadcast(ts), "term")
-    if fq_ids is not None:
-        cand = cand.join(fq_ids, "doc_id", "left_semi")
-    avgdl = index.avgdl if index.avgdl > 0 else 1.0
-    contrib = (
-        F.col("idf")
-        * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    )
-    return cand.groupBy("doc_id").agg(F.sum(contrib).alias("score"))
-
-
-def _tfnorm(tf_col: F.Column, dl_col: F.Column, k1: float, b: float,
-            avgdl: float) -> F.Column:
-    avgdl = avgdl if avgdl > 0 else 1.0
-    return (tf_col * (k1 + 1.0)
-            / (tf_col + k1 * (1.0 - b + b * dl_col / F.lit(avgdl))))
-
-
-# --- SQL-string twins of the hot query-plan builders -----------------------
+# --- SQL-string plan fragments for the hot query paths --------------------
 # Building a Column tree call-by-call costs one Py4J socket round-trip per
 # node (~0.2-1 ms each); on the latency-sensitive query path that adds up
 # to >100 ms of pure driver-side plan construction per query. These
-# helpers emit ONE SQL string parsed JVM-side by a single F.expr call —
-# the parsed plan is the same tree, so scores stay bit-identical (the
-# expression structure mirrors the Column builders above exactly).
+# helpers emit ONE SQL string parsed JVM-side by a single F.expr call.
+# The association order of every arithmetic expression matches the numpy
+# kernels in operators/wand.py and the oracle (oracle/bm25_oracle.py).
 
 def _dlit(v: float) -> str:
     """Exact double literal for Spark SQL. A bare float literal parses as
@@ -190,14 +152,17 @@ def _sstr(s: str) -> str:
 
 
 def _tfnorm_sql(tf: str, dl: str, k1: float, b: float, avgdl: float) -> str:
-    """SQL twin of _tfnorm — same association order, same constants."""
+    """BM25 tf normalization tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))."""
     avgdl = avgdl if avgdl > 0 else 1.0
     return (f"({tf} * {_dlit(k1 + 1.0)} / ({tf} + {_dlit(k1)} * "
             f"({_dlit(1.0 - b)} + {_dlit(b)} * {dl} / {_dlit(avgdl)})))")
 
 
 def _phrase_tf_sql(pmap: str, phrase: tuple[str, ...]) -> str:
-    """SQL twin of _phrase_tf (same higher-order filter expression)."""
+    """Exact phrase frequency from per-term position arrays: the count of
+    start positions x (of the first term) such that term_i sits at x+i
+    for every following i — Lucene's ExactPhraseMatcher, as one Catalyst
+    higher-order filter expression (no Python)."""
     def arr(t: str) -> str:
         return (f"coalesce(element_at({pmap}, {_sstr(t)}), "
                 f"CAST(array() AS array<int>))")
@@ -217,45 +182,23 @@ def _term_case_sql(mapping: dict[str, str], else_sql: str) -> str:
     return f"CASE term {whens} ELSE {else_sql} END"
 
 
-def _phrase_tf(pmap: F.Column, phrase: tuple[str, ...]) -> F.Column:
-    """Exact phrase frequency from per-term position arrays: the count of
-    start positions x (of the first term) such that term_i sits at x+i
-    for every following i — Lucene's ExactPhraseMatcher, as one Catalyst
-    array expression (no Python)."""
-    def ok(x):
-        cond = F.lit(True)
-        for i, t in enumerate(phrase[1:], start=1):
-            cond = cond & F.array_contains(
-                F.coalesce(F.element_at(pmap, F.lit(t)), F.array().cast("array<int>")),
-                x + i)
-        return cond
-    first = F.coalesce(F.element_at(pmap, F.lit(phrase[0])),
-                       F.array().cast("array<int>"))
-    return F.size(F.filter(first, ok))
-
-
-def score_phrase(positions: DataFrame, termstats_idf: DataFrame,
-                 phrase: tuple[str, ...], k1: float, b: float,
-                 avgdl: float, phidf: float | None = None) -> DataFrame:
+def score_phrase(positions: DataFrame, phrase: tuple[str, ...], k1: float,
+                 b: float, avgdl: float, phidf: float) -> DataFrame:
     """(doc_id, contrib) for docs containing the exact phrase.
 
     Scoring is Lucene's PhraseQuery under BM25Similarity: tf = phrase
-    frequency; idf = Σ over the phrase's term SEQUENCE of idf(term)
-    (BM25Similarity.idfExplain over the termStats array — duplicates in
-    the phrase count twice).
+    frequency; idf = ``phidf`` = Σ over the phrase's term SEQUENCE of
+    idf(term) (BM25Similarity.idfExplain over the termStats array —
+    duplicates in the phrase count twice), resolved driver-side by the
+    caller so the plan multiplies a literal (no aggregate + broadcast
+    stages).
 
     Plan shape: the positions scan is pruned to the phrase's unique
     terms (term-bucket partition pruning on the physical layout); one
-    groupBy(doc_id) assembles the per-doc term→positions map, the
+    groupBy(doc_id) assembles the per-doc term→positions map, and the
     candidate cut ``n_terms == |unique|`` runs before the (Catalyst-only)
-    position-intersection, and the summed idf joins in as a broadcast
-    1-row aggregate — no driver round-trip."""
-    from collections import Counter
-
+    position-intersection."""
     uniq = sorted(set(phrase))
-    mult = Counter(phrase)
-    # one parsed expression per plan node (see the _tfnorm_sql comment):
-    # the SQL strings mirror the Column builders exactly
     per_doc = (
         positions.filter(F.col("term").isin(uniq))
         .groupBy("doc_id", "dl")
@@ -266,83 +209,16 @@ def score_phrase(positions: DataFrame, termstats_idf: DataFrame,
         .withColumn("ptf", F.expr(_phrase_tf_sql("pmap", phrase)))
         .filter("ptf > 0")
     )
-    if phidf is not None:
-        # caller already resolved Σ idf(term) driver-side (the physical
-        # path collects the pruned per-term idf rows once per query) —
-        # a literal multiply, no aggregate + broadcast-exchange stages
-        contrib = (f"{_dlit(float(phidf))} * "
-                   + _tfnorm_sql("ptf", "dl", k1, b, avgdl))
-        return per_doc.selectExpr("doc_id", f"{contrib} AS contrib")
-    mult_expr = F.lit(None).cast("double")
-    for t, c in mult.items():
-        mult_expr = F.when(F.col("term") == t, float(c)).otherwise(mult_expr)
-    phidf_df = (termstats_idf.filter(F.col("term").isin(uniq))
-                .agg(F.sum(F.col("idf") * mult_expr).alias("phidf")))
-    return (per_doc.crossJoin(F.broadcast(phidf_df))
-            .select("doc_id",
-                    (F.col("phidf") * _tfnorm(F.col("ptf"), F.col("dl"),
-                                              k1, b, avgdl)).alias("contrib")))
-
-
-def score_boolean(index: FtsIndex, clauses, fq_ids: DataFrame | None = None,
-                  ) -> DataFrame:
-    """(doc_id, score) for a dismax boolean query (operators/dismax.py):
-    SHOULD / MUST (+) / MUST_NOT (-) clauses, term or phrase.
-
-    Lucene BooleanQuery semantics: a doc matches iff it satisfies every
-    MUST clause, matches no MUST_NOT clause, and — when there is no MUST
-    clause — matches at least one SHOULD clause. Score = Σ BM25
-    contributions of the matched MUST+SHOULD clauses.
-
-    Plan shape: ONE union of per-clause (doc_id, cid, kind, contrib)
-    streams feeding ONE hash aggregate on doc_id that computes the score
-    and the match predicate together (conditional aggregates) — clause
-    count never multiplies the shuffle count. A pure-negative query
-    returns empty (Lucene's MatchNoDocsQuery)."""
-    from .dismax import MUST, MUST_NOT, SHOULD  # noqa: F401 (kind literals)
-
-    k1, b = index.config.k1, index.config.b
-    avgdl = index.avgdl if index.avgdl > 0 else 1.0
-    n_must = sum(1 for c in clauses if c.occur == "must")
-    n_should = sum(1 for c in clauses if c.occur == "should")
-    if n_should + n_must == 0:
-        return (index.docs_store.select("doc_id")
-                .withColumn("score", F.lit(0.0)).limit(0))
-
-    term_clauses = [(i, c) for i, c in enumerate(clauses) if not c.is_phrase]
-    phrase_clauses = [(i, c) for i, c in enumerate(clauses) if c.is_phrase]
-    all_terms = sorted({t for _, c in term_clauses for t in c.terms}
-                       | {t for _, c in phrase_clauses for t in c.terms})
-    ts = (index.termstats.filter(F.col("term").isin(all_terms))
-          .withColumn("idf", _idf_expr(index.n_docs)))
-
-    parts: list[DataFrame] = []
-    if term_clauses:
-        cmap = index.spark.createDataFrame(
-            [(c.terms[0], i, c.occur) for i, c in term_clauses],
-            "term string, cid int, kind string")
-        cand = (index.tf
-                .filter(F.col("term").isin(sorted({c.terms[0] for _, c in term_clauses})))
-                .join(F.broadcast(ts.select("term", "idf")), "term")
-                .join(F.broadcast(cmap), "term"))
-        parts.append(cand.select(
-            "doc_id", "cid", "kind",
-            (F.col("idf") * _tfnorm(F.col("tf"), F.col("dl"), k1, b, avgdl)
-             ).alias("contrib")))
-    for i, c in phrase_clauses:
-        ph = score_phrase(index.positions, ts, c.terms, k1, b, avgdl)
-        parts.append(ph.select("doc_id", F.lit(i).alias("cid"),
-                               F.lit(c.occur).alias("kind"), "contrib"))
-
-    return combine_clause_rows(parts, n_must, fq_ids)
+    contrib = (f"{_dlit(float(phidf))} * "
+               + _tfnorm_sql("ptf", "dl", k1, b, avgdl))
+    return per_doc.selectExpr("doc_id", f"{contrib} AS contrib")
 
 
 def combine_clause_rows(parts: list[DataFrame], n_must: int,
                         fq_ids: DataFrame | None = None) -> DataFrame:
     """Union per-clause (doc_id, cid, kind, contrib) streams and apply the
-    Lucene BooleanQuery match predicate + score in ONE hash aggregate —
-    shared by the logical (score_boolean) and physical
-    (wand.search path) executions."""
+    Lucene BooleanQuery match predicate + score in ONE hash aggregate
+    (the boolean/phrase path of operators/wand.py)."""
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
@@ -367,30 +243,6 @@ def combine_clause_rows(parts: list[DataFrame], n_must: int,
     return matched.select("doc_id", "score")
 
 
-def expand_synonyms(terms: list[str],
-                    synonyms: dict[str, list[str]] | None,
-                    stopwords=None) -> list[str]:
-    """Query-side synonym expansion (X5, SynonymGraphFilter on the query
-    analyzer only — schema.xml:520-525). The reference ships an empty
-    synonyms.txt, so the default (None/{}) is the identity; a populated
-    map ORs each term's synonyms into the dismax disjunction.
-
-    Multi-word entries (SynonymGraphFilter's ``a => b c`` form) are run
-    through the SAME analyzer chain as the query text — each synonym
-    string tokenizes to 1..n terms and ALL of them join the disjunction
-    (exact phrase positions don't matter here: the reference's handler
-    is a boost-less pure-OR dismax, SearchServlet.scala:79-88)."""
-    if not synonyms:
-        return terms
-    out = list(terms)
-    for t in terms:
-        for s in synonyms.get(t, ()):
-            toks = (tokenize_py(s, stopwords) if stopwords is not None
-                    else tokenize_py(s))
-            out.extend(toks)
-    return out
-
-
 def _expand_clause_synonyms(clauses, synonyms, stopwords):
     """Synonym expansion in boolean mode: each single-term SHOULD clause
     ORs its synonyms in as extra SHOULD clauses (same analyzer chain,
@@ -411,152 +263,3 @@ def _expand_clause_synonyms(clauses, synonyms, stopwords):
                     seen.add(key)
                     out.append(Clause((t,), SHOULD))
     return out
-
-
-def _scores_for(index: FtsIndex, text: str, synonyms,
-                fq_ids: DataFrame | None) -> DataFrame | None:
-    """Route a text query to the right scorer: the round-1/2 OR fast
-    path for a plain bag of terms (identical plan to before), the
-    boolean/phrase scorer otherwise. None = provably empty (no positive
-    clause survives analysis)."""
-    from .dismax import is_plain_or, parse_dismax, plain_terms
-
-    clauses = parse_dismax(text, index.config.stopwords)
-    if is_plain_or(clauses):
-        terms = expand_synonyms([c.terms[0] for c in clauses],
-                                synonyms, index.config.stopwords)
-        if not terms:
-            return None
-        return score_terms(index, terms, fq_ids=fq_ids)
-    clauses = _expand_clause_synonyms(clauses, synonyms, index.config.stopwords)
-    if not any(c.occur in ("should", "must") for c in clauses):
-        return None  # pure-negative query: MatchNoDocsQuery
-    return score_boolean(index, clauses, fq_ids=fq_ids)
-
-
-def search(index: FtsIndex, text: str | None = None, k: int = 10, skip: int = 0,
-           filters: dict[str, list[str]] | None = None,
-           round_score: int | None = 4,
-           synonyms: dict[str, list[str]] | None = None) -> DataFrame:
-    """Top-k result page as a DataFrame of RESULT_COLS (+ doc_id)."""
-    # param validation mirrors SearchServlet.scala:76-77 (invalid -> defaults)
-    k = k if isinstance(k, int) and k >= 1 else 10
-    skip = skip if isinstance(skip, int) and skip >= 0 else 0
-
-    validate_filters(filters, index.docs_store.columns)
-    fexpr = _filters_expr(filters)
-    store = index.docs_store.filter(fexpr)
-
-    if text is None:
-        # match-all *:* (SearchServlet.scala:80): constant score, docID order
-        page = (
-            store.orderBy(F.col("doc_id").asc())
-            .offset(skip).limit(k)
-            .withColumn("score", F.lit(1.0))
-        )
-        return page.select("doc_id", *RESULT_COLS)
-
-    # fq semantics = semijoin on ids BELOW the scoring aggregate
-    # (non-scoring filters, like Solr fq — see score_terms); the cut runs
-    # on the narrow (doc_id, score) stream (TakeOrderedAndProject — no
-    # full-store shuffle), and only the k winners are joined back for
-    # stored fields (tiny side broadcast).
-    scores = _scores_for(index, text, synonyms,
-                         fq_ids=store.select("doc_id") if filters else None)
-    if scores is None:
-        # no positive clause survives analysis ⇒ empty (dismax no-clause)
-        return (index.docs_store.withColumn("score", F.lit(0.0))
-                .select("doc_id", *RESULT_COLS).limit(0))
-    score_col = F.round(F.col("score"), round_score) if round_score is not None else F.col("score")
-    page = F.broadcast(
-        scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .offset(skip).limit(k)
-        .select("doc_id", score_col.alias("score")))
-    return (
-        page.join(index.docs_store.select("doc_id", "repo", "path", "lang"), "doc_id")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .select("doc_id", "repo", "path", "lang", "score")
-    )
-
-
-def num_found(index: FtsIndex, text: str | None = None,
-              filters: dict[str, list[str]] | None = None,
-              synonyms: dict[str, list[str]] | None = None) -> int:
-    """Exact total hit count (Solr numFound, Solr.scala:92-99).
-
-    Takes the SAME synonyms map as search: Solr's numFound is the count
-    of the very query that produced the page, so a synonym-expanded
-    search paired with a synonym-blind count could report
-    found < len(returned)."""
-    from .dismax import is_plain_or, parse_dismax
-
-    store = index.docs_store.filter(_filters_expr(filters))
-    if text is None:
-        return store.count()
-    clauses = parse_dismax(text, index.config.stopwords)
-    if is_plain_or(clauses):
-        terms = expand_synonyms([c.terms[0] for c in clauses],
-                                synonyms, index.config.stopwords)
-        if not terms:
-            return 0
-        matched = (index.tf.filter(F.col("term").isin(sorted(set(terms))))
-                   .select("doc_id").distinct())
-        return matched.join(store, "doc_id").count()
-    scores = _scores_for(index, text, synonyms,
-                         fq_ids=store.select("doc_id") if filters else None)
-    return scores.count() if scores is not None else 0
-
-
-def search_envelope(index: FtsIndex, text: str | None = None, k: int = 10, skip: int = 0,
-                    filters: dict[str, list[str]] | None = None,
-                    synonyms: dict[str, list[str]] | None = None) -> str:
-    """JSON envelope shaped like the reference response
-    (Solr.scala:91-103,173-181; docs/api/api.yml:172-256).
-
-    Single scoring pass (round 2 ran search + num_found as two): the
-    narrow (doc_id, score) stream is persisted once; the page is a
-    TakeOrdered over it and ``found`` is its count — exactly how Solr
-    returns the page and numFound from one query execution."""
-    k = k if isinstance(k, int) and k >= 1 else 10
-    skip = skip if isinstance(skip, int) and skip >= 0 else 0
-    validate_filters(filters, index.docs_store.columns)
-    store = index.docs_store.filter(_filters_expr(filters))
-
-    if text is None:
-        found = store.count()
-        rows = (store.orderBy(F.col("doc_id").asc()).offset(skip).limit(k)
-                .select("repo", "path", "lang").collect())
-    else:
-        scores = _scores_for(index, text, synonyms,
-                             fq_ids=store.select("doc_id") if filters else None)
-        if scores is None:
-            rows, found = [], 0
-        else:
-            scores = scores.persist()
-            try:
-                found = scores.count()
-                page = F.broadcast(
-                    scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                    .offset(skip).limit(k)
-                    .select("doc_id", F.round("score", 4).alias("score")))
-                rows = (page.join(index.docs_store
-                                  .select("doc_id", "repo", "path", "lang"),
-                                  "doc_id")
-                        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                        .collect())
-            finally:
-                scores.unpersist()
-    items = [
-        {"repo": r["repo"], "path": r["path"], "lang": r["lang"],
-         "score": r["score"] if text is not None else 1.0}
-        for r in rows
-    ]
-    return json.dumps({
-        "summary": {
-            "text": text if text is not None else "*",
-            "skip": skip, "limit": k,
-            "time_allowed": 5000,  # echoed like Solr.scala:97 (pinned)
-            "found": found, "returned": len(items),
-        },
-        "fileitems": items,
-    })

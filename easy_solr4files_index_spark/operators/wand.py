@@ -22,21 +22,22 @@ is BUCKET-LEVEL block-max pruning:
 Decoding + scoring is a vectorized Arrow kernel (mapInPandas): each
 block decodes to numpy arrays and emits (doc_id, contrib) batches; the
 per-doc sum is a Catalyst hash aggregate. Correctness gate:
-tests/test_physical_index.py asserts rank-identity vs the logical path
-and the numpy oracle (WAND top-k == naive top-k, SURVEY.md §5.2.4).
+tests/test_physical_index.py asserts rank-identity vs the numpy oracle
+(oracle/bm25_oracle.py) for the pruned and the exhaustive plan (WAND
+top-k == naive top-k, SURVEY.md §5.2.4).
 """
 
 from __future__ import annotations
 
+import json
 import os
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.codec import varbyte_decode
-from ..functions.tokenizer import tokenize_py
 from ..functions.xxhash import term_bucket
 from .dismax import is_plain_or, parse_dismax, plain_terms
 from .postings import PhysicalIndex
@@ -174,6 +175,7 @@ _FETCH_BY_ID_BYTES = int(os.environ.get("SPARK_FTS_FETCH_BY_ID_BYTES",
 # _blockmax).
 _PRUNE_MIN_BUCKET_FACTOR = int(os.environ.get("SPARK_FTS_PRUNE_FACTOR", "4"))
 
+_PAGE_COLS = ("doc_id", "repo", "path", "lang", "score")
 _PAGE_SCHEMA = "doc_id long, repo string, path string, lang string, score double"
 
 
@@ -182,7 +184,7 @@ def _stored_fields_page(index: PhysicalIndex, page_narrow: DataFrame) -> DataFra
     fields, ordered (score desc, doc_id asc). See _FETCH_BY_ID_BYTES for
     the two physical strategies."""
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    cols = ["doc_id", "repo", "path", "lang", "score"]
+    cols = list(_PAGE_COLS)
     if index.docs_store_bytes < _FETCH_BY_ID_BYTES:
         return (F.broadcast(page_narrow)
                 .join(index.docs_store.select("doc_id", "repo", "path", "lang"),
@@ -306,12 +308,96 @@ def _score_boolean_physical(index: PhysicalIndex, clauses,
         for i, c in phrase_clauses:
             # Lucene PhraseQuery idf: Σ over the term SEQUENCE (dups count)
             phidf = sum(idf_map.get(t, 0.0) for t in c.terms)
-            ph = score_phrase(pos, None, c.terms, cfg.k1, cfg.b,
-                              index.avgdl, phidf=phidf)
+            ph = score_phrase(pos, c.terms, cfg.k1, cfg.b, index.avgdl,
+                              phidf)
             from .query import _sstr as _q
             parts.append(ph.selectExpr("doc_id", f"{i} AS cid",
                                        f"{_q(c.occur)} AS kind", "contrib"))
     return combine_clause_rows(parts, n_must, fq_ids)
+
+
+class _Query(NamedTuple):
+    """A search request after the prologue every search path shares."""
+    k: int
+    skip: int
+    store: DataFrame            # docs_store under the fq
+    kind: str                   # "all" | "none" | "or" | "bool"
+    clauses: list
+    terms: list[str]            # the plain-OR terms (kind "or")
+    fq_ids: DataFrame | None    # doc_id-only fq semijoin input
+
+
+def _prepare(index: PhysicalIndex, text: str | None, k: int, skip: int,
+             filters, synonyms, fq_docset: DataFrame | None) -> _Query:
+    """The shared prologue: invalid k/skip default to 10/0 like
+    SearchServlet.scala:76-77, the fq is validated before any Spark job,
+    and the text is parsed (dismax + synonym expansion) and routed.
+    ``kind`` is "all" for match-all (no text), "or" for a plain bag of
+    terms (the block-max path), "bool" for +/-/phrase clauses, and "none"
+    when the query is provably empty: no term survives analysis, or no
+    positive clause is left (Lucene's MatchNoDocsQuery).
+
+    fq pushdown: ``fq_ids``, the doc_id-only filtered-store projection,
+    semijoins the DECODED posting stream before the per-doc aggregate
+    (_score_blocks), so scores are never computed for docs the fq
+    excludes. A filterCache hit (operators/caches.py) substitutes its
+    persisted DocSet (``fq_docset``)."""
+    cfg = index.config
+    k = k if isinstance(k, int) and k >= 1 else 10
+    skip = skip if isinstance(skip, int) and skip >= 0 else 0
+    validate_filters(filters, index.docs_store.columns)
+    store = index.docs_store.filter(_filters_expr(filters))
+    if text is None:
+        return _Query(k, skip, store, "all", [], [], None)
+    clauses = _expand_clause_synonyms(parse_dismax(text, cfg.stopwords),
+                                      synonyms, cfg.stopwords)
+    terms = sorted(set(plain_terms(clauses)))
+    if is_plain_or(clauses):
+        kind = "or" if terms else "none"
+    elif any(c.occur in ("should", "must") for c in clauses):
+        kind = "bool"
+    else:
+        kind = "none"
+    if fq_docset is not None:
+        fq_ids = fq_docset
+    else:
+        fq_ids = store.select("doc_id") if filters else None
+    return _Query(k, skip, store, kind, clauses, terms, fq_ids)
+
+
+def _empty_page(index: PhysicalIndex) -> DataFrame:
+    return (index.docs_store.withColumn("score", F.lit(0.0))
+            .select(*_PAGE_COLS).limit(0))
+
+
+def _matchall_page(q: _Query) -> DataFrame:
+    """match-all *:* (SearchServlet.scala:80): constant score, docID order."""
+    return (q.store.orderBy(F.col("doc_id").asc()).offset(q.skip).limit(q.k)
+            .withColumn("score", F.lit(1.0)).select(*_PAGE_COLS))
+
+
+def _topk_page(index: PhysicalIndex, scored: DataFrame, q: _Query,
+               round_score: int | None) -> DataFrame:
+    """Cut FIRST on the narrow (doc_id, score) stream (TakeOrdered — no
+    global shuffle), then join stored fields only for the k winners
+    (_stored_fields_page). The fq was already applied below the
+    aggregate (fq_ids)."""
+    sc = (F.round(F.col("score"), round_score) if round_score is not None
+          else F.col("score"))
+    page = (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .offset(q.skip).limit(q.k)
+            .select("doc_id", sc.alias("score")))
+    return _stored_fields_page(index, page)
+
+
+def _score_or(index: PhysicalIndex, blocks: DataFrame, q: _Query) -> DataFrame:
+    """(doc_id, score) of a plain-OR query over ``blocks``. With one
+    query term a doc appears in exactly one block, so the per-doc sum is
+    skipped even if the term turns out to have no postings."""
+    cfg = index.config
+    return _score_blocks(blocks, cfg.k1, cfg.b, index.avgdl,
+                         single_term=len(q.terms) == 1,
+                         tombstones=index.tombstones, fq_ids=q.fq_ids)
 
 
 def search_blockmax(index: PhysicalIndex, text: str | None = None, k: int = 10,
@@ -319,8 +405,8 @@ def search_blockmax(index: PhysicalIndex, text: str | None = None, k: int = 10,
                     round_score: int | None = 4, prune: bool | None = None,
                     synonyms: dict[str, list[str]] | None = None,
                     fq_docset: DataFrame | None = None) -> DataFrame:
-    """Top-k page over the physical index; result schema matches
-    operators.query.search (doc_id, repo, path, lang, score).
+    """Top-k page over the physical index as a DataFrame of (doc_id,
+    repo, path, lang, score), ordered score desc then doc_id asc.
 
     ``prune`` is tri-state: ``None`` (default) lets the measured cutover
     heuristic pick between the one-job exhaustive plan and the two-phase
@@ -366,63 +452,21 @@ def _blockmax(index: PhysicalIndex, text: str | None, k: int, skip: int,
     import time as _time
 
     t_start = _time.perf_counter()
-    cfg = index.config
-    k = k if isinstance(k, int) and k >= 1 else 10
-    skip = skip if isinstance(skip, int) and skip >= 0 else 0
-    validate_filters(filters, index.docs_store.columns)
-    store = index.docs_store.filter(_filters_expr(filters))
-
-    if text is None:
-        return (store.orderBy(F.col("doc_id").asc()).offset(skip).limit(k)
-                .withColumn("score", F.lit(1.0))
-                .select("doc_id", "repo", "path", "lang", "score")), False
-
-    clauses = _expand_clause_synonyms(parse_dismax(text, cfg.stopwords),
-                                      synonyms, cfg.stopwords)
-    boolean = not is_plain_or(clauses)
-    terms = sorted(set(plain_terms(clauses)))
-    if not boolean and not terms:
-        return (index.docs_store.withColumn("score", F.lit(0.0))
-                .select("doc_id", "repo", "path", "lang", "score").limit(0)), False
-
-    # fq pushdown: the doc_id-only filtered-store projection semijoins the
-    # DECODED posting stream before the per-doc aggregate (_score_blocks) —
-    # scores are never computed for docs the fq excludes. A filterCache
-    # hit (operators/caches.py) substitutes its persisted DocSet here.
-    if fq_docset is not None:
-        fq_ids = fq_docset
-    else:
-        fq_ids = store.select("doc_id") if filters else None
-
-    def topk(scored: DataFrame) -> DataFrame:
-        # cut FIRST on the narrow (doc_id, score) stream (TakeOrdered —
-        # no global shuffle), join stored fields only for the k winners
-        # (_stored_fields_page: broadcast join vs pushed-IN fetch by
-        # store size). fq was already applied below the aggregate (fq_ids).
-        sc = F.round(F.col("score"), round_score) if round_score is not None else F.col("score")
-        page = (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .offset(skip).limit(k)
-                .select("doc_id", sc.alias("score")))
-        return _stored_fields_page(index, page)
-
-    if boolean:
+    q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
+    if q.kind == "all":
+        return _matchall_page(q), False
+    if q.kind == "none":
+        return _empty_page(index), False
+    if q.kind == "bool":
         # +/-/phrase clauses: exact boolean scoring (block-max upper
         # bounds don't survive MUST_NOT or positional predicates — Lucene
         # likewise disables WAND there); scans stay term-pruned.
-        if not any(c.occur in ("should", "must") for c in clauses):
-            return (index.docs_store.withColumn("score", F.lit(0.0))
-                    .select("doc_id", "repo", "path", "lang", "score")
-                    .limit(0)), False
-        return topk(_score_boolean_physical(index, clauses, fq_ids)), False
+        return _topk_page(index, _score_boolean_physical(index, q.clauses,
+                                                         q.fq_ids),
+                          q, round_score), False
 
-    blocks = _pruned_blocks(index, terms)
-
-    # with one query term a doc appears in exactly one block — safe to
-    # skip the per-doc sum even if the term turns out to have no postings
-    single = len(terms) == 1
-    tombs = index.tombstones
-
-    p = max(4 * (k + skip), 32)
+    blocks = _pruned_blocks(index, q.terms)
+    p = max(4 * (q.k + q.skip), 32)
     if prune is False or (prune is None and index.n_buckets
                           and index.n_buckets <= p * _PRUNE_MIN_BUCKET_FACTOR):
         # (prune=None = auto; an explicit True/False pins the plan.)
@@ -436,9 +480,8 @@ def _blockmax(index: PhysicalIndex, text: str | None, k: int, skip: int,
         # saving. The factor keeps small/medium indexes on the one-job
         # plan; at cluster scale n_buckets ~ n_docs/span >> 4P and
         # pruning engages exactly where the decode volume dominates.
-        return topk(_score_blocks(blocks, cfg.k1, cfg.b, index.avgdl,
-                                  single_term=single, tombstones=tombs,
-                                  fq_ids=fq_ids)), False
+        return _topk_page(index, _score_or(index, blocks, q), q,
+                          round_score), False
 
     # bucket-level block-max pruning. One job decides coverage AND picks
     # the hot set: TakeOrdered of P+1 bucket bounds — if it returns ≤ P
@@ -454,31 +497,27 @@ def _blockmax(index: PhysicalIndex, text: str | None, k: int, skip: int,
     ub_rows = ub.orderBy(F.col("ub").desc()).limit(p + 1).collect()
     if len(ub_rows) == 0:
         # no query term exists in the index
-        return (index.docs_store.withColumn("score", F.lit(0.0))
-                .select("doc_id", "repo", "path", "lang", "score").limit(0)), False
+        return _empty_page(index), False
     if len(ub_rows) <= p:
-        return topk(_score_blocks(blocks, cfg.k1, cfg.b, index.avgdl,
-                                  single_term=single, tombstones=tombs,
-                                  fq_ids=fq_ids)), False
+        return _topk_page(index, _score_or(index, blocks, q), q,
+                          round_score), False
     hot = [r["bucket"] for r in ub_rows[:p]]
 
     blocks = blocks.persist()
     try:
         # fq is already inside _score_blocks (below the aggregate), so
         # phase A's stream — and hence tau — is fq-consistent by shape
-        phase_a = _score_blocks(blocks.filter(F.col("bucket").isin(hot)),
-                                cfg.k1, cfg.b, index.avgdl, single_term=single,
-                                tombstones=tombs, fq_ids=fq_ids)
+        phase_a = _score_or(index, blocks.filter(F.col("bucket").isin(hot)), q)
         a_rows = (phase_a.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                  .limit(k + skip).collect())
-        tau = a_rows[-1]["score"] if len(a_rows) >= k + skip else float("-inf")
+                  .limit(q.k + q.skip).collect())
+        tau = a_rows[-1]["score"] if len(a_rows) >= q.k + q.skip else float("-inf")
         if (time_allowed_ms is not None
                 and (_time.perf_counter() - t_start) * 1000.0 > time_allowed_ms):
             # budget exhausted before the completion pass (T3): return the
             # exact top-k over the hot subset, flagged partial — phase A's
             # page must be pinned locally before the persisted blocks are
             # released by the finally below
-            rows = topk(phase_a).collect()
+            rows = _topk_page(index, phase_a, q, round_score).collect()
             return index.spark.createDataFrame(rows, _PAGE_SCHEMA), True
         # survivors stay distributed (no driver collect of bucket ids):
         # a doc's postings all live in its one bucket, so phases score
@@ -486,10 +525,9 @@ def _blockmax(index: PhysicalIndex, text: str | None, k: int, skip: int,
         # >= tau, not > tau: a pruned doc whose exact score EQUALS tau but
         # whose doc_id is lower than the (k+skip)-th would win the tie-break
         rest_df = ub.filter(~F.col("bucket").isin(hot) & (F.col("ub") >= tau)).select("bucket")
-        phase_b = _score_blocks(blocks.join(rest_df, "bucket"),
-                                cfg.k1, cfg.b, index.avgdl, single_term=single,
-                                tombstones=tombs, fq_ids=fq_ids)
-        return topk(phase_a.unionByName(phase_b)), False
+        phase_b = _score_or(index, blocks.join(rest_df, "bucket"), q)
+        return _topk_page(index, phase_a.unionByName(phase_b), q,
+                          round_score), False
     finally:
         blocks.unpersist()
 
@@ -503,7 +541,7 @@ def search_with_found(index: PhysicalIndex, text: str | None = None,
                       ) -> tuple[DataFrame, int]:
     """(page, found) from ONE scoring traversal — the reference's envelope
     ALWAYS carries numFound alongside the page (Solr.scala:91-103,
-    api.yml:181), and round 2 had no physical-path count at all.
+    api.yml:181).
 
     Exact total-hit counting must visit every matched posting no matter
     what (the same reason Lucene disables WAND skipping when an exact
@@ -512,57 +550,46 @@ def search_with_found(index: PhysicalIndex, text: str | None = None,
     derives BOTH the page (TakeOrderedAndProject) and the count from it.
     The returned page is a small local DataFrame (k rows) — the persisted
     stream is released before returning."""
-    cfg = index.config
-    k = k if isinstance(k, int) and k >= 1 else 10
-    skip = skip if isinstance(skip, int) and skip >= 0 else 0
-    validate_filters(filters, index.docs_store.columns)
-    store = index.docs_store.filter(_filters_expr(filters))
-    spark = index.spark
-
-    if text is None:
-        found = store.count()
-        page = (store.orderBy(F.col("doc_id").asc()).offset(skip).limit(k)
-                .withColumn("score", F.lit(1.0))
-                .select("doc_id", "repo", "path", "lang", "score"))
-        return page, found
-
-    clauses = _expand_clause_synonyms(parse_dismax(text, cfg.stopwords),
-                                      synonyms, cfg.stopwords)
-    boolean = not is_plain_or(clauses)
-    terms = sorted(set(plain_terms(clauses)))
-    empty = (index.docs_store.withColumn("score", F.lit(0.0))
-             .select("doc_id", "repo", "path", "lang", "score").limit(0))
-    if fq_docset is not None:  # filterCache DocSet (operators/caches.py)
-        fq_ids = fq_docset
+    q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
+    if q.kind == "all":
+        found = q.store.count()
+        return _matchall_page(q), found
+    if q.kind == "none":
+        return _empty_page(index), 0
+    if q.kind == "bool":
+        scored = _score_boolean_physical(index, q.clauses, q.fq_ids)
     else:
-        fq_ids = store.select("doc_id") if filters else None
-    if boolean:
-        if not any(c.occur in ("should", "must") for c in clauses):
-            return empty, 0
-        scored = _score_boolean_physical(index, clauses, fq_ids).persist()
-    else:
-        if not terms:
-            return empty, 0
-        scored = _score_blocks(_pruned_blocks(index, terms),
-                               cfg.k1, cfg.b, index.avgdl,
-                               single_term=len(terms) == 1,
-                               tombstones=index.tombstones,
-                               fq_ids=fq_ids).persist()
+        scored = _score_or(index, _pruned_blocks(index, q.terms), q)
+    scored = scored.persist()
     try:
         found = scored.count()
         if found == 0:
-            return empty, 0
-        sc = (F.round(F.col("score"), round_score)
-              if round_score is not None else F.col("score"))
-        page = (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .offset(skip).limit(k)
-                .select("doc_id", sc.alias("score")))
-        out = _stored_fields_page(index, page)
+            return _empty_page(index), 0
+        out = _topk_page(index, scored, q, round_score)
         # pin the k winners locally so the persisted stream can be released
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema), found
+        return index.spark.createDataFrame(rows, out.schema), found
     finally:
         scored.unpersist()
+
+
+def _envelope(index: PhysicalIndex, text: str | None, k: int, skip: int,
+              filters, synonyms, time_allowed_ms: int) -> tuple[dict, list]:
+    """(summary, page rows) of the reference's response envelope
+    (Solr.scala:91-103,173-181; api.yml:172-256) from one scoring pass
+    (search_with_found). ``time_allowed`` echoes the pinned 5000 ms
+    budget (SearchServlet.scala:97). Exact ``found`` requires visiting
+    every match, so the count pass is never early-terminated (the same
+    trade-off Lucene makes for exact totalHits); the budget is honored
+    by the page-only path (search_budgeted)."""
+    page, found = search_with_found(index, text, k, skip, filters,
+                                    synonyms=synonyms)
+    rows = page.collect()
+    summary = {"text": text if text is not None else "*",
+               "skip": skip, "limit": k,
+               "time_allowed": int(time_allowed_ms),
+               "found": found, "returned": len(rows)}
+    return summary, rows
 
 
 def search_envelope_df(index: PhysicalIndex, text: str | None = None,
@@ -570,19 +597,16 @@ def search_envelope_df(index: PhysicalIndex, text: str | None = None,
                        filters: dict[str, list[str]] | None = None,
                        synonyms: dict[str, list[str]] | None = None,
                        time_allowed_ms: int = 5000) -> DataFrame:
-    """S13 result-sink envelope as a DataFrame — the summary fields the
-    reference ALWAYS returns alongside the page (``found``, ``returned``,
-    ``time_allowed``; Solr.scala:91-103, api.yml:181) carried as columns
-    on the page rows, so the whole envelope is oracle-checkable as one
-    relational result. One scoring pass (search_with_found)."""
-    page, found = search_with_found(index, text, k, skip, filters,
-                                    synonyms=synonyms)
-    returned = page.count()  # page is a local k-row DataFrame
-    return page.select(
-        F.lit(int(found)).cast("long").alias("found"),
-        F.lit(int(returned)).cast("long").alias("returned"),
-        F.lit(int(time_allowed_ms)).cast("int").alias("time_allowed"),
-        "doc_id", "repo", "path", "lang", "score")
+    """S13 result-sink envelope as a DataFrame: the summary fields
+    ``found``, ``returned`` and ``time_allowed`` carried as columns on
+    the page rows, so the whole envelope is oracle-checkable as one
+    relational result."""
+    summary, rows = _envelope(index, text, k, skip, filters, synonyms,
+                              time_allowed_ms)
+    head = (summary["found"], summary["returned"], summary["time_allowed"])
+    return index.spark.createDataFrame(
+        [head + tuple(r) for r in rows],
+        "found long, returned long, time_allowed int, " + _PAGE_SCHEMA)
 
 
 def search_envelope_physical(index: PhysicalIndex, text: str | None = None,
@@ -590,26 +614,10 @@ def search_envelope_physical(index: PhysicalIndex, text: str | None = None,
                              filters: dict[str, list[str]] | None = None,
                              synonyms: dict[str, list[str]] | None = None,
                              time_allowed_ms: int = 5000) -> str:
-    """JSON envelope over the physical index, shaped like the reference
-    response incl. ``found`` and ``time_allowed`` (Solr.scala:91-103,
-    173-181 — time_allowed echoes the pinned 5000 ms budget,
-    SearchServlet.scala:97; api.yml:172-256) — one scoring pass
-    (search_with_found), not two. Exact `found` requires visiting every
-    match, so the count pass is never early-terminated (the same
-    trade-off Lucene makes for exact totalHits); `time_allowed` is
-    honored by the budgeted page path (search_budgeted) when a count is
-    not requested."""
-    import json
-
-    page, found = search_with_found(index, text, k, skip, filters,
-                                    synonyms=synonyms)
-    rows = page.collect()
+    """The response envelope as the reference's JSON document (the CLI's
+    ``query`` output)."""
+    summary, rows = _envelope(index, text, k, skip, filters, synonyms,
+                              time_allowed_ms)
     items = [{"repo": r["repo"], "path": r["path"], "lang": r["lang"],
               "score": r["score"]} for r in rows]
-    return json.dumps({
-        "summary": {"text": text if text is not None else "*",
-                    "skip": skip, "limit": k,
-                    "time_allowed": int(time_allowed_ms),
-                    "found": found, "returned": len(items)},
-        "fileitems": items,
-    })
+    return json.dumps({"summary": summary, "fileitems": items})

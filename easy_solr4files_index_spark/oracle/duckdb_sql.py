@@ -5,7 +5,7 @@ SQL string built here that recomputes the SAME result from the raw
 ``documents`` parquet view: same docs-adapter mapping
 (sources/docs_source.py), same tokenizer chain (functions/tokenizer.py —
 one regex spec shared by Spark exprs, pandas UDF, Python, and this SQL),
-same BM25 formula (operators/query.py), same tie-break.
+same BM25 formula (operators/wand.py), same tie-break.
 """
 
 from __future__ import annotations
@@ -246,9 +246,10 @@ phidf{j} AS (
 def boolean_sql_parts(clauses) -> tuple[str, str, int]:
     """(extra CTE block, matched-set CTE chain ending in ``m``, n_must)
     for a dismax boolean query. ``clauses`` = [(terms tuple, occur)] with
-    occur in should/must/must_not — the SQL twin of
-    operators/query.score_boolean (one union, one grouped aggregate,
-    Lucene BooleanQuery match predicate)."""
+    occur in should/must/must_not — the SQL twin of the engine's boolean
+    path (operators/wand._score_boolean_physical feeding
+    operators/query.combine_clause_rows: one union, one grouped
+    aggregate, Lucene BooleanQuery match predicate)."""
     phrase_idx = [(i, c) for i, (c, _) in enumerate(clauses) if len(c) >= 2]
     ctes = [_tok_list_sql()] if phrase_idx else []
     rows = []
@@ -374,13 +375,6 @@ SELECT source AS repo,
        'docs/' || lpad(CAST(doc_id AS VARCHAR), 8, '0') || '.txt' AS path,
        sha256(coalesce(text, '')) AS sha256
 FROM documents
-"""
-
-
-def delete_prefix_sql(repo: str) -> str:
-    """Remaining per-repo doc counts after the `id:<bagId>*` delete analog."""
-    return f"""{PREFIX}
-SELECT repo, count(*) AS cnt FROM docl WHERE repo <> '{repo}' GROUP BY repo
 """
 
 

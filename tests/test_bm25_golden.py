@@ -5,10 +5,11 @@ from __future__ import annotations
 
 import pytest
 
-from easy_solr4files_index_spark.operators.index_build import IndexConfig, build_index
-from easy_solr4files_index_spark.operators.query import num_found, search, search_envelope
+from easy_solr4files_index_spark.operators.index_build import IndexConfig
+from easy_solr4files_index_spark.operators.postings import open_index, write_index
+from easy_solr4files_index_spark.operators.wand import (
+    search_blockmax, search_envelope_physical, search_with_found)
 from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
-from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
 # query coverage per FIXTURES.md §2: single-term, multi-term OR, path-token
 # hit, camelCase-part hit, stopword-only, hot term, filters, match-all,
@@ -27,20 +28,21 @@ QUERIES = [
 ]
 
 
+def _found(idx, text, **kw) -> int:
+    return search_with_found(idx, text, **kw)[1]
+
+
 @pytest.fixture(scope="module")
-def corpus(spark):
-    docs = synth_code_docs(spark, n_docs=300, seed=11)
-    rows = [r.asDict() for r in docs.collect()]
-    idx = build_index(spark, docs)
-    oracle = build_oracle(rows)
-    yield idx, oracle
-    idx.unpersist()
+def corpus(code_index):
+    docs, idx = code_index
+    return idx, docs, build_oracle([r.asDict() for r in docs.collect()])
 
 
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)
 def test_rank_identical(corpus, text, k, skip, filters):
-    idx, oracle = corpus
-    got = search(idx, text, k=k, skip=skip, filters=filters, round_score=None).collect()
+    idx, _, oracle = corpus
+    got = search_blockmax(idx, text, k=k, skip=skip, filters=filters,
+                          round_score=None).collect()
     exp = oracle_search(oracle, text, k=k, skip=skip, filters=filters)
     assert len(got) == len(exp), (text, len(got), len(exp))
     for g, e in zip(got, exp):
@@ -49,19 +51,19 @@ def test_rank_identical(corpus, text, k, skip, filters):
         assert g["doc_id"] == e["doc_id"]
 
 
-def test_num_found(corpus):
-    idx, oracle = corpus
-    assert num_found(idx, "parse merge") == len(oracle_search(oracle, "parse merge", k=10**6))
-    assert num_found(idx, None) == oracle.n
-    assert num_found(idx, "the a") == 0
-    assert num_found(idx, None, filters={"lang": ["go"]}) == sum(
+def test_found_count(corpus):
+    idx, _, oracle = corpus
+    assert _found(idx, "parse merge") == len(oracle_search(oracle, "parse merge", k=10**6))
+    assert _found(idx, None) == oracle.n
+    assert _found(idx, "the a") == 0
+    assert _found(idx, None, filters={"lang": ["go"]}) == sum(
         1 for m in oracle.meta if m["lang"] == "go")
 
 
 def test_envelope_shape(corpus):
     import json
-    idx, _ = corpus
-    env = json.loads(search_envelope(idx, "parse", k=3))
+    idx, _, _ = corpus
+    env = json.loads(search_envelope_physical(idx, "parse", k=3))
     assert set(env) == {"summary", "fileitems"}
     assert set(env["summary"]) == {"text", "skip", "limit", "found", "returned",
                                 "time_allowed"}  # Solr.scala:97 echoes timeAllowed
@@ -69,29 +71,31 @@ def test_envelope_shape(corpus):
     assert env["summary"]["found"] >= env["summary"]["returned"]
 
 
-def test_arrow_tokenizer_same_index(spark, corpus):
+def test_arrow_tokenizer_same_index(spark, corpus, tmp_path):
     """use_arrow_tokenizer=True (north_star vectorized UDF path) builds a
     rank-identical index to the codegen-expression path."""
-    idx, oracle = corpus
-    docs = synth_code_docs(spark, n_docs=300, seed=11)
-    idx2 = build_index(spark, docs, IndexConfig(use_arrow_tokenizer=True))
-    got = search(idx2, "parse merge token", k=10, round_score=None).collect()
+    _, docs, oracle = corpus
+    write_index(spark, docs, str(tmp_path), lineage_groups=1,
+                config=IndexConfig(use_arrow_tokenizer=True, term_buckets=8))
+    idx2 = open_index(spark, str(tmp_path))
+    got = search_blockmax(idx2, "parse merge token", k=10,
+                          round_score=None).collect()
     exp = oracle_search(oracle, "parse merge token", k=10)
     assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp]
     assert [g["score"] for g in got] == pytest.approx([e["score"] for e in exp], rel=1e-9)
-    idx2.unpersist()
 
 
-def test_num_found_synonyms(corpus):
+def test_found_count_synonyms(corpus):
     """numFound takes the SAME synonyms map as search: Solr's numFound is
     the count of the very query that produced the page, so a
     synonym-expanded page paired with a synonym-blind count could report
     found < returned."""
     import json
-    idx, _ = corpus
+    idx, _, _ = corpus
     syn = {"parse": ["merge", "token"]}
-    expanded = num_found(idx, "parse", synonyms=syn)
-    assert expanded == num_found(idx, "parse merge token")
-    assert expanded >= num_found(idx, "parse")
-    env = json.loads(search_envelope(idx, "parse", k=10**6, synonyms=syn))
+    expanded = _found(idx, "parse", synonyms=syn)
+    assert expanded == _found(idx, "parse merge token")
+    assert expanded >= _found(idx, "parse")
+    env = json.loads(search_envelope_physical(idx, "parse", k=10**6,
+                                              synonyms=syn))
     assert env["summary"]["found"] == expanded == env["summary"]["returned"]

