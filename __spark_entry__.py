@@ -71,7 +71,7 @@ _VARIANTS: dict[str, Callable[[SparkSession, str], tuple[DataFrame, IndexConfig]
 def _index(spark: SparkSession, sf_dir: str,
            variant: str = "default") -> PhysicalIndex:
     """The on-disk index (varbyte/delta blocks, term-bucket partitioning,
-    queried through block-max WAND) of one corpus variant, written once
+    queried through the bucket-local top-k pass) of one corpus variant, written once
     per session and sf dir."""
     import tempfile
 

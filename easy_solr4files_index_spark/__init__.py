@@ -6,7 +6,8 @@ The reference is a Scala HTTP facade delegating index/query execution to
 Solr/Lucene (reference: src/main/scala/nl.knaw.dans.easy.solr4files/,
 schema.xml, solrconfig.xml). This package re-expresses every capability
 Spark-first: DataFrame/Catalyst for scans, filters, aggregation and joins;
-Arrow-vectorized kernels only for posting-list encoding and WAND scoring.
+Arrow-vectorized kernels only for posting-list encoding and bucket-local
+top-k scoring.
 """
 
 __version__ = "0.1.0"

@@ -22,7 +22,7 @@ The Spark mapping:
   Solr's DocList of ids+scores);
 - the **filterCache** stores the fq DocSet as a *persisted* narrow
   ``doc_id`` DataFrame — the executor-memory analog of Solr's DocSet
-  bitset, reused below the scoring aggregate by every query that repeats
+  bitset, reused inside the scoring pass by every query that repeats
   the filter, and unpersisted on eviction.
 
 At 100 TB the shapes hold: pages are k-sized, and a DocSet DataFrame is
@@ -179,8 +179,8 @@ class SearcherCaches:
         searcher read columnar executor memory instead of parquet.
 
         What it can and cannot buy (measured, BENCH/README q-row
-        `query_p95_warm_sec`): scan+decode time goes away, but the WAND
-        path's 4-7 sequential jobs keep their per-job scheduling floor —
+        `query_p95_warm_sec`): scan+decode time goes away, but a query's
+        2-4 sequential jobs keep their per-job scheduling floor —
         the cache removes I/O from each job, not the jobs. positions is
         included automatically when the index carries it (phrase
         queries). Warmed data is dropped by clear()/rebind() along with
@@ -223,7 +223,7 @@ class SearcherCaches:
     # -- filterCache ------------------------------------------------------
     def filter_docset(self, filters: dict | None) -> DataFrame | None:
         """The persisted doc_id DocSet for an fq, built once per searcher
-        state and reused below the scoring aggregate of every query that
+        state and reused inside the scoring pass of every query that
         repeats the filter (Solr filterCache semantics: fq sets are
         cached independently of the main query)."""
         if not filters:

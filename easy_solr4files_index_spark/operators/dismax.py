@@ -103,7 +103,7 @@ def parse_dismax(text: str, stopwords: Iterable[str] = LUCENE_STOPWORDS,
 
 def is_plain_or(clauses: list[Clause]) -> bool:
     """True when the query is what rounds 1-2 supported: a bag of
-    single-term SHOULD clauses — the block-max WAND fast path."""
+    single-term SHOULD clauses — the one-pass bucket-local top-k path."""
     return all(c.occur == SHOULD and not c.is_phrase for c in clauses)
 
 

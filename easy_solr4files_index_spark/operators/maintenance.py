@@ -19,7 +19,7 @@ Delete = tombstone, not rewrite:
     found per segment with an islands grouping (doc_id − row_number is
     constant within a run), so live docs fragmented by EARLIER deletes
     are N exact runs, never an over-covering [min, max]; the docs_store
-    view and the WAND decode kernel mask them everywhere.
+    view and the query decode kernels mask them everywhere.
   * ``_termstats_delta/`` gains negative df rows computed by decoding
     ONLY the affected buckets' blocks.
   * globals n_docs/avgdl/dl_sum updated exactly, so BM25 scores after a
@@ -34,8 +34,8 @@ Delete = tombstone, not rewrite:
   * auto-compact: once the MERGED tombstone list exceeds
     ``AUTO_COMPACT_MAX_RANGES`` or masks more than
     ``AUTO_COMPACT_MAX_MASKED`` of the id space, the delete triggers
-    ``compact_index`` — the decode kernel's range loop stays bounded no
-    matter how many deletes accumulate.
+    ``compact_index`` — the tombstone list the decode kernels search
+    stays bounded no matter how many deletes accumulate.
 
 Append = new segment:
   * new docs take doc_ids from a fresh bucket-aligned base (globals
@@ -74,14 +74,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.codec import encode_postings, varbyte_decode
+from ..functions.codec import decode_blocks, encode_blocks, in_ranges
 from .docids import assign_doc_ids
 from .index_build import enrich_docs
 from .postings import (POSTINGS_SCHEMA, PhysicalIndex, _append_lineage,
                        _make_encoder, _tbucket, gen_name, merge_ranges,
                        open_index)
 
-# auto-compact thresholds: keep the per-block tombstone mask loop O(1)-ish
+# auto-compact thresholds: keep the tombstone list short
 # and reclaim space once deletes dominate (delete_where_physical)
 AUTO_COMPACT_MAX_RANGES = 64
 AUTO_COMPACT_MAX_MASKED = 0.20
@@ -175,20 +175,12 @@ def _df_delta_kernel(ranges: list[tuple[int, int]], sign: int):
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            terms, tbs, cnts = [], [], []
-            for row in pdf.itertuples(index=False):
-                ids = np.cumsum(varbyte_decode(row.doc_ids, row.n), dtype=np.uint64).astype(np.int64)
-                mask = np.zeros(ids.shape, dtype=bool)
-                for lo, hi in rs:
-                    mask |= (ids >= lo) & (ids <= hi)
-                c = int(mask.sum())
-                if c:
-                    terms.append(row.term)
-                    tbs.append(row.tbucket)
-                    cnts.append(sign * c)
-            yield pd.DataFrame({"term": pd.Series(terms, dtype=object),
-                                "tbucket": pd.Series(tbs, dtype="int32"),
-                                "df": pd.Series(cnts, dtype="int64")})
+            block, ids, _, _ = decode_blocks(pdf["n"], pdf["doc_ids"])
+            cnt = np.bincount(block[in_ranges(ids, rs)], minlength=len(pdf))
+            hit = cnt > 0
+            yield pd.DataFrame({"term": pdf["term"].to_numpy(object)[hit],
+                                "tbucket": pdf["tbucket"].to_numpy(np.int32)[hit],
+                                "df": sign * cnt[hit]})
 
     return kernel
 
@@ -706,23 +698,24 @@ def compact_index(spark: SparkSession, index_dir: str) -> PhysicalIndex:
 
     def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                ids = np.cumsum(varbyte_decode(row.doc_ids, row.n), dtype=np.uint64).astype(np.int64)
-                tfs = varbyte_decode(row.tfs, row.n)
-                dls = varbyte_decode(row.dls, row.n)
-                keep = np.ones(ids.shape, dtype=bool)
-                for lo, hi in ranges:
-                    keep &= ~((ids >= lo) & (ids <= hi))
-                if not keep.any():
-                    continue
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                e_ids, e_tfs, e_dls = encode_postings(ids, tfs, dls)
-                tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
-                rows.append((row.term, row.bucket, int(ids.size), e_ids, e_tfs,
-                             e_dls, float(tfn.max()), row.tbucket))
-            yield pd.DataFrame(rows, columns=["term", "bucket", "n", "doc_ids",
-                                              "tfs", "dls", "max_tfnorm", "tbucket"])
+            block, ids, tfs, dls = decode_blocks(pdf["n"], pdf["doc_ids"],
+                                                 pdf["tfs"], pdf["dls"])
+            keep = ~in_ranges(ids, ranges)
+            block, ids, tfs, dls = block[keep], ids[keep], tfs[keep], dls[keep]
+            if ids.size == 0:
+                continue
+            # blocks left with no live posting are dropped
+            starts = np.flatnonzero(np.concatenate(([True], block[1:] != block[:-1])))
+            e_ids, e_tfs, e_dls = encode_blocks(starts, ids, tfs, dls)
+            tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+            src = pdf.iloc[block[starts]]
+            yield pd.DataFrame({
+                "term": src["term"].to_numpy(object),
+                "bucket": src["bucket"].to_numpy(np.int64),
+                "n": np.diff(np.append(starts, ids.size)).astype(np.int32),
+                "doc_ids": e_ids, "tfs": e_tfs, "dls": e_dls,
+                "max_tfnorm": np.maximum.reduceat(tfn, starts),
+                "tbucket": src["tbucket"].to_numpy(np.int32)})
 
     new_gen = gen + 1
     new_post = os.path.join(index_dir, gen_name("postings", new_gen))

@@ -25,7 +25,8 @@ Physical design (why it scales):
   size is bounded by span regardless of df).
 * Blocks carry max_tfnorm = max over the block of the idf-free BM25
   factor tf·(k1+1)/(tf+k1·(1−b+b·dl/avgdl)); query-time upper bound for
-  a block is idf·max_tfnorm — the block-max WAND pruning key.
+  a block is idf·max_tfnorm — the block-max pruning key of
+  wand.search_budgeted.
 * ``tbucket = pmod(xxhash64(term), T)`` is the partition directory —
   term lookups prune to 1 directory per query term (partition pruning
   visible in the scan's PushedFilters).
@@ -223,11 +224,11 @@ def _make_encoder(k1: float, b: float, avgdl: float):
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         """Encode every term's posting block in one (tbucket, bucket)
         group with THREE vectorized varbyte passes total (ids/tfs/dls
-        over the whole group), then slice per-term byte ranges from the
-        shared buffers — the per-term Python work is two slices and a
-        tobytes, which is what lets a Zipf vocabulary (many tiny terms)
-        encode at numpy speed instead of numpy-call-overhead speed."""
-        from ..functions.codec import varbyte_encode_arr
+        over the whole group, codec.encode_blocks) — the per-term Python
+        work is three slices, which is what lets a Zipf vocabulary (many
+        tiny terms) encode at numpy speed instead of numpy-call-overhead
+        speed."""
+        from ..functions.codec import encode_blocks
 
         pdf = pdf.sort_values(["term", "doc_id"], kind="stable")
         ids = pdf["doc_id"].to_numpy(np.int64)
@@ -235,33 +236,15 @@ def _make_encoder(k1: float, b: float, avgdl: float):
         dls = pdf["dl"].to_numpy(np.int64)
         tfnorm = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
         terms = pdf["term"].to_numpy(object)
-        # per-term segment boundaries
+        # per-term block starts
         change = np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1])))
-        bounds = np.append(change, terms.size)
-        # delta-encode ids with a reset at each term boundary (first id of
-        # a term is stored absolute — same layout encode_postings produces)
-        deltas = ids.astype(np.uint64).copy()
-        deltas[1:] = (ids[1:] - ids[:-1]).astype(np.uint64)
-        deltas[change] = ids[change].astype(np.uint64)
-        buf_i, w_i = varbyte_encode_arr(deltas)
-        buf_t, w_t = varbyte_encode_arr(tfs.astype(np.uint64))
-        buf_d, w_d = varbyte_encode_arr(dls.astype(np.uint64))
-        off_i = np.concatenate(([0], np.cumsum(w_i)))[bounds]
-        off_t = np.concatenate(([0], np.cumsum(w_t)))[bounds]
-        off_d = np.concatenate(([0], np.cumsum(w_d)))[bounds]
-        maxes = np.maximum.reduceat(tfnorm, bounds[:-1])
-        tb = int(pdf["tbucket"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        rows = [
-            (terms[s], bucket, int(e - s),
-             buf_i[off_i[j]:off_i[j + 1]].tobytes(),
-             buf_t[off_t[j]:off_t[j + 1]].tobytes(),
-             buf_d[off_d[j]:off_d[j + 1]].tobytes(),
-             float(maxes[j]), tb)
-            for j, (s, e) in enumerate(zip(bounds[:-1], bounds[1:]))
-        ]
-        return pd.DataFrame(rows, columns=["term", "bucket", "n", "doc_ids",
-                                           "tfs", "dls", "max_tfnorm", "tbucket"])
+        e_ids, e_tfs, e_dls = encode_blocks(change, ids, tfs, dls)
+        maxes = np.maximum.reduceat(tfnorm, change)
+        return pd.DataFrame({
+            "term": terms[change], "bucket": int(pdf["bucket"].iloc[0]),
+            "n": np.diff(np.append(change, ids.size)).astype(np.int32),
+            "doc_ids": e_ids, "tfs": e_tfs, "dls": e_dls, "max_tfnorm": maxes,
+            "tbucket": int(pdf["tbucket"].iloc[0])})
 
     return encode_group
 

@@ -1,30 +1,37 @@
-"""Distributed block-max top-k over the physical index.
+"""Distributed top-k over the physical index.
 
 The reference's query path is Lucene's per-segment WAND traversal
 (top-k by BM25 is Solr's default sort; solrconfig.xml:780-855,
-SearchServlet.scala:78-103). A literal translation (a cursor walk over
-posting lists) is single-machine thinking; the Spark-native equivalent
-is BUCKET-LEVEL block-max pruning:
+SearchServlet.scala:78-103): one pass per segment that scores and keeps
+a top-k heap. The Spark-native shape of that pass is BUCKET-LOCAL top-k:
 
   1. Partition-pruned scan: query terms hash to tbucket directories, so
      the postings scan touches ≤ |terms| partitions, with the term
-     equality pushed to parquet (PushedFilters).
-  2. Upper bounds: each block row carries max_tfnorm; a bucket's bound
-     is UB(bucket) = Σ_terms idf·max_tfnorm — computable WITHOUT
-     decoding, from block metadata alone (block-max WAND's invariant).
-  3. Phase A: exactly score the top-P buckets by UB (distributed
-     TakeOrdered, P = max(4·(k+skip), 32)); the (k+skip)-th score is the
-     threshold τ.
-  4. Phase B: exactly score only remaining buckets with UB > τ — for
-     selective queries this prunes almost everything; for match-heavy
-     queries it degrades gracefully to exhaustive scoring (same as WAND).
+     equality pushed to parquet (PushedFilters). idf is a literal CASE
+     column from the reader's memoized idf map — no termstats join.
+  2. Every query-term posting of a doc lives in that doc's one doc-range
+     ``bucket`` (postings.py), so a top-k computed inside each bucket is
+     exact. The pruned blocks — plus the fq doc ids, keyed by the same
+     ``bucket = doc_id // bucket_span`` — go through ONE
+     ``repartition("bucket")`` (no fixed count: AQE coalesces it).
+  3. One vectorized kernel per partition (mapInPandas, _topk_kernel)
+     sorts the blocks by (bucket, term), decodes them all in one pass
+     (codec.decode_blocks), masks tombstones and the fq, sums per doc
+     (np.unique + np.bincount) and keeps the local top ``k+skip`` rows by
+     (score desc, doc_id asc). With one term and no fq each doc sits in
+     exactly one block, so the repartition is skipped.
+  4. TakeOrdered over the partitions' local winners cuts the page,
+     and the k winners' stored fields come from a broadcast join.
 
-Decoding + scoring is a vectorized Arrow kernel (mapInPandas): each
-block decodes to numpy arrays and emits (doc_id, contrib) batches; the
-per-doc sum is a Catalyst hash aggregate. Correctness gate:
+This is the partition-local top-k aggregation of "Cache-Efficient Top-k
+Aggregation over High Cardinality Large Datasets" (VLDB 2023), run as a
+batch kernel instead of per-row Python. ``search_with_found`` runs the
+same kernel with no local cut (exact counting must visit every match),
+and ``search_budgeted`` keeps block-max bucket bounds (Σ idf·max_tfnorm,
+from block metadata alone) to order the kernel's work into a hot phase
+and a completion phase that a time budget can skip. Correctness gate:
 tests/test_physical_index.py asserts rank-identity vs the numpy oracle
-(oracle/bm25_oracle.py) for the pruned and the exhaustive plan (WAND
-top-k == naive top-k, SURVEY.md §5.2.4).
+(oracle/bm25_oracle.py) on every entry point.
 """
 
 from __future__ import annotations
@@ -37,111 +44,90 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.codec import varbyte_decode
+from ..functions.codec import decode_blocks, in_ranges
 from ..functions.xxhash import term_bucket
 from .dismax import is_plain_or, parse_dismax, plain_terms
 from .postings import PhysicalIndex
-from .query import (_expand_clause_synonyms, _filters_expr, _idf_expr,
-                    combine_clause_rows, score_phrase, validate_filters)
+from .query import (_dlit, _expand_clause_synonyms, _filters_expr, _idf_expr,
+                    _sstr, _term_case_sql, combine_clause_rows, score_phrase,
+                    validate_filters)
 
 
-def _score_blocks(blocks: DataFrame, k1: float, b: float, avgdl: float,
-                  single_term: bool = False,
-                  tombstones: tuple[tuple[int, int], ...] = (),
-                  fq_ids: DataFrame | None = None) -> DataFrame:
-    """Decode blocks (term, n, doc_ids, tfs, dls, idf) -> (doc_id, score).
+def _bm25(idf: np.ndarray, tfs: np.ndarray, dls: np.ndarray, k1: float,
+          b: float, avgdl: float) -> np.ndarray:
+    """Per-posting BM25 contribution idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))."""
+    tf = tfs.astype(np.float64)
+    return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dls / avgdl))
 
-    ``single_term=True`` skips the per-doc sum: with one query term a doc
-    appears in exactly one block, so the groupBy (a full shuffle of every
-    decoded posting) would be the identity — the hot-term fast path.
 
-    ``tombstones`` are deleted doc_id ranges (operators/maintenance.py);
-    decoded postings falling inside are masked out here, so deleted docs
-    can never score.
+def _topk_kernel(k1: float, b: float, avgdl: float,
+                 tombstones: tuple[tuple[int, int], ...], use_fq: bool,
+                 cut: int | None):
+    """The bucket-local top-k pass over one partition of
+    (bucket, term, n, doc_ids, tfs, dls, idf, fq) rows -> (doc_id, score).
 
-    ``fq_ids`` (doc_id-only DataFrame) pushes the filter-query semijoin
-    BELOW the per-doc aggregate: with a 1%-selective fq the round-2 shape
-    (aggregate everything, semijoin after) wasted 99% of the agg's
-    shuffle+sum work. The semijoin shuffles on doc_id — the SAME key the
-    aggregate needs — so Catalyst reuses the exchange: no extra shuffle
-    of the exploded stream, strictly fewer rows aggregated. fq semantics
-    are unchanged (non-scoring, like Solr fq).
-    """
+    Block rows carry ``fq = -1``; with an fq each passing doc adds one
+    empty block row carrying its id in ``fq``. The whole partition is
+    gathered first (a doc's blocks may span Arrow batches), sorted by
+    (bucket, term) so every doc sums its terms in one fixed order — the
+    scores are bit-identical whichever partition or batch a block arrived
+    in — and decoded in one pass. ``cut`` keeps the local top ``cut``
+    by (score desc, doc_id asc); None keeps every match."""
     avgdl = avgdl if avgdl > 0 else 1.0
-    ranges = [(int(lo), int(hi)) for lo, hi in tombstones]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs_ids, outs_contrib = [], []
-            for row in pdf.itertuples(index=False):
-                n = row.n
-                ids = np.cumsum(varbyte_decode(row.doc_ids, n), dtype=np.uint64).astype(np.int64)
-                tfs = varbyte_decode(row.tfs, n).astype(np.float64)
-                dls = varbyte_decode(row.dls, n).astype(np.float64)
-                if ranges:
-                    keep = np.ones(ids.shape, dtype=bool)
-                    for lo, hi in ranges:
-                        keep &= ~((ids >= lo) & (ids <= hi))
-                    if not keep.all():
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    if ids.size == 0:
-                        continue
-                contrib = row.idf * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                outs_ids.append(ids)
-                outs_contrib.append(contrib)
-            if outs_ids:
-                yield pd.DataFrame({"doc_id": np.concatenate(outs_ids),
-                                    "contrib": np.concatenate(outs_contrib)})
+        parts = list(batches)
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        fq = pdf["fq"].to_numpy(np.int64)
+        fq_ids = fq[fq >= 0]
+        pdf = pdf[fq < 0].sort_values(["bucket", "term"], kind="stable")
+        block, ids, tfs, dls = decode_blocks(pdf["n"], pdf["doc_ids"],
+                                             pdf["tfs"], pdf["dls"])
+        keep = ~in_ranges(ids, tombstones)
+        if use_fq:
+            keep &= np.isin(ids, fq_ids)
+        if not keep.all():
+            block, ids, tfs, dls = block[keep], ids[keep], tfs[keep], dls[keep]
+        if ids.size == 0:
+            return
+        idf = pdf["idf"].to_numpy(np.float64)[block]
+        docs, inv = np.unique(ids, return_inverse=True)
+        scores = np.bincount(inv, weights=_bm25(idf, tfs, dls, k1, b, avgdl),
+                             minlength=docs.size)
+        if cut is not None and docs.size > cut:
+            top = np.lexsort((docs, -scores))[:cut]
+            docs, scores = docs[top], scores[top]
+        yield pd.DataFrame({"doc_id": docs, "score": scores})
 
-    exploded = blocks.select("n", "doc_ids", "tfs", "dls", "idf").mapInPandas(
-        kernel, "doc_id long, contrib double")
-    if fq_ids is not None:
-        exploded = exploded.join(fq_ids, "doc_id", "left_semi")
-    if single_term:
-        return exploded.withColumnRenamed("contrib", "score")
-    return exploded.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
+    return kernel
 
 
 def _term_clause_rows(blocks: DataFrame, cmap: list[tuple[str, int, str]],
                       k1: float, b: float, avgdl: float,
                       tombstones: tuple[tuple[int, int], ...] = ()) -> DataFrame:
     """Decode blocks to per-clause rows (doc_id, cid, kind, contrib) for
-    the boolean combiner — like _score_blocks but each posting keeps its
-    term so the clause map (term → [(cid, kind)]) can tag it. The map is
-    query-sized, so it goes in as a literal CASE→array→explode projection
-    rather than a broadcast join: one fewer exchange (and one fewer AQE
-    stage job) on a latency-sensitive path."""
+    the boolean combiner — each posting keeps its term so the clause map
+    (term → [(cid, kind)]) can tag it. The map is query-sized, so it goes
+    in as a literal CASE→array→explode projection rather than a broadcast
+    join: one fewer exchange (and one fewer AQE stage job) on a
+    latency-sensitive path."""
     avgdl = avgdl if avgdl > 0 else 1.0
-    ranges = [(int(lo), int(hi)) for lo, hi in tombstones]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            o_term, o_ids, o_contrib = [], [], []
-            for row in pdf.itertuples(index=False):
-                n = row.n
-                ids = np.cumsum(varbyte_decode(row.doc_ids, n), dtype=np.uint64).astype(np.int64)
-                tfs = varbyte_decode(row.tfs, n).astype(np.float64)
-                dls = varbyte_decode(row.dls, n).astype(np.float64)
-                if ranges:
-                    keep = np.ones(ids.shape, dtype=bool)
-                    for lo, hi in ranges:
-                        keep &= ~((ids >= lo) & (ids <= hi))
-                    if not keep.all():
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    if ids.size == 0:
-                        continue
-                contrib = row.idf * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                o_term.append(np.full(ids.shape, row.term, dtype=object))
-                o_ids.append(ids)
-                o_contrib.append(contrib)
-            if o_ids:
-                yield pd.DataFrame({"term": np.concatenate(o_term),
-                                    "doc_id": np.concatenate(o_ids),
-                                    "contrib": np.concatenate(o_contrib)})
+            block, ids, tfs, dls = decode_blocks(pdf["n"], pdf["doc_ids"],
+                                                 pdf["tfs"], pdf["dls"])
+            keep = ~in_ranges(ids, tombstones)
+            block, ids, tfs, dls = block[keep], ids[keep], tfs[keep], dls[keep]
+            idf = pdf["idf"].to_numpy(np.float64)[block]
+            yield pd.DataFrame({"term": pdf["term"].to_numpy(object)[block],
+                                "doc_id": ids,
+                                "contrib": _bm25(idf, tfs, dls, k1, b, avgdl)})
 
     decoded = blocks.select("term", "n", "doc_ids", "tfs", "dls", "idf").mapInPandas(
         kernel, "term string, doc_id long, contrib double")
-    from .query import _sstr, _term_case_sql
     by_term: dict[str, list[tuple[int, str]]] = {}
     for term, cid, kind in cmap:
         by_term.setdefault(term, []).append((cid, kind))
@@ -169,27 +155,24 @@ def _term_clause_rows(blocks: DataFrame, cmap: list[tuple[str, int, str]],
 _FETCH_BY_ID_BYTES = int(os.environ.get("SPARK_FTS_FETCH_BY_ID_BYTES",
                                         str(1 << 30)))
 
-# Block-max pruning engages only when the index has this many times more
-# buckets than the hot set P — below that the UB job + two-phase plan
-# costs more than the decode it skips (see the cutover comment in
-# _blockmax).
-_PRUNE_MIN_BUCKET_FACTOR = int(os.environ.get("SPARK_FTS_PRUNE_FACTOR", "4"))
-
 _PAGE_COLS = ("doc_id", "repo", "path", "lang", "score")
 _PAGE_SCHEMA = "doc_id long, repo string, path string, lang string, score double"
 
 
-def _stored_fields_page(index: PhysicalIndex, page_narrow: DataFrame) -> DataFrame:
+def _stored_fields_page(index: PhysicalIndex, page_narrow: DataFrame,
+                        k: int) -> DataFrame:
     """(doc_id, score) page (≤ k rows) -> full result page with stored
     fields, ordered (score desc, doc_id asc). See _FETCH_BY_ID_BYTES for
-    the two physical strategies."""
+    the two physical strategies. Both end in orderBy + limit, which plans
+    as TakeOrderedAndProject: a bare orderBy would plan a range-partition
+    exchange (a sampling job and a shuffle job) to sort ≤ k rows."""
     order = [F.col("score").desc(), F.col("doc_id").asc()]
     cols = list(_PAGE_COLS)
     if index.docs_store_bytes < _FETCH_BY_ID_BYTES:
         return (F.broadcast(page_narrow)
                 .join(index.docs_store.select("doc_id", "repo", "path", "lang"),
                       "doc_id")
-                .orderBy(*order).select(*cols))
+                .orderBy(*order).limit(k).select(*cols))
     rows = page_narrow.collect()
     if not rows:
         return index.spark.createDataFrame([], _PAGE_SCHEMA)
@@ -200,35 +183,17 @@ def _stored_fields_page(index: PhysicalIndex, page_narrow: DataFrame) -> DataFra
               .filter(F.col("doc_id").isin([int(r["doc_id"]) for r in rows]))
               .select("doc_id", "repo", "path", "lang"))
     return (fields.join(F.broadcast(score_df), "doc_id")
-            .orderBy(*order).select(*cols))
+            .orderBy(*order).limit(k).select(*cols))
 
 
 def _prune_pred_sql(terms: list[str], term_buckets: int) -> str:
     """`tbucket IN (...) AND term IN (...)` as ONE SQL string (a single
     parsed filter call; the Column form costs ~6 Py4J round-trips) —
     same predicate, same partition/row-group pruning."""
-    from .query import _sstr
     tbs = sorted({term_bucket(t, term_buckets) for t in terms})
     tlist = ", ".join(_sstr(t) for t in sorted(set(terms)))
     return (f"tbucket IN ({', '.join(str(b) for b in tbs)}) "
             f"AND term IN ({tlist})")
-
-
-def _pruned_blocks(index: PhysicalIndex, terms: list[str]) -> DataFrame:
-    """Term/tbucket-pruned postings blocks with Lucene idf joined IN-PLAN
-    from the equally-pruned termstats scan — the shared front of every
-    OR/WAND scoring path (_blockmax, search_with_found). tbucket =
-    pmod(xxhash64(term), T) is computed driver-side (pure-Python XXH64,
-    parity-tested vs the Spark expression): zero Spark jobs for query
-    planning, and the values prune BOTH scans (partition dirs + parquet
-    row-group stats). Keeping idf in-plan (vs collecting df first) saves
-    a driver round-trip — the single broadcast feeds everything."""
-    cfg = index.config
-    pred = _prune_pred_sql(terms, cfg.term_buckets)
-    ts = (index.termstats.filter(pred)
-          .withColumn("idf", _idf_expr(index.n_docs)))
-    return (index.postings.filter(pred)
-            .join(F.broadcast(ts.select("term", "idf")), "term"))
 
 
 def _idf_map_cached(index: PhysicalIndex, terms: list[str]) -> dict[str, float]:
@@ -256,19 +221,32 @@ def _idf_map_cached(index: PhysicalIndex, terms: list[str]) -> dict[str, float]:
     return {t: v for t in terms if (v := cache.get(t)) is not None}
 
 
+def _idf_blocks(index: PhysicalIndex, terms: list[str],
+                idf_map: dict[str, float]) -> DataFrame:
+    """Postings blocks of ``terms``, term/tbucket-pruned, with their idf
+    from ``idf_map`` as a literal CASE column: one parsed expression (a
+    per-term F.when chain costs a Py4J round-trip per node) and no join
+    against termstats. idf was evaluated JVM-side by the same _idf_expr
+    plan, so scores are bit-identical to an in-plan join."""
+    idf = _term_case_sql({t: _dlit(idf_map[t]) for t in terms if t in idf_map},
+                         "CAST(NULL AS DOUBLE)")
+    return (index.postings
+            .filter(_prune_pred_sql(terms, index.config.term_buckets))
+            .withColumn("idf", F.expr(idf)))
+
+
 def _score_boolean_physical(index: PhysicalIndex, clauses,
                             fq_ids: DataFrame | None) -> DataFrame:
     """(doc_id, score) for a boolean/phrase dismax query over the
-    physical index — exact scoring (no block-max pruning: a MUST/MUST_NOT
-    predicate or a positional phrase invalidates the per-term upper
-    bounds the bucket UB job relies on; Lucene likewise drops WAND for
-    boolean-with-prohibited and phrase scorers).
+    physical index — exact scoring (a MUST/MUST_NOT predicate or a
+    positional phrase invalidates per-term block-max upper bounds; Lucene
+    likewise drops WAND for boolean-with-prohibited and phrase scorers).
 
     Scale shape: every scan below is pruned to the query's term buckets
     (partition dirs) and terms (parquet row-group stats); phrase
     positions come from the positions/ dataset, pruned the same way; the
-    clause tag map is a broadcast; the combiner is one hash aggregate on
-    doc_id (operators/query.combine_clause_rows)."""
+    clause tag map is a literal projection; the combiner is one hash
+    aggregate on doc_id (operators/query.combine_clause_rows)."""
     cfg = index.config
     n_must = sum(1 for c in clauses if c.occur == "must")
     term_clauses = [(i, c) for i, c in enumerate(clauses) if not c.is_phrase]
@@ -277,27 +255,15 @@ def _score_boolean_physical(index: PhysicalIndex, clauses,
                        | {t for _, c in phrase_clauses for t in c.terms})
     # idf for the query's terms comes from ONE collect of the pruned
     # termstats scan (≤ |query terms| rows at any corpus size — the scan
-    # is partition- and row-group-pruned), memoized per reader. The
-    # OR/WAND path keeps idf in-plan because its single broadcast feeds
-    # everything; here the collected map replaces THREE exchange stages
-    # (idf broadcast join, per-phrase Σidf aggregate, its crossJoin
-    # broadcast) on a latency-sensitive path. idf is still evaluated
-    # JVM-side (same _idf_expr plan), so scores are bit-identical to the
-    # in-plan join.
+    # is partition- and row-group-pruned), memoized per reader; the
+    # literal map replaces three exchange stages (idf broadcast join,
+    # per-phrase Σidf aggregate, its crossJoin broadcast)
     idf_map = _idf_map_cached(index, all_terms)
 
     parts: list[DataFrame] = []
     if term_clauses:
-        from .query import _dlit, _term_case_sql
         qterms = sorted({c.terms[0] for _, c in term_clauses})
-        # one parsed CASE expression instead of a per-term F.when chain
-        # (each chain node is a Py4J round-trip — see query._tfnorm_sql)
-        idf_expr = F.expr(_term_case_sql(
-            {t: _dlit(idf_map[t]) for t in qterms if t in idf_map},
-            "CAST(NULL AS DOUBLE)"))
-        blocks = (index.postings
-                  .filter(_prune_pred_sql(qterms, cfg.term_buckets))
-                  .withColumn("idf", idf_expr))
+        blocks = _idf_blocks(index, qterms, idf_map)
         cmap = [(c.terms[0], i, c.occur) for i, c in term_clauses]
         parts.append(_term_clause_rows(blocks, cmap, cfg.k1, cfg.b,
                                        index.avgdl, index.tombstones))
@@ -310,9 +276,8 @@ def _score_boolean_physical(index: PhysicalIndex, clauses,
             phidf = sum(idf_map.get(t, 0.0) for t in c.terms)
             ph = score_phrase(pos, c.terms, cfg.k1, cfg.b, index.avgdl,
                               phidf)
-            from .query import _sstr as _q
             parts.append(ph.selectExpr("doc_id", f"{i} AS cid",
-                                       f"{_q(c.occur)} AS kind", "contrib"))
+                                       f"{_sstr(c.occur)} AS kind", "contrib"))
     return combine_clause_rows(parts, n_must, fq_ids)
 
 
@@ -333,14 +298,14 @@ def _prepare(index: PhysicalIndex, text: str | None, k: int, skip: int,
     SearchServlet.scala:76-77, the fq is validated before any Spark job,
     and the text is parsed (dismax + synonym expansion) and routed.
     ``kind`` is "all" for match-all (no text), "or" for a plain bag of
-    terms (the block-max path), "bool" for +/-/phrase clauses, and "none"
+    terms (the bucket-local top-k pass), "bool" for +/-/phrase clauses, and "none"
     when the query is provably empty: no term survives analysis, or no
     positive clause is left (Lucene's MatchNoDocsQuery).
 
     fq pushdown: ``fq_ids``, the doc_id-only filtered-store projection,
-    semijoins the DECODED posting stream before the per-doc aggregate
-    (_score_blocks), so scores are never computed for docs the fq
-    excludes. A filterCache hit (operators/caches.py) substitutes its
+    masks the decoded postings inside the scoring pass (_bucket_topk;
+    a semijoin below the boolean combiner's aggregate), so scores are
+    never summed for docs the fq excludes. A filterCache hit (operators/caches.py) substitutes its
     persisted DocSet (``fq_docset``)."""
     cfg = index.config
     k = k if isinstance(k, int) and k >= 1 else 10
@@ -380,46 +345,79 @@ def _topk_page(index: PhysicalIndex, scored: DataFrame, q: _Query,
                round_score: int | None) -> DataFrame:
     """Cut FIRST on the narrow (doc_id, score) stream (TakeOrdered — no
     global shuffle), then join stored fields only for the k winners
-    (_stored_fields_page). The fq was already applied below the
-    aggregate (fq_ids)."""
+    (_stored_fields_page). The fq was already applied in the scoring
+    pass (fq_ids)."""
     sc = (F.round(F.col("score"), round_score) if round_score is not None
           else F.col("score"))
     page = (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .offset(q.skip).limit(q.k)
             .select("doc_id", sc.alias("score")))
-    return _stored_fields_page(index, page)
+    return _stored_fields_page(index, page, q.k)
 
 
-def _score_or(index: PhysicalIndex, blocks: DataFrame, q: _Query) -> DataFrame:
-    """(doc_id, score) of a plain-OR query over ``blocks``. With one
-    query term a doc appears in exactly one block, so the per-doc sum is
-    skipped even if the term turns out to have no postings."""
+def _bucket_topk(index: PhysicalIndex, q: _Query, idf: dict[str, float],
+                 cut: int | None, blocks: DataFrame | None = None) -> DataFrame:
+    """(doc_id, score) of the plain-OR query ``q`` in one pass: the
+    pruned blocks of the terms in ``idf`` (or the given subset of them,
+    ``blocks``) and the fq doc ids, repartitioned by doc-range bucket,
+    through _topk_kernel with local cut ``cut``. With one term and no fq
+    a doc's only posting sits in one block, so the scan partitions feed
+    the kernel directly."""
     cfg = index.config
-    return _score_blocks(blocks, cfg.k1, cfg.b, index.avgdl,
-                         single_term=len(q.terms) == 1,
-                         tombstones=index.tombstones, fq_ids=q.fq_ids)
+    if blocks is None:
+        blocks = _idf_blocks(index, sorted(idf), idf)
+    stream = blocks.selectExpr("bucket", "term", "n", "doc_ids", "tfs", "dls",
+                               "idf", "CAST(-1 AS BIGINT) AS fq")
+    if q.fq_ids is not None:
+        stream = stream.unionByName(q.fq_ids.selectExpr(
+            f"CAST(doc_id DIV {cfg.bucket_span} AS BIGINT) AS bucket",
+            "'' AS term", "0 AS n", "X'' AS doc_ids", "X'' AS tfs",
+            "X'' AS dls", "CAST(0 AS DOUBLE) AS idf", "doc_id AS fq"))
+    if q.fq_ids is not None or len(idf) > 1:
+        stream = stream.repartition("bucket")
+    kernel = _topk_kernel(cfg.k1, cfg.b, index.avgdl, index.tombstones,
+                          q.fq_ids is not None, cut)
+    return stream.mapInPandas(kernel, "doc_id long, score double")
+
+
+def _scored(index: PhysicalIndex, q: _Query, cut: int | None) -> DataFrame | None:
+    """(doc_id, score) of a "bool" or "or" query; None when no term of an
+    OR query is in the index."""
+    if q.kind == "bool":
+        # +/-/phrase clauses: exact boolean scoring, scans term-pruned
+        return _score_boolean_physical(index, q.clauses, q.fq_ids)
+    idf = _idf_map_cached(index, q.terms)
+    return _bucket_topk(index, q, idf, cut) if idf else None
+
+
+def _page(index: PhysicalIndex, q: _Query, round_score: int | None) -> DataFrame:
+    if q.kind == "all":
+        return _matchall_page(q)
+    scored = None if q.kind == "none" else _scored(index, q, q.k + q.skip)
+    if scored is None:
+        return _empty_page(index)
+    return _topk_page(index, scored, q, round_score)
 
 
 def search_blockmax(index: PhysicalIndex, text: str | None = None, k: int = 10,
                     skip: int = 0, filters: dict[str, list[str]] | None = None,
-                    round_score: int | None = 4, prune: bool | None = None,
+                    round_score: int | None = 4,
                     synonyms: dict[str, list[str]] | None = None,
                     fq_docset: DataFrame | None = None) -> DataFrame:
     """Top-k page over the physical index as a DataFrame of (doc_id,
     repo, path, lang, score), ordered score desc then doc_id asc.
 
-    ``prune`` is tri-state: ``None`` (default) lets the measured cutover
-    heuristic pick between the one-job exhaustive plan and the two-phase
-    block-max pruned plan; ``True`` forces the pruned plan regardless of
-    index size; ``False`` forces the exhaustive plan.
+    A plain-OR query is scored in one bucket-local top-(k+skip) pass
+    (_bucket_topk); +/-/phrase queries by the boolean combiner; no text
+    is match-all. On a warm reader (idf memoized) a one-term query runs
+    2 Spark jobs and a multi-term or filtered one 3.
 
     ``fq_docset``: an already-materialized doc_id DocSet for ``filters``
     (the filterCache path, operators/caches.py) — substituted for the
-    fq semijoin input below the scoring aggregate; ``filters`` must
-    still be passed (the match-all/store paths and validation use it)."""
-    page, _ = _blockmax(index, text, k, skip, filters, round_score, prune,
-                        synonyms, time_allowed_ms=None, fq_docset=fq_docset)
-    return page
+    fq doc ids of the scoring pass; ``filters`` must still be passed
+    (the match-all/store paths and validation use it)."""
+    q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
+    return _page(index, q, round_score)
 
 
 def search_budgeted(index: PhysicalIndex, text: str | None = None, k: int = 10,
@@ -432,60 +430,28 @@ def search_budgeted(index: PhysicalIndex, text: str | None = None, k: int = 10,
     Solr's partialResults). Returns (page, partial).
 
     Lucene's TimeLimitingCollector aborts a cursor walk mid-traversal;
-    Spark can't interrupt a running stage, so the budget gates the
-    PHASES of the block-max plan: the bucket-UB job and phase A (the
-    hot-bucket exact scoring that any answer needs) always run; if the
-    budget is exhausted before the completion pass (phase B over
-    remaining buckets with UB ≥ τ), it is skipped and ``partial=True``
-    — the page is then the exact top-k over the hot subset, exactly the
-    best-effort contract of Solr's partial results. A query that
-    completes within budget returns the normal exact answer and
-    ``partial=False``."""
-    return _blockmax(index, text, k, skip, filters, round_score, None,
-                     synonyms, time_allowed_ms=time_allowed_ms)
+    Spark can't interrupt a running stage, so the budget gates PHASES of
+    a block-max plan over plain-OR queries. A bucket's upper bound
+    UB = Σ_terms idf·max_tfnorm comes from block metadata alone (the
+    UB job); phase A runs the bucket-local top-k pass over the hot set —
+    the P = max(4·(k+skip), 32) buckets of highest UB — and its
+    (k+skip)-th score is the threshold τ; phase B runs the same pass over
+    the remaining buckets with UB ≥ τ. If the budget is exhausted before
+    phase B it is skipped and ``partial=True``: the page is then the
+    exact top-k over the hot subset, the best-effort contract of Solr's
+    partial results. A query that completes within budget (or whose
+    matches fit in P buckets, or that is not plain OR) returns the exact
+    answer and ``partial=False``."""
+    import time
 
-
-def _blockmax(index: PhysicalIndex, text: str | None, k: int, skip: int,
-              filters, round_score: int | None, prune: bool | None, synonyms,
-              time_allowed_ms: float | None,
-              fq_docset: DataFrame | None = None) -> tuple[DataFrame, bool]:
-    import time as _time
-
-    t_start = _time.perf_counter()
-    q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
-    if q.kind == "all":
-        return _matchall_page(q), False
-    if q.kind == "none":
-        return _empty_page(index), False
-    if q.kind == "bool":
-        # +/-/phrase clauses: exact boolean scoring (block-max upper
-        # bounds don't survive MUST_NOT or positional predicates — Lucene
-        # likewise disables WAND there); scans stay term-pruned.
-        return _topk_page(index, _score_boolean_physical(index, q.clauses,
-                                                         q.fq_ids),
-                          q, round_score), False
-
-    blocks = _pruned_blocks(index, q.terms)
-    p = max(4 * (q.k + q.skip), 32)
-    if prune is False or (prune is None and index.n_buckets
-                          and index.n_buckets <= p * _PRUNE_MIN_BUCKET_FACTOR):
-        # (prune=None = auto; an explicit True/False pins the plan.)
-        # pruning needs MORE buckets than the hot-set size P to ever drop
-        # one, and enough headroom beyond P to pay for its extra jobs:
-        # the pruned plan runs an UB job + a persist + two scoring phases
-        # where the exhaustive plan runs one job, so it only wins when it
-        # can skip a large FRACTION of buckets. Measured on the 200k-doc
-        # corpus (49 buckets, P=40): exhaustive top-k 0.16-0.5 s vs the
-        # pruned plan's 1.4-1.7 s — a 3x regression for a 18% decode
-        # saving. The factor keeps small/medium indexes on the one-job
-        # plan; at cluster scale n_buckets ~ n_docs/span >> 4P and
-        # pruning engages exactly where the decode volume dominates.
-        return _topk_page(index, _score_or(index, blocks, q), q,
-                          round_score), False
-
-    # bucket-level block-max pruning. One job decides coverage AND picks
-    # the hot set: TakeOrdered of P+1 bucket bounds — if it returns ≤ P
-    # rows, the hot set IS every bucket and phase A is exhaustive+final.
+    t_start = time.perf_counter()
+    q = _prepare(index, text, k, skip, filters, synonyms, None)
+    idf = _idf_map_cached(index, q.terms) if q.kind == "or" else {}
+    if not idf:
+        return _page(index, q, round_score), False
+    n = q.k + q.skip
+    p = max(4 * n, 32)
+    blocks = _idf_blocks(index, sorted(idf), idf)
     # ub_scale: stored max_tfnorm was encoded with min_encode_avgdl; if
     # incremental maintenance raised avgdl since, true tfnorm can exceed
     # the stored bound by at most avgdl_now/min_encode_avgdl (maintenance.py)
@@ -494,42 +460,29 @@ def _blockmax(index: PhysicalIndex, text: str | None, k: int, skip: int,
         ub_scale = max(1.0, index.avgdl / index.min_encode_avgdl)
     ub = blocks.groupBy("bucket").agg(
         (F.sum(F.col("idf") * F.col("max_tfnorm")) * F.lit(ub_scale)).alias("ub"))
+    # TakeOrdered of P+1 bounds: ≤ P rows means the hot set is every
+    # bucket, and one pass over all of them is exact and final
     ub_rows = ub.orderBy(F.col("ub").desc()).limit(p + 1).collect()
-    if len(ub_rows) == 0:
-        # no query term exists in the index
-        return _empty_page(index), False
     if len(ub_rows) <= p:
-        return _topk_page(index, _score_or(index, blocks, q), q,
+        return _topk_page(index, _bucket_topk(index, q, idf, n), q,
                           round_score), False
     hot = [r["bucket"] for r in ub_rows[:p]]
-
-    blocks = blocks.persist()
-    try:
-        # fq is already inside _score_blocks (below the aggregate), so
-        # phase A's stream — and hence tau — is fq-consistent by shape
-        phase_a = _score_or(index, blocks.filter(F.col("bucket").isin(hot)), q)
-        a_rows = (phase_a.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                  .limit(q.k + q.skip).collect())
-        tau = a_rows[-1]["score"] if len(a_rows) >= q.k + q.skip else float("-inf")
-        if (time_allowed_ms is not None
-                and (_time.perf_counter() - t_start) * 1000.0 > time_allowed_ms):
-            # budget exhausted before the completion pass (T3): return the
-            # exact top-k over the hot subset, flagged partial — phase A's
-            # page must be pinned locally before the persisted blocks are
-            # released by the finally below
-            rows = _topk_page(index, phase_a, q, round_score).collect()
-            return index.spark.createDataFrame(rows, _PAGE_SCHEMA), True
-        # survivors stay distributed (no driver collect of bucket ids):
-        # a doc's postings all live in its one bucket, so phases score
-        # disjoint doc sets and a plain union is exact.
-        # >= tau, not > tau: a pruned doc whose exact score EQUALS tau but
-        # whose doc_id is lower than the (k+skip)-th would win the tie-break
-        rest_df = ub.filter(~F.col("bucket").isin(hot) & (F.col("ub") >= tau)).select("bucket")
-        phase_b = _score_or(index, blocks.join(rest_df, "bucket"), q)
-        return _topk_page(index, phase_a.unionByName(phase_b), q,
-                          round_score), False
-    finally:
-        blocks.unpersist()
+    a_rows = (_bucket_topk(index, q, idf, n, blocks.filter(F.col("bucket").isin(hot)))
+              .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+              .limit(n).collect())
+    phase_a = index.spark.createDataFrame(a_rows, "doc_id long, score double")
+    if (time.perf_counter() - t_start) * 1000.0 > time_allowed_ms:
+        return _topk_page(index, phase_a, q, round_score), True
+    tau = a_rows[-1]["score"] if len(a_rows) >= n else float("-inf")
+    # a doc's postings all live in its one bucket, so the phases score
+    # disjoint doc sets and a plain union is exact. >= tau, not > tau: a
+    # pruned doc whose exact score EQUALS tau but whose doc_id is lower
+    # than the (k+skip)-th would win the tie-break
+    rest = ub.filter(~F.col("bucket").isin(hot) & (F.col("ub") >= tau))
+    phase_b = _bucket_topk(index, q, idf, n,
+                           blocks.join(rest.select("bucket"), "bucket", "left_semi"))
+    return _topk_page(index, phase_a.unionByName(phase_b), q,
+                      round_score), False
 
 
 def search_with_found(index: PhysicalIndex, text: str | None = None,
@@ -545,21 +498,18 @@ def search_with_found(index: PhysicalIndex, text: str | None = None,
 
     Exact total-hit counting must visit every matched posting no matter
     what (the same reason Lucene disables WAND skipping when an exact
-    totalHits is requested), so this path skips the UB job, scores
-    exhaustively ONCE, persists the narrow (doc_id, score) stream, and
-    derives BOTH the page (TakeOrderedAndProject) and the count from it.
-    The returned page is a small local DataFrame (k rows) — the persisted
+    totalHits is requested), so this path runs the scoring pass with no
+    local cut, persists the narrow (doc_id, score) stream, and derives
+    BOTH the page (TakeOrderedAndProject) and the count from it. The
+    returned page is a small local DataFrame (k rows) — the persisted
     stream is released before returning."""
     q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
     if q.kind == "all":
         found = q.store.count()
         return _matchall_page(q), found
-    if q.kind == "none":
+    scored = None if q.kind == "none" else _scored(index, q, None)
+    if scored is None:
         return _empty_page(index), 0
-    if q.kind == "bool":
-        scored = _score_boolean_physical(index, q.clauses, q.fq_ids)
-    else:
-        scored = _score_or(index, _pruned_blocks(index, q.terms), q)
     scored = scored.persist()
     try:
         found = scored.count()

@@ -3,14 +3,18 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from easy_solr4files_index_spark.functions.codec import (
+    decode_blocks,
     decode_postings,
+    encode_blocks,
     delta_decode,
     delta_encode,
     encode_postings,
+    in_ranges,
     varbyte_decode,
     varbyte_encode,
 )
@@ -59,3 +63,48 @@ def test_postings_roundtrip_unsorted_input(ids):
     assert d_ids.tolist() == sorted(ids)
     assert d_tfs.tolist() == tfs[order].tolist()
     assert d_dls.tolist() == dls[order].tolist()
+
+
+def _blocks(rng, sizes, max_id):
+    out = []
+    for n in sizes:
+        ids = np.sort(rng.choice(max_id, n, replace=False)).astype(np.uint64)
+        out.append((ids, rng.integers(1, 50, n), rng.integers(1, 5000, n)))
+    return out
+
+
+@pytest.mark.parametrize("sizes,max_id", [
+    ([], 10),                                   # no blocks
+    ([1] * 7, 1000),                            # n=1 blocks
+    ([3, 1, 5], 2**40),                         # deltas >= 2^28
+    (list(np.random.default_rng(3).integers(1, 40, 400)), 10**6),  # hundreds
+])
+def test_decode_blocks_matches_per_block_decode(sizes, max_id):
+    """The batch decoder returns exactly what decode_postings returns
+    block by block, concatenated, with each posting's block index; and
+    encode_blocks is its inverse, byte for byte."""
+    rng = np.random.default_rng(len(sizes))
+    blocks = _blocks(rng, sizes, max_id)
+    enc = [encode_postings(*blk) for blk in blocks]
+    block, ids, tfs, dls = decode_blocks(
+        [len(b[0]) for b in blocks], [e[0] for e in enc],
+        [e[1] for e in enc], [e[2] for e in enc])
+    per = [decode_postings(*e, len(b[0])) for e, b in zip(enc, blocks)]
+    assert block.tolist() == [j for j, b in enumerate(blocks) for _ in b[0]]
+    assert ids.tolist() == [int(v) for p in per for v in p[0]]
+    assert tfs.tolist() == [int(v) for p in per for v in p[1]]
+    assert dls.tolist() == [int(v) for p in per for v in p[2]]
+    starts = np.cumsum([0] + [len(b[0]) for b in blocks])[:-1]
+    assert list(zip(*encode_blocks(starts, ids, tfs, dls))) == enc
+    # a doc_id-only decode skips the tf/dl buffers
+    _, only_ids, no_tfs, no_dls = decode_blocks(
+        [len(b[0]) for b in blocks], [e[0] for e in enc])
+    assert only_ids.tolist() == ids.tolist() and no_tfs is None and no_dls is None
+
+
+def test_in_ranges_overlapping_and_unsorted():
+    ids = np.arange(25)
+    mask = in_ranges(ids, [(10, 19), (3, 5), (12, 13), (0, 1), (24, 24)])
+    exp = {0, 1, 3, 4, 5, 24} | set(range(10, 20))
+    assert [int(i) for i in ids[mask]] == sorted(exp)
+    assert not in_ranges(ids, ()).any()

@@ -17,15 +17,20 @@ from easy_solr4files_index_spark.operators.maintenance import (
     append_docs_physical, compact_index, delete_repo_physical,
     upsert_repos_physical)
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search_blockmax, search_budgeted
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
 QUERY = "parse index license"
 
 
-def _listing(idx, text=QUERY, prune=True):
-    rows = (search_blockmax(idx, text, k=10 ** 6, prune=prune)
-            .select("repo", "path", "score").collect())
+def _listing(idx, text=QUERY, budgeted=False):
+    if budgeted:
+        page, partial = search_budgeted(idx, text, k=10 ** 6,
+                                        time_allowed_ms=1e9)
+        assert partial is False
+    else:
+        page = search_blockmax(idx, text, k=10 ** 6)
+    rows = page.select("repo", "path", "score").collect()
     return sorted((r["repo"], r["path"], r["score"]) for r in rows)
 
 
@@ -47,8 +52,9 @@ def test_delete_matches_fresh_build(spark, corpus, tmp_path_factory):
     fresh = open_index(spark, d_fresh)
 
     assert _listing(idx) == _listing(fresh)
-    # pruned and exhaustive agree on the tombstoned index too
-    assert _listing(idx, prune=True) == _listing(idx, prune=False)
+    # the budgeted block-max plan and the one-pass plan agree on the
+    # tombstoned index too
+    assert _listing(idx, budgeted=True) == _listing(idx)
     # deleted repo is gone from the store view and from match-all
     assert idx.docs_store.filter(F.col("repo") == repo).count() == 0
 
@@ -105,7 +111,7 @@ def test_append_new_repo_and_compact(spark, corpus, tmp_path_factory):
     assert not compacted.tombstones
     assert not os.path.exists(os.path.join(d_inc, "_termstats_delta"))
     assert _listing(compacted) == listing_del
-    assert _listing(compacted, prune=True) == _listing(compacted, prune=False)
+    assert _listing(compacted, budgeted=True) == _listing(compacted)
 
 
 def test_delete_then_delete_is_idempotent_safe(spark, corpus, tmp_path_factory):
@@ -170,7 +176,7 @@ def test_auto_compact_triggers_and_bounds_tombstones(spark, corpus,
     write_index(spark, corpus.filter(~F.col("repo").isin(gone)), d_fresh,
                 lineage_groups=1)
     assert _listing(idx) == _listing(open_index(spark, d_fresh))
-    assert _listing(idx, prune=True) == _listing(idx, prune=False)
+    assert _listing(idx, budgeted=True) == _listing(idx)
 
 
 def test_compact_generation_swap_and_crash_window(spark, corpus,
@@ -245,9 +251,9 @@ def test_no_orphaned_persistent_rdds_after_release(spark, corpus, tmp_path,
                                                    monkeypatch):
     """Judge r2 #4 'Done' check: a build + query cycle leaves the
     session's persistent-RDD map exactly as it found it. write_index
-    releases its own caches, and both query paths that persist() — the
-    block-max pruned plan (its pruned blocks) and search_with_found (its
-    scored stream) — release them in their finally blocks."""
+    releases its own caches, and the query path that persist()s —
+    search_with_found (its scored stream) — releases it in its finally
+    block; the one-pass and budgeted block-max paths persist nothing."""
     from easy_solr4files_index_spark.operators.index_build import IndexConfig
     from easy_solr4files_index_spark.operators.wand import search_with_found
 
@@ -255,7 +261,7 @@ def test_no_orphaned_persistent_rdds_after_release(spark, corpus, tmp_path,
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     d = str(tmp_path / "index")
     # 60 doc-range buckets: more than the hot set P=32 of a k=3 query,
-    # so the pruned plan runs its persisted two-phase scoring
+    # so the budgeted plan runs its two phases
     write_index(spark, corpus, d, IndexConfig(bucket_span=4, term_buckets=4),
                 lineage_groups=1)
     idx = open_index(spark, d)
@@ -268,12 +274,13 @@ def test_no_orphaned_persistent_rdds_after_release(spark, corpus, tmp_path,
         return real_persist(self, *args, **kwargs)
 
     monkeypatch.setattr(type(corpus), "persist", spy)
-    assert search_blockmax(idx, QUERY, k=3, prune=True).count() == 3
-    n_pruned = len(persisted)
+    assert search_blockmax(idx, QUERY, k=3).count() == 3
+    page, partial = search_budgeted(idx, QUERY, k=3, time_allowed_ms=1e9)
+    assert page.count() == 3 and partial is False
+    assert not persisted, "a block-max query path persisted"
     _, found = search_with_found(idx, QUERY, k=3)
     assert found > 3
-    assert n_pruned >= 1 and len(persisted) > n_pruned, \
-        "a query path under test did not persist"
+    assert persisted, "search_with_found did not persist"
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after == before, f"leaked persistent RDDs: {before} -> {after}"
 

@@ -1,5 +1,5 @@
-"""Physical index: encode/write/load roundtrip, block-max WAND ==
-exhaustive == numpy oracle, metrics/lineage invariants, kill/resume
+"""Physical index: encode/write/load roundtrip, bucket-local top-k ==
+budgeted block-max == numpy oracle, metrics/lineage invariants, kill/resume
 (SURVEY.md §5.2.3-5.2.4)."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ import pytest
 from easy_solr4files_index_spark.functions.codec import decode_postings
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search_blockmax, search_budgeted
 from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
@@ -50,19 +50,28 @@ def test_wand_rank_identical(built, text, k, skip, filters):
     assert [g["score"] for g in got] == pytest.approx([e["score"] for e in exp], rel=1e-9)
 
 
+def _budgeted(pidx, text, k, skip=0):
+    """The block-max plan (UB job, phase A, phase B) with a budget it
+    never exhausts: it must return the one-pass page exactly."""
+    page, partial = search_budgeted(pidx, text, k=k, skip=skip,
+                                    time_allowed_ms=1e9, round_score=None)
+    assert partial is False
+    return page.collect()
+
+
 @pytest.mark.parametrize("text,k", [("parse merge token", 10), ("license", 25)])
 def test_prune_equals_exhaustive(built, text, k):
     pidx, *_ = built
-    a = search_blockmax(pidx, text, k=k, prune=True, round_score=None).collect()
-    b = search_blockmax(pidx, text, k=k, prune=False, round_score=None).collect()
+    a = _budgeted(pidx, text, k)
+    b = search_blockmax(pidx, text, k=k, round_score=None).collect()
     assert [(r["doc_id"], r["score"]) for r in a] == [(r["doc_id"], r["score"]) for r in b]
 
 
 @pytest.fixture(scope="module")
 def built_many_buckets(spark, tmp_path_factory):
     """bucket_span=8 over 600 docs -> 75 buckets: with k<=5 the hot set
-    P=32 < 75, so phase-B pruning GENUINELY engages (the n_buckets<=P
-    fast path must not swallow these cases)."""
+    P=32 < 75, so the budgeted plan's phase-B pruning GENUINELY engages
+    (its every-bucket-is-hot shortcut must not swallow these cases)."""
     cfg = IndexConfig(bucket_span=8, term_buckets=8)
     docs = synth_code_docs(spark, n_docs=600, seed=41)
     index_dir = str(tmp_path_factory.mktemp("ftsmb") / "index")
@@ -73,32 +82,21 @@ def built_many_buckets(spark, tmp_path_factory):
     return pidx, oracle
 
 
-@pytest.fixture
-def force_prune(monkeypatch):
-    """Pin the prune cutover factor to 1 so the two-phase pruned plan
-    engages on these deliberately small fixtures (the default factor 4
-    keeps small indexes on the cheaper one-job exhaustive plan)."""
-    from easy_solr4files_index_spark.operators import wand
-    monkeypatch.setattr(wand, "_PRUNE_MIN_BUCKET_FACTOR", 1)
-
-
 @pytest.mark.parametrize("text,k,skip", [
     ("parse", 5, 0), ("license", 5, 0), ("parse merge token", 3, 0),
     ("buildIndex cache", 5, 2), ("license merge", 4, 0),
 ])
-def test_real_pruning_rank_identical(built_many_buckets, force_prune, text, k, skip):
+def test_real_pruning_rank_identical(built_many_buckets, text, k, skip):
     pidx, oracle = built_many_buckets
-    a = search_blockmax(pidx, text, k=k, skip=skip, prune=True,
-                        round_score=None).collect()
-    b = search_blockmax(pidx, text, k=k, skip=skip, prune=False,
-                        round_score=None).collect()
+    a = _budgeted(pidx, text, k, skip)
+    b = search_blockmax(pidx, text, k=k, skip=skip, round_score=None).collect()
     assert [(r["doc_id"], r["score"]) for r in a] == \
         [(r["doc_id"], r["score"]) for r in b], text
     exp = oracle_search(oracle, text, k=k, skip=skip)
     assert [r["doc_id"] for r in a] == [e["doc_id"] for e in exp], text
 
 
-def test_prune_tie_at_tau_keeps_lower_docid(spark, tmp_path, force_prune):
+def test_prune_tie_at_tau_keeps_lower_docid(spark, tmp_path):
     """Regression for the ub >= tau fix: docs with IDENTICAL (tf, dl)
     tie exactly on score; a tied doc in a pruned bucket whose doc_id is
     lower than the k-th hot-phase doc must still win the tie-break."""
@@ -114,8 +112,8 @@ def test_prune_tie_at_tau_keeps_lower_docid(spark, tmp_path, force_prune):
     write_index(spark, docs, d, cfg, lineage_groups=1)
     pidx = open_index(spark, d)
     assert pidx.n_buckets > 32
-    a = search_blockmax(pidx, "alpha", k=4, prune=True, round_score=None).collect()
-    b = search_blockmax(pidx, "alpha", k=4, prune=False, round_score=None).collect()
+    a = _budgeted(pidx, "alpha", 4)
+    b = search_blockmax(pidx, "alpha", k=4, round_score=None).collect()
     assert [(r["doc_id"], r["score"]) for r in a] == \
         [(r["doc_id"], r["score"]) for r in b]
     # tie-break is doc_id asc among equal scores
@@ -239,13 +237,11 @@ def test_search_envelope_physical_shape(built):
         len(env["fileitems"]) == 5
 
 
-def test_search_budgeted_partial_and_complete(built_many_buckets, force_prune):
+def test_search_budgeted_partial_and_complete(built_many_buckets):
     """T3 timeAllowed (SearchServlet.scala:97): a zero budget skips the
     completion pass and flags partial=True with the exact top-k over the
     hot subset; an ample budget returns the normal exact answer with
     partial=False."""
-    from easy_solr4files_index_spark.operators.wand import search_budgeted
-
     pidx, oracle = built_many_buckets
     text, k = "license merge", 4
 
@@ -271,8 +267,6 @@ def test_search_budgeted_partial_and_complete(built_many_buckets, force_prune):
 def test_search_budgeted_small_index_completes(built):
     """Below the hot-set size the plan is exhaustive in one pass — the
     budget can never split it, so partial is always False."""
-    from easy_solr4files_index_spark.operators.wand import search_budgeted
-
     pidx, *_ = built
     page, partial = search_budgeted(pidx, "parse", k=5, time_allowed_ms=0.0,
                                     round_score=None)
