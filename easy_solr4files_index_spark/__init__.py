@@ -11,3 +11,9 @@ top-k scoring.
 """
 
 __version__ = "0.1.0"
+
+# skip the per-task zip directory re-reads in PySpark workers (zipguard.py)
+from . import zipguard as _zipguard
+
+if _zipguard.in_pyspark_worker():
+    _zipguard.install_zip_guard()

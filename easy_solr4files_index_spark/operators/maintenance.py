@@ -458,7 +458,9 @@ def upsert_repos_physical(spark: SparkSession, index_dir: str,
     pruned-ranges scan starts immediately. Omitted ⇒ discovered with a
     distinct() over the batch (the streaming sink's path, where batch
     composition is unknown). The set must cover every repo present in
-    ``new_docs``; extra names cost one no-op range lookup each."""
+    ``new_docs``, else ValueError before any file lands (checked in the
+    append's density-check job); extra names cost one no-op range lookup
+    each."""
     t0 = time.time()
     idx = open_index(spark, index_dir)
     cfg = idx.config
@@ -531,7 +533,14 @@ def upsert_repos_physical(spark: SparkSession, index_dir: str,
         from .postings import check_dense_ids
         try:
             stats = check_dense_ids(enriched, offset=base,
-                                    label="append segment", with_stats=True)
+                                    label="append segment", with_stats=True,
+                                    repos=repos)
+            if stats.get("outside_repos"):
+                # the delete covers only the hinted repos: a batch row of
+                # another repo would land beside its live old copy
+                raise ValueError(
+                    f"upsert batch has {stats['outside_repos']} rows whose "
+                    f"repo is not in repos={sorted(set(repos))}")
         except Exception:
             enriched.unpersist()
             raise

@@ -47,6 +47,7 @@ EasySolr4filesIndexApp.scala:54-78).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -171,7 +172,8 @@ def _dense_expected(n: int) -> tuple[int, int]:
 
 
 def check_dense_ids(df: DataFrame, offset: int = 0, label: str = "build",
-                    with_stats: bool = False) -> dict | None:
+                    with_stats: bool = False,
+                    repos: list[str] | None = None) -> dict | None:
     """Assert df.doc_id is exactly the dense series offset..offset+n-1.
 
     Guards assign_doc_ids' two-pass determinism precondition: a
@@ -180,7 +182,9 @@ def check_dense_ids(df: DataFrame, offset: int = 0, label: str = "build",
     append path BEFORE any file lands (the df is the persisted segment,
     so this action doubles as cache population the write needs anyway);
     write_index's fresh-build twin rides the docs_store write as an
-    Observation with the same aggregates."""
+    Observation with the same aggregates. ``repos`` (with_stats only)
+    adds ``outside_repos`` to the stats: the rows whose repo is not in
+    that list."""
     cols = [(F.col("doc_id") - F.lit(int(offset))).cast("long").alias("d")]
     aggs = [F.count(F.lit(1)).alias("n"), F.min("d").alias("mn"),
             F.max("d").alias("mx"),
@@ -193,10 +197,16 @@ def check_dense_ids(df: DataFrame, offset: int = 0, label: str = "build",
         cols += [F.col("dl"), F.col("meta_only")]
         aggs += [F.sum("dl").alias("dls"),
                  F.sum(F.col("meta_only").cast("long")).alias("deg")]
+        if repos is not None:
+            cols.append(F.col("repo").isin(list(repos)).alias("in_repos"))
+            aggs.append(F.count_if(~F.coalesce("in_repos", F.lit(False)))
+                        .alias("outside"))
     row = df.select(*cols).agg(*aggs).collect()[0]
     n = int(row["n"] or 0)
     stats = ({"n": n, "dl_sum": int(row["dls"] or 0),
               "degraded": int(row["deg"] or 0)} if with_stats else None)
+    if with_stats and repos is not None:
+        stats["outside_repos"] = int(row["outside"] or 0)
     if n == 0:
         return stats
     exp_summod, exp_xor = _dense_expected(n)
@@ -651,11 +661,14 @@ class PhysicalIndex:
             cond = cond & ~((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
         return cond
 
-    @property
+    @functools.cached_property
     def docs_store(self) -> DataFrame:
         # the stored token stream (build/maintenance input) is not part
         # of the query-facing store schema; dropping it here keeps
-        # filterable-field validation and match-all projections unchanged
+        # filterable-field validation and match-all projections unchanged.
+        # Memoized: tombstones are fixed per reader, every query reads
+        # this frame up to three times, and the frame caches its schema
+        # (fq validation reads .columns)
         df = self._read("docs_store").drop("tokens")
         if self.tombstones:
             df = df.filter(self._not_tombstoned())

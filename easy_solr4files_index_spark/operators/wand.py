@@ -311,7 +311,8 @@ def _prepare(index: PhysicalIndex, text: str | None, k: int, skip: int,
     k = k if isinstance(k, int) and k >= 1 else 10
     skip = skip if isinstance(skip, int) and skip >= 0 else 0
     validate_filters(filters, index.docs_store.columns)
-    store = index.docs_store.filter(_filters_expr(filters))
+    store = (index.docs_store.filter(_filters_expr(filters)) if filters
+             else index.docs_store)
     if text is None:
         return _Query(k, skip, store, "all", [], [], None)
     clauses = _expand_clause_synonyms(parse_dismax(text, cfg.stopwords),

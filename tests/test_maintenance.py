@@ -18,6 +18,7 @@ from easy_solr4files_index_spark.operators.maintenance import (
     upsert_repos_physical)
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
 from easy_solr4files_index_spark.operators.wand import search_blockmax, search_budgeted
+from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
 QUERY = "parse index license"
@@ -457,3 +458,34 @@ def test_upsert_with_repos_hint_matches_discovery(spark, corpus,
     assert idx_a.n_docs == idx_b.n_docs
     assert abs(idx_a.avgdl - idx_b.avgdl) < 1e-12
     assert idx_a.tombstones == idx_b.tombstones
+
+
+def test_upsert_rejects_rows_outside_repos_hint(spark, corpus,
+                                                tmp_path_factory):
+    """A batch row whose repo is not in repos= would be appended beside
+    its live old copy (the delete covers only the hinted repos): the
+    upsert raises before any file lands, and the index still scores
+    exactly like the pre-op corpus."""
+    d = str(tmp_path_factory.mktemp("hint_bad"))
+    write_index(spark, corpus, d, lineage_groups=1)
+
+    def files():
+        return sorted(os.path.relpath(p, d) for p in
+                      glob.glob(os.path.join(d, "**"), recursive=True))
+
+    before = files()
+    mod = (corpus.filter(F.col("repo").isin("org1/proj0", "org1/proj1"))
+           .withColumn("content", F.concat("content", F.lit(" hintToken"))))
+    with pytest.raises(ValueError, match="not in repos="):
+        upsert_repos_physical(spark, d, mod, auto_compact=False,
+                              repos=["org1/proj1"])
+    assert files() == before
+
+    idx = open_index(spark, d)
+    oracle = build_oracle([r.asDict() for r in corpus.collect()])
+    for text in (QUERY, "hintToken"):
+        got = search_blockmax(idx, text, k=10 ** 6, round_score=None).collect()
+        exp = oracle_search(oracle, text, k=10 ** 6)
+        assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp], text
+        assert ([g["score"] for g in got]
+                == pytest.approx([e["score"] for e in exp], rel=1e-9)), text
