@@ -907,12 +907,10 @@ def _q_build_metrics(spark, sf_dir):
     and posting count aggregated from the per-partition metrics table,
     and the E2 degraded-doc count. postings_bytes/skew_factor depend on
     the physical block encoding — pytest-gated in test_physical_index."""
-    import json
-    import os
+    from easy_solr4files_index_spark.operators.postings import _read_globals
 
     idx = _index(spark, sf_dir)
-    with open(os.path.join(idx.index_dir, "globals.json")) as fh:
-        meta = json.load(fh)
+    meta = _read_globals(idx.index_dir)
     return (idx.metrics.agg(
                 F.sum("terms").cast("long").alias("n_terms"),
                 F.sum("rows_indexed").cast("long").alias("postings_rows"))

@@ -598,15 +598,10 @@ def write_index(spark: SparkSession, docs: DataFrame, index_dir: str,
             # E2 feedback summary: docs indexed metadata-only because
             # content contributed no searchable text (package.scala:110-118)
             "degraded_docs": degraded,
-            "next_base": ((n_docs + config.bucket_span - 1)
-                          // config.bucket_span) * config.bucket_span}
-    # globals.json is the commit point (Solr-commit analog, S11): it is
-    # written LAST and swapped in atomically — open_index fails cleanly on
-    # a partial build, and resume picks up from the lineage table
-    tmp = os.path.join(index_dir, "globals.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(index_dir, "globals.json"))
+            "next_base": _round_up(n_docs, config.bucket_span)}
+    # written LAST: open_index fails cleanly on a partial build, and
+    # resume picks up from the lineage table
+    _commit_globals(index_dir, meta)
     # collapse cumulative marks into named per-stage deltas ("postings
     # write g0" + "postings group 0" fold into one "postings" bucket)
     stage_sec: dict[str, float] = {}
@@ -735,9 +730,40 @@ class PhysicalIndex:
         return self._read("_lineage")
 
 
-def open_index(spark: SparkSession, index_dir: str) -> PhysicalIndex:
+def _read_globals(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "globals.json")) as fh:
-        meta = json.load(fh)
+        return json.load(fh)
+
+
+def _commit_globals(index_dir: str, meta: dict) -> None:
+    """The commit point of every index write (Solr-commit analog, S11):
+    a build, a mutation (maintenance._mutate) or a compaction becomes
+    visible when globals.json is swapped in atomically."""
+    tmp = os.path.join(index_dir, "globals.json.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    os.replace(tmp, os.path.join(index_dir, "globals.json"))
+
+
+def _round_up(n: int, span: int) -> int:
+    return ((n + span - 1) // span) * span
+
+
+def _next_base(meta: dict) -> int:
+    """First doc_id of the next appended segment: bucket-aligned past
+    every stored doc (indexes written before ``next_base`` was recorded
+    derive it from n_docs)."""
+    return int(meta.get("next_base",
+                        _round_up(int(meta["n_docs"]), int(meta["bucket_span"]))))
+
+
+def _reader(spark: SparkSession, index_dir: str, meta: dict,
+            tombstones: tuple[tuple[int, int], ...] | None = None
+            ) -> PhysicalIndex:
+    """The one PhysicalIndex constructor: the reader of the commit record
+    ``meta``. ``tombstones`` default to the generation's _tombstones
+    dataset (one job when it exists); a mutation passes the merged list
+    it just committed instead of reading it back."""
     config = IndexConfig(k1=meta["k1"], b=meta["b"],
                          stopwords=tuple(meta["stopwords"]),
                          include_path_tokens=meta["include_path_tokens"],
@@ -746,22 +772,23 @@ def open_index(spark: SparkSession, index_dir: str) -> PhysicalIndex:
                          index_positions=bool(meta.get("index_positions", False)),
                          catenate_words=bool(meta.get("catenate_words", False)))
     generation = int(meta.get("generation", 0))
-    tomb_path = os.path.join(index_dir, gen_name("_tombstones", generation))
-    tombstones: tuple[tuple[int, int], ...] = ()
-    if os.path.exists(tomb_path):
-        rows = spark.read.parquet(tomb_path).collect()
-        tombstones = merge_ranges((r["lo"], r["hi"]) for r in rows)
-    next_base = meta.get(
-        "next_base",
-        ((meta["n_docs"] + meta["bucket_span"] - 1) // meta["bucket_span"])
-        * meta["bucket_span"])
+    if tombstones is None:
+        tomb_path = os.path.join(index_dir, gen_name("_tombstones", generation))
+        tombstones = ()
+        if os.path.exists(tomb_path):
+            rows = spark.read.parquet(tomb_path).collect()
+            tombstones = merge_ranges((r["lo"], r["hi"]) for r in rows)
     return PhysicalIndex(spark, index_dir, config, meta["n_docs"], meta["avgdl"],
                          min_encode_avgdl=meta.get("min_encode_avgdl", meta["avgdl"]),
                          tombstones=tombstones,
-                         n_buckets=next_base // meta["bucket_span"],
+                         n_buckets=_next_base(meta) // meta["bucket_span"],
                          generation=generation,
-                         has_positions=bool(meta.get("index_positions", False)),
+                         has_positions=config.index_positions,
                          degraded_docs=int(meta.get("degraded_docs", 0)))
+
+
+def open_index(spark: SparkSession, index_dir: str) -> PhysicalIndex:
+    return _reader(spark, index_dir, _read_globals(index_dir))
 
 
 def merge_ranges(ranges) -> tuple[tuple[int, int], ...]:

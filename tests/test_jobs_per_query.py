@@ -1,13 +1,18 @@
 """Spark jobs per query, pinned per family on a many-bucket index with a
 warm reader (idf memoized, plans compiled once): a plan change that adds
 a job — a broadcast, an exchange, a range sort, a second pass — fails
-here before it shows up as latency."""
+here before it shows up as latency. The same counter pins a one-repo
+delete and upsert, each on its own copy of the index."""
 
 from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
+from easy_solr4files_index_spark.operators.maintenance import (
+    delete_repo_physical, upsert_repos_physical)
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
 from easy_solr4files_index_spark.operators.wand import search_blockmax
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
@@ -24,10 +29,14 @@ FAMILIES = [
 ]
 
 
+def _docs(spark):
+    return synth_code_docs(spark, n_docs=600, seed=41)
+
+
 @pytest.fixture(scope="module")
 def many_buckets(spark, tmp_path_factory):
     """600 docs at bucket_span=8: 75 doc-range buckets."""
-    docs = synth_code_docs(spark, n_docs=600, seed=41)
+    docs = _docs(spark)
     d = str(tmp_path_factory.mktemp("jobs") / "index")
     write_index(spark, docs, d, IndexConfig(bucket_span=8, term_buckets=4),
                 lineage_groups=1)
@@ -60,3 +69,31 @@ def test_jobs_per_query(spark, many_buckets, family, text, k, skip, filters,
     assert jobs <= limit, f"{family}: {jobs} jobs > {limit}"
     if family == "all":
         assert jobs == 1
+
+
+# (op, max jobs): a one-repo delete, and a one-repo upsert with repo
+# discovery (no repos= hint). The limits are the counts measured while
+# delete and upsert still had separate implementations; the concurrent
+# phases' jobs run in the caller's job group, so the counter sees them.
+MUTATIONS = [("delete", 7), ("upsert", 27)]
+
+
+@pytest.mark.parametrize("op,limit", MUTATIONS, ids=[m[0] for m in MUTATIONS])
+def test_jobs_per_mutation(spark, many_buckets, tmp_path, op, limit):
+    import shutil
+
+    d = str(tmp_path / "index")
+    shutil.copytree(many_buckets.index_dir, d)
+    repo = "org1/proj0"
+    if op == "delete":
+        def run():
+            delete_repo_physical(spark, d, repo)
+    else:
+        batch = (_docs(spark).filter(F.col("repo") == repo)
+                 .withColumn("content", F.concat("content", F.lit(" zz"))))
+
+        def run():
+            upsert_repos_physical(spark, d, batch)
+
+    jobs = _jobs(spark, f"jobs-per-mutation-{op}", run)
+    assert jobs <= limit, f"{op}: {jobs} jobs > {limit}"

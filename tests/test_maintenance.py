@@ -1,5 +1,5 @@
 """Physical incremental maintenance (operators/maintenance.py):
-delete/append/upsert must reproduce a fresh build of the same corpus
+delete/upsert must reproduce a fresh build of the same corpus
 (scores + keysets), touch only the affected repo's data, and compact
 back to a delta-free index — the reference's delete-one-bag +
 reindex-one-bag cycle (EasySolr4filesIndexApp.scala:48-51) made
@@ -14,12 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from easy_solr4files_index_spark.operators.maintenance import (
-    append_docs_physical, compact_index, delete_repo_physical,
+    compact_index, delete_path_prefix_physical, delete_repo_physical,
     upsert_repos_physical)
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
 from easy_solr4files_index_spark.operators.wand import search_blockmax, search_budgeted
 from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
-from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
+from easy_solr4files_index_spark.sources.docs_source import (DOCS_SCHEMA,
+                                                            synth_code_docs)
 
 QUERY = "parse index license"
 
@@ -96,7 +97,7 @@ def test_append_new_repo_and_compact(spark, corpus, tmp_path_factory):
     write_index(spark, old, d_inc, lineage_groups=1)
     new = (corpus.filter(F.col("repo") == "org5/proj2")
            .withColumn("repo", F.lit("zzz/newrepo")))
-    idx = append_docs_physical(spark, d_inc, new)
+    idx = upsert_repos_physical(spark, d_inc, new)  # a pure append
     listing_before = _listing(idx)
     assert any(r == "zzz/newrepo" for r, _, _ in listing_before)
 
@@ -489,3 +490,143 @@ def test_upsert_rejects_rows_outside_repos_hint(spark, corpus,
         assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp], text
         assert ([g["score"] for g in got]
                 == pytest.approx([e["score"] for e in exp], rel=1e-9)), text
+
+
+# ---------------------------------------------- what each mutation commits
+
+META_ONLY_REPO = "org1/proj0"
+
+
+def _meta_only_doc(spark, repo, path):
+    return spark.createDataFrame([(repo, path, "c0", "text", None)],
+                                 DOCS_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def small_docs(spark):
+    """60 synthetic docs plus one metadata-only doc (content None)."""
+    return (synth_code_docs(spark, n_docs=60, seed=3)
+            .unionByName(_meta_only_doc(spark, META_ONLY_REPO,
+                                        "docs/EMPTY.md")))
+
+
+@pytest.fixture(scope="module")
+def small_index(spark, small_docs, tmp_path_factory):
+    from easy_solr4files_index_spark.operators.index_build import IndexConfig
+
+    d = str(tmp_path_factory.mktemp("small") / "index")
+    write_index(spark, small_docs, d, IndexConfig(term_buckets=4),
+                lineage_groups=1)
+    return d
+
+
+MUTATIONS = {
+    "delete_repo": lambda spark, d, docs: delete_repo_physical(
+        spark, d, META_ONLY_REPO, auto_compact=False),
+    "delete_prefix": lambda spark, d, docs: delete_path_prefix_physical(
+        spark, d, "org0/proj0", "src/mod0/File001", auto_compact=False),
+    "upsert_existing": lambda spark, d, docs: upsert_repos_physical(
+        spark, d, docs.filter(F.col("repo") == "org2/proj1")
+        .withColumn("content", F.concat("content", F.lit(" refreshedToken"))),
+        auto_compact=False),
+    "upsert_new": lambda spark, d, docs: upsert_repos_physical(
+        spark, d, docs.filter(F.col("repo") == "org3/proj2")
+        .withColumn("repo", F.lit("zzz/newrepo"))
+        .unionByName(_meta_only_doc(spark, "zzz/newrepo", "docs/EMPTY.md")),
+        auto_compact=False),
+}
+
+
+@pytest.fixture(scope="module")
+def mutated(spark, small_docs, small_index, tmp_path_factory):
+    """case -> (returned reader, index dir): each mutation runs once, on
+    its own copy of ``small_index``."""
+    import shutil
+
+    done = {}
+
+    def run(case):
+        if case not in done:
+            d = str(tmp_path_factory.mktemp(case) / "index")
+            shutil.copytree(small_index, d)
+            done[case] = (MUTATIONS[case](spark, d, small_docs), d)
+        return done[case]
+
+    return run
+
+
+@pytest.mark.parametrize("case", list(MUTATIONS))
+def test_mutation_reader_equals_open_index(spark, mutated, case):
+    """The reader a mutation returns is the reader open_index builds from
+    what it committed (degraded_docs included: the index holds
+    metadata-only docs)."""
+    import dataclasses
+
+    from easy_solr4files_index_spark.operators.postings import PhysicalIndex
+
+    got, d = mutated(case)
+    reopened = open_index(spark, d)
+    for f in dataclasses.fields(PhysicalIndex):
+        if f.name != "spark":
+            assert getattr(got, f.name) == getattr(reopened, f.name), f.name
+
+
+# globals.json, lineage stage names and tombstone labels after each
+# mutation of ``small_index`` (the build itself counts two metadata-only
+# docs: the content-None one and a synthetic doc with empty content)
+_BUILD_STAGES = ["docs_store", "positions", "postings", "termstats"]
+PINNED = {
+    "delete_repo": {
+        "n_docs": 56, "dl_sum": 6322, "avgdl": 112.89285714285714,
+        "segments": [[0, 4096]], "next_base": 4096,
+        "min_encode_avgdl": 113.27868852459017, "degraded_docs": 2,
+        "generation": None,
+        "stages": sorted(["delete:org1/proj0"] + _BUILD_STAGES),
+        "tombstones": ["org1/proj0"]},
+    "delete_prefix": {
+        "n_docs": 60, "dl_sum": 6872, "avgdl": 114.53333333333333,
+        "segments": [[0, 4096]], "next_base": 4096,
+        "min_encode_avgdl": 113.27868852459017, "degraded_docs": 2,
+        "generation": None,
+        "stages": sorted(["delete:org0/proj0/src/mod0/File001*"]
+                         + _BUILD_STAGES),
+        "tombstones": ["org0/proj0/src/mod0/File001*"]},
+    "upsert_existing": {
+        "n_docs": 61, "dl_sum": 6916, "avgdl": 113.37704918032787,
+        "segments": [[0, 4096], [4096, 4099]], "next_base": 8192,
+        "min_encode_avgdl": 113.27868852459017, "degraded_docs": 2,
+        "generation": None,
+        "stages": sorted(["append", "delete:org2/proj1"] + _BUILD_STAGES),
+        "tombstones": ["org2/proj1"]},
+    "upsert_new": {
+        "n_docs": 65, "dl_sum": 7307, "avgdl": 112.41538461538461,
+        "segments": [[0, 4096], [4096, 4100]], "next_base": 8192,
+        "min_encode_avgdl": 112.41538461538461, "degraded_docs": 3,
+        "generation": None,
+        "stages": sorted(["append"] + _BUILD_STAGES),
+        "tombstones": []},
+}
+
+
+@pytest.mark.parametrize("case", list(MUTATIONS))
+def test_mutation_commit_pinned(spark, mutated, case):
+    import json
+
+    _, d = mutated(case)
+    with open(os.path.join(d, "globals.json")) as fh:
+        meta = json.load(fh)
+    got = {k: meta.get(k) for k in (
+        "n_docs", "dl_sum", "avgdl", "segments", "next_base",
+        "min_encode_avgdl", "degraded_docs", "generation")}
+    got["stages"] = sorted(r["stage"] for r in
+                           spark.read.parquet(os.path.join(d, "_lineage"))
+                           .select("stage").collect())
+    tomb = os.path.join(d, "_tombstones")
+    got["tombstones"] = (sorted(r["repo"] for r in spark.read.parquet(tomb)
+                                .select("repo").collect())
+                         if os.path.exists(tomb) else [])
+    exp = PINNED[case]
+    for key in ("avgdl", "min_encode_avgdl"):
+        assert got.pop(key) == pytest.approx(exp[key], rel=1e-12), key
+    assert got == {k: v for k, v in exp.items()
+                   if k not in ("avgdl", "min_encode_avgdl")}
