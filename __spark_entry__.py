@@ -24,8 +24,8 @@ from easy_solr4files_index_spark.operators.postings import (PhysicalIndex,
                                                             open_index,
                                                             write_index)
 from easy_solr4files_index_spark.operators.query import access_filter
-from easy_solr4files_index_spark.operators.wand import (search_blockmax,
-                                                        search_with_found)
+from easy_solr4files_index_spark.operators.wand import (_PAGE_SCHEMA, envelope,
+                                                        search)
 from easy_solr4files_index_spark.oracle import duckdb_sql as osql
 from easy_solr4files_index_spark.sources.docs_source import ingest_acl_filter, load_docs
 
@@ -86,8 +86,8 @@ def _index(spark: SparkSession, sf_dir: str,
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: multi-term BM25 top-k over sf0.001."""
-    return search_blockmax(_index(spark, "/root/testdata/sf0.001"),
-                           "spark join merge", k=10)
+    return search(_index(spark, "/root/testdata/sf0.001"),
+                  "spark join merge", k=10).page
 
 
 # ---------------------------------------------------------------- queries
@@ -120,8 +120,8 @@ def _mk_search(params):
     text, k, skip, filters = params
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return search_blockmax(_index(spark, sf_dir), text, k=k, skip=skip,
-                               filters=filters)
+        return search(_index(spark, sf_dir), text, k=k, skip=skip,
+                      filters=filters).page
 
     return run
 
@@ -150,7 +150,7 @@ def _q_sha256(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_topk_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return search_blockmax(_index(spark, sf_dir), "spark join merge", k=10)
+    return search(_index(spark, sf_dir), "spark join merge", k=10).page
 
 
 def _q_cached_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,10 +162,10 @@ def _q_cached_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from easy_solr4files_index_spark.operators.caches import SearcherCaches
 
     caches = SearcherCaches(_index(spark, sf_dir))
-    caches.search("spark join merge", k=10)           # populate
-    page = caches.search_df("spark join merge", k=10)  # LRU hit
+    caches.search("spark join merge", k=10)            # populate
+    rows, _ = caches.search("spark join merge", k=10)  # LRU hit
     assert caches.results.hits >= 1
-    return page
+    return spark.createDataFrame(rows, _PAGE_SCHEMA)
 
 
 def _index_maint(spark: SparkSession, sf_dir: str, mode: str):
@@ -199,7 +199,7 @@ def _q_delete_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
     N/avgdl/df shifts the delete causes). No doc_id column: tombstoned
     indexes keep id gaps; scores and keys are what must match."""
     idx = _index_maint(spark, sf_dir, "del")
-    return (search_blockmax(idx, "spark", k=100000)
+    return (search(idx, "spark", k=100000).page
             .select("repo", "path", "lang", "score"))
 
 
@@ -207,12 +207,12 @@ def _q_upsert_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full match listing after delete-before-insert of repo src1 with
     appended content — must equal a fresh build of the modified corpus."""
     idx = _index_maint(spark, sf_dir, "ups")
-    return (search_blockmax(idx, "spark updatedmarker", k=100000)
+    return (search(idx, "spark updatedmarker", k=100000).page
             .select("repo", "path", "lang", "score"))
 
 
 def _q_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return search_blockmax(_index(spark, sf_dir, "arrow"), "table scan", k=10)
+    return search(_index(spark, sf_dir, "arrow"), "table scan", k=10).page
 
 
 # metadata-side operator parity over the TPC-H-ish tables: the reference's
@@ -248,16 +248,16 @@ def _q_meta_vocab_join_abr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_topk_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 query-side synonym expansion: 'join' ORs in its synonym 'merge'
     (SynonymGraphFilter analog; empty map = reference default identity)."""
-    return search_blockmax(_index(spark, sf_dir), "join", k=10,
-                           synonyms={"join": ["merge"]})
+    return search(_index(spark, sf_dir), "join", k=10,
+                  synonyms={"join": ["merge"]}).page
 
 
 def _q_topk_synonyms_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 MULTI-WORD synonym entries (SynonymGraphFilter `a => b c`,
     schema.xml:520-525): the synonym string runs through the analyzer and
     every resulting term joins the dismax disjunction."""
-    return search_blockmax(_index(spark, sf_dir), "join", k=10,
-                           synonyms={"join": ["Table Scan"]})
+    return search(_index(spark, sf_dir), "join", k=10,
+                  synonyms={"join": ["Table Scan"]}).page
 
 
 def _q_topk_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,47 +266,47 @@ def _q_topk_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lucene BM25 phrase scoring). Reachable surface: SearchServlet.scala
     :79-88 passes user text unescaped into dismax, which keeps balanced
     quotes as operators."""
-    return search_blockmax(_index(spark, sf_dir), '"spark join" merge', k=10)
+    return search(_index(spark, sf_dir), '"spark join" merge', k=10).page
 
 
 def _q_topk_must(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 dismax `+` operator: required clause (Lucene MUST) — docs
     lacking 'spark' never match, 'join' stays optional scoring."""
-    return search_blockmax(_index(spark, sf_dir), "+spark join", k=10)
+    return search(_index(spark, sf_dir), "+spark join", k=10).page
 
 
 def _q_topk_prohibit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 dismax `-` operator: prohibited clause (Lucene MUST_NOT) —
     docs containing 'join' are excluded outright."""
-    return search_blockmax(_index(spark, sf_dir), "spark -join", k=10)
+    return search(_index(spark, sf_dir), "spark -join", k=10).page
 
 
 def _q_topk_boolean_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9+Q10 composed: required phrase + optional term + prohibited term
     in one dismax query."""
-    return search_blockmax(_index(spark, sf_dir), '+"spark join" merge -parse',
-                           k=10)
+    return search(_index(spark, sf_dir), '+"spark join" merge -parse',
+                  k=10).page
 
 
 def _q_numfound_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """numFound for a boolean/phrase query (the matched-set count the
     envelope always carries)."""
-    _, found = search_with_found(_index(spark, sf_dir),
-                                 '+"spark join" merge -parse')
+    found = search(_index(spark, sf_dir), '+"spark join" merge -parse',
+                   found=True).found
     return spark.createDataFrame([(found,)], "found long")
 
 
 def _q_phrase_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9: the positions/ dataset (term-bucket partition-pruned, Lucene
     .prx analog) scores the phrase."""
-    return search_blockmax(_index(spark, sf_dir),
-                           '+"spark join" merge -parse', k=10)
+    return search(_index(spark, sf_dir),
+                  '+"spark join" merge -parse', k=10).page
 
 
 def _q_numfound_physical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """numFound from a single scoring pass (search_with_found — Solr
+    """numFound from a single scoring pass (search(found=True) — Solr
     always returns found, Solr.scala:91-103)."""
-    _, found = search_with_found(_index(spark, sf_dir), "spark join")
+    found = search(_index(spark, sf_dir), "spark join", found=True).found
     return spark.createDataFrame([(found,)], "found long")
 
 
@@ -369,36 +369,36 @@ def _q_empty_value_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_access_anon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9 anonymous access fq: ANONYMOUS AND available<=NOW
     (SearchServlet.scala:106-111)."""
-    return search_blockmax(_index(spark, sf_dir), "spark join", k=10,
-                           filters=access_filter(None))
+    return search(_index(spark, sf_dir), "spark join", k=10,
+                  filters=access_filter(None)).page
 
 
 def _q_access_authed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10 authed access fq: cross-key OR (ANONYMOUS OR KNOWN OR
     depositor:user3) AND (available<=NOW OR depositor:user3)
     (SearchServlet.scala:112-118)."""
-    return search_blockmax(_index(spark, sf_dir), "spark join", k=10,
-                           filters=access_filter("user3"))
+    return search(_index(spark, sf_dir), "spark join", k=10,
+                  filters=access_filter("user3")).page
 
 
 def _q_ingest_acl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6: search over an index that never ingested accessible_to=NONE
     docs (EasySolr4filesIndexApp.scala:125-144)."""
-    return search_blockmax(_index(spark, sf_dir, "acl"), "table scan", k=10)
+    return search(_index(spark, sf_dir, "acl"), "table scan", k=10).page
 
 
 def _q_auth_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 + P10 end-to-end: index over the auth-info JOIN (NONE files
     never ingested), queried with the authed access filter — the joined
     owner/accessibleTo/dateAvailable columns are what the filter reads."""
-    return search_blockmax(_index(spark, sf_dir, "authjoin"), "spark join",
-                           k=10, filters=access_filter("user3"))
+    return search(_index(spark, sf_dir, "authjoin"), "spark join",
+                  k=10, filters=access_filter("user3")).page
 
 
 def _q_topk_nostop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 behavior-compat: empty stopword list (schema.xml:507) makes
     'the' a searchable term."""
-    return search_blockmax(_index(spark, sf_dir, "nostop"), "the spark", k=10)
+    return search(_index(spark, sf_dir, "nostop"), "the spark", k=10).page
 
 
 def _q_path_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,8 +684,8 @@ def _q_topk_catenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     catenation, mixed with a normal term — dl/avgdl/df all shift under
     the catenate chain, so the whole scoring pipeline is re-derived by
     the oracle with the same chain."""
-    return search_blockmax(_index(spark, sf_dir, "catenate"),
-                           "spark docs00000007txt", k=10)
+    return search(_index(spark, sf_dir, "catenate"),
+                  "spark docs00000007txt", k=10).page
 
 
 def _q_ann_batch(spark, sf_dir):
@@ -712,25 +712,31 @@ def _q_budgeted_full(spark, sf_dir):
     """T3 `timeAllowed` contract (SearchServlet.scala:97): with an
     effectively infinite budget the budgeted path must complete every
     phase and return the EXACT top-k (partial=False) — hash-matched
-    against the same BM25 oracle as search_blockmax. The partial path
-    (budget exhausted mid-plan) is gated in tests/test_query_surface.py."""
-    from easy_solr4files_index_spark.operators.wand import search_budgeted
-
-    page, partial = search_budgeted(_index(spark, sf_dir),
-                                    "spark join merge", k=10,
-                                    time_allowed_ms=1e12)
-    assert partial is False
-    return page
+    against the same BM25 oracle as the unbudgeted search. The partial
+    path (budget exhausted mid-plan) is gated in
+    tests/test_physical_index.py."""
+    res = search(_index(spark, sf_dir), "spark join merge", k=10,
+                 time_allowed_ms=1e12)
+    assert res.partial is False
+    return res.page
 
 
 def _q_envelope(spark, sf_dir):
     """S13 result-sink envelope as a relational result: the page rows
     carrying found/returned/time_allowed summary columns (Solr.scala:
-    91-103, api.yml:172-256) — the whole envelope under the oracle."""
-    from easy_solr4files_index_spark.operators.wand import search_envelope_df
-
-    return search_envelope_df(_index(spark, sf_dir),
-                              "spark join", k=10)
+    91-103, api.yml:172-256) — the whole envelope under the oracle. The
+    envelope's fileitems carry no doc_id, so it is joined back from the
+    stored fields by (repo, path)."""
+    idx = _index(spark, sf_dir)
+    env = envelope(idx, "spark join", k=10)
+    s = env["summary"]
+    items = spark.createDataFrame(
+        [(s["found"], s["returned"], s["time_allowed"], it["repo"],
+          it["path"], it["lang"], it["score"]) for it in env["fileitems"]],
+        "found long, returned long, time_allowed int, repo string, "
+        "path string, lang string, score double")
+    return items.join(idx.docs_store.select("doc_id", "repo", "path"),
+                      ["repo", "path"])
 
 
 def _q_ann_ivfpq_res(spark, sf_dir):

@@ -93,7 +93,7 @@ def run_scale_worker(corpus_path: str, cpus: int) -> dict:
     parquet corpus (generation is NOT part of the measured job)."""
     from easy_solr4files_index_spark.session import get_spark
     from easy_solr4files_index_spark.operators.postings import write_index, open_index
-    from easy_solr4files_index_spark.operators.wand import search_blockmax
+    from easy_solr4files_index_spark.operators.wand import search
 
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
     # 4x cores: AQE coalesces down as needed, but never below what keeps
@@ -118,13 +118,13 @@ def run_scale_worker(corpus_path: str, cpus: int) -> dict:
         build_s = time.perf_counter() - t0
 
         idx = open_index(spark, index_dir)
-        search_blockmax(idx, "def", k=5).collect()  # warm-up, unmeasured
+        search(idx, "def", k=5).page.collect()  # warm-up, unmeasured
         per_query, all_times = {}, []
         for name, (text, k, skip, filters) in SCALE_QUERIES.items():
             times = []
             for _ in range(2):
                 t0 = time.perf_counter()
-                search_blockmax(idx, text, k=k, skip=skip, filters=filters).collect()
+                search(idx, text, k=k, skip=skip, filters=filters).page.collect()
                 times.append(time.perf_counter() - t0)
             per_query[name] = round(min(times), 3)
             all_times += times

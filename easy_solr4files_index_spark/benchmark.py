@@ -51,7 +51,7 @@ def _sf_of(sf_dir: str) -> float:
 
 def run_suite(sf_dir: str, cpus: int) -> dict:
     from .operators.postings import open_index, write_index
-    from .operators.wand import search_blockmax
+    from .operators.wand import search
     from .session import get_spark
     from .sources.docs_source import load_docs
 
@@ -80,8 +80,8 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
         # warm-up: JVM/codegen/Arrow paths, not measured — one query per
         # execution family (OR/WAND, and the boolean/phrase path whose
         # first run compiles the positions-scan + combiner plan)
-        search_blockmax(idx, "spark", k=5).collect()
-        search_blockmax(idx, '+"spark merge" -dup join', k=5).collect()
+        search(idx, "spark", k=5).page.collect()
+        search(idx, '+"spark merge" -dup join', k=5).page.collect()
 
         per_query: dict[str, float] = {}
         all_times: list[float] = []
@@ -90,7 +90,7 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
             times = []
             for _ in range(QUERY_REPS):
                 t0 = time.perf_counter()
-                search_blockmax(idx, text, k=k, skip=skip, filters=filters).collect()
+                search(idx, text, k=k, skip=skip, filters=filters).page.collect()
                 times.append(time.perf_counter() - t0)
             # min, not median: on this contended VM the distribution is
             # one-sided (true cost + random co-tenant stalls), so min is
@@ -127,8 +127,8 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
         fq_times = []
         for _ in range(QUERY_REPS):
             t0 = time.perf_counter()
-            search_blockmax(idx, fq_text, k=fq_k, skip=fq_skip,
-                            filters=fq_filters, fq_docset=fq_ds).collect()
+            search(idx, fq_text, k=fq_k, skip=fq_skip,
+                   filters=fq_filters, fq_docset=fq_ds).page.collect()
             fq_times.append(time.perf_counter() - t0)
 
         # warm searcher (caches.warm — the Solr firstSearcher analog):
@@ -141,8 +141,8 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
         for text, k, skip, filters in BENCH_QUERIES.values():
             for _ in range(QUERY_REPS):
                 t0 = time.perf_counter()
-                search_blockmax(idx, text, k=k, skip=skip,
-                                filters=filters).collect()
+                search(idx, text, k=k, skip=skip,
+                       filters=filters).page.collect()
                 warm_all.append(time.perf_counter() - t0)
         warm_all.sort()
         warm_p95 = warm_all[min(len(warm_all) - 1,
@@ -218,14 +218,14 @@ def run_concurrent_queries(idx) -> dict:
     Solr SERVER answering overlapping requests (SearchServlet), while the
     per-query numbers above measure one query at a time. Spark's
     scheduler accepts jobs from many driver threads; each worker here
-    submits independent search_blockmax jobs against the shared reader,
+    submits independent search jobs against the shared reader,
     round-robin over the core query set. Per-query latency on a local[N]
     box underuses the cluster (a selective query schedules far fewer
     tasks than there are cores); QPS is the serving-facing metric that
     shows those idle cores absorbing concurrent queries."""
     import concurrent.futures as _fut
 
-    from .operators.wand import search_blockmax
+    from .operators.wand import search
 
     workers = int(os.environ.get("SPARK_GRAFT_QPS_WORKERS", "8"))
     total = int(os.environ.get("SPARK_GRAFT_QPS_QUERIES", "48"))
@@ -233,7 +233,7 @@ def run_concurrent_queries(idx) -> dict:
 
     def one(i: int) -> None:
         text, k, skip, filters = core[i % len(core)]
-        search_blockmax(idx, text, k=k, skip=skip, filters=filters).collect()
+        search(idx, text, k=k, skip=skip, filters=filters).page.collect()
 
     one(0)  # warm the thread-pool path before timing
     t0 = time.perf_counter()
@@ -537,7 +537,7 @@ def run_corpus_curve(cpus: int,
     from pyspark.sql import functions as F  # noqa: F401 (parity with peers)
 
     from .operators.postings import open_index, write_index
-    from .operators.wand import search_blockmax
+    from .operators.wand import search
     from .session import get_spark
     from .sources.scale_corpus import materialize_scale_corpus
 
@@ -555,7 +555,7 @@ def run_corpus_curve(cpus: int,
         write_index(spark, spark.read.parquet(warm_path), warm_dir,
                     lineage_groups=1)
         widx = open_index(spark, warm_dir)
-        search_blockmax(widx, "def", k=5).collect()
+        search(widx, "def", k=5).page.collect()
 
         for n in sizes:
             path = materialize_scale_corpus(
@@ -572,14 +572,14 @@ def run_corpus_curve(cpus: int,
             build_s = min(build_secs)
 
             idx = open_index(spark, index_dir)
-            search_blockmax(idx, "def", k=5).collect()  # warm, unmeasured
+            search(idx, "def", k=5).page.collect()  # warm, unmeasured
             per_query = {}
             for name, (text, k, skip, filters) in SCALE_QUERIES.items():
                 times = []
                 for _ in range(query_reps):
                     t0 = time.perf_counter()
-                    search_blockmax(idx, text, k=k, skip=skip,
-                                    filters=filters).collect()
+                    search(idx, text, k=k, skip=skip,
+                           filters=filters).page.collect()
                     times.append(time.perf_counter() - t0)
                 per_query[name] = round(min(times), 3)
             worst = max(per_query.values())

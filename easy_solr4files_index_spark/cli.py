@@ -16,7 +16,7 @@ servlets; our operational surface is the same verbs as Spark jobs:
 On a real cluster, spark-submit provides the SparkSession (master,
 executors, dynamic allocation); `get_spark` only fills in local defaults
 when none exists. Everything else — partitioning, salting, lineage,
-resume — is inside write_index/search_blockmax and is cluster-size
+resume — is inside write_index/wand.search and is cluster-size
 independent by construction.
 
 Zip the package for --py-files with:
@@ -77,13 +77,13 @@ def cmd_query(args: argparse.Namespace) -> int:
     """One scoring pass returns the page AND numFound — the reference's
     envelope always carries `found` (Solr.scala:91-103, api.yml:181)."""
     from .operators.postings import open_index
-    from .operators.wand import search_envelope_physical
+    from .operators.wand import envelope
 
     spark = _spark("fts-query", args.cpus)
     idx = open_index(spark, args.index)
     filters = json.loads(args.filters) if args.filters else None
-    print(search_envelope_physical(idx, args.text, k=args.k, skip=args.skip,
-                                   filters=filters))
+    print(json.dumps(envelope(idx, args.text, k=args.k, skip=args.skip,
+                              filters=filters)))
     return 0
 
 

@@ -44,7 +44,7 @@ from pyspark.storagelevel import StorageLevel
 _PageRow = Row("doc_id", "repo", "path", "lang", "score")
 
 from .postings import PhysicalIndex
-from .wand import search_blockmax, search_with_found
+from .wand import search
 
 QUERY_RESULT_WINDOW = 20    # solrconfig.xml:588
 QUERY_RESULT_MAX_DOCS = 200  # solrconfig.xml:593
@@ -244,13 +244,15 @@ class SearcherCaches:
     # -- queryResultCache -------------------------------------------------
     def search(self, text: str | None = None, k: int = 10, skip: int = 0,
                filters: dict | None = None, round_score: int | None = 4,
-               synonyms: dict[str, list[str]] | None = None) -> list:
-        """Cached top-k page — bit-identical to ``search_blockmax`` with
-        the same arguments, page-boundary rounding collisions included.
+               synonyms: dict[str, list[str]] | None = None,
+               found: bool = False) -> tuple[list, int | None]:
+        """Cached (page rows, found) — the page bit-identical to
+        ``wand.search`` with the same arguments, page-boundary rounding
+        collisions included; ``found`` is None unless asked for.
 
         The direct path cuts the page by UNROUNDED score (the
         deterministic total order) and only then rounds + re-sorts the
-        page rows (wand.topk → _stored_fields_page). A window cached
+        page rows (wand._topk_page → _stored_fields_page). A window cached
         already-rounded would re-sort across the page boundary: two
         distinct raw scores that round equal straddling rank skip+k
         would swap membership vs the direct cut. So the cache stores the
@@ -259,9 +261,12 @@ class SearcherCaches:
         exact driver-side twin of F.round (HALF_UP over the shortest
         round-trip decimal — BigDecimal(Double.toString) semantics).
 
-        Returns the page as collected ROWS (Solr's DocList is likewise a
-        materialized id+score list); ``search_df`` wraps them back into a
-        DataFrame for the relational surface."""
+        Solr's queryResultCache entry is a DocList that CARRIES the match
+        total (DocList.matches()), so a repeated ``found=True`` request is
+        served entirely from cache; its miss is ONE exhaustive traversal
+        whose unrounded window also seeds the plain page entry. The page
+        comes back as collected ROWS (Solr's DocList is likewise a
+        materialized id+score list)."""
         k = k if isinstance(k, int) and k >= 1 else 10
         skip = skip if isinstance(skip, int) and skip >= 0 else 0
         upper = skip + k
@@ -269,23 +274,26 @@ class SearcherCaches:
             # deep pages skip the queryResultCache (solrconfig.xml:593)
             # but still ride the filterCache — Solr's DocSets serve every
             # fq regardless of the requested range
-            return search_blockmax(self.index, text, k=k, skip=skip,
-                                   filters=filters, round_score=round_score,
-                                   synonyms=synonyms,
-                                   fq_docset=self.filter_docset(filters)
-                                   ).collect()
+            res = search(self.index, text, k=k, skip=skip, filters=filters,
+                         round_score=round_score, synonyms=synonyms,
+                         found=found, fq_docset=self.filter_docset(filters))
+            return res.page.collect(), res.found
         window = -(-upper // QUERY_RESULT_WINDOW) * QUERY_RESULT_WINDOW
-        key = (self._searcher_key(), text, _canon(filters),
-               json.dumps(synonyms, sort_keys=True) if synonyms else "",
-               window)
-        rows = self.results.get(key)
-        if rows is None:
-            fq = self.filter_docset(filters)
-            rows = search_blockmax(self.index, text, k=window, skip=0,
-                                   filters=filters, round_score=None,
-                                   synonyms=synonyms, fq_docset=fq).collect()
-            self.results.put(key, rows)
-        return self._slice(rows, skip, upper, round_score)
+        base = (self._searcher_key(), text, _canon(filters),
+                json.dumps(synonyms, sort_keys=True) if synonyms else "",
+                window)
+        key = ("found",) + base if found else base
+        hit = self.results.get(key)
+        if hit is None:
+            res = search(self.index, text, k=window, skip=0, filters=filters,
+                         round_score=None, synonyms=synonyms, found=found,
+                         fq_docset=self.filter_docset(filters))
+            hit = (res.page.collect(), res.found)
+            self.results.put(key, hit)
+            if found:
+                self.results.put(base, (hit[0], None))  # seed the page entry
+        rows, n = hit
+        return self._slice(rows, skip, upper, round_score), n
 
     @staticmethod
     def _slice(rows: list, skip: int, upper: int,
@@ -301,48 +309,3 @@ class SearcherCaches:
                    for r in page]
         rounded.sort(key=lambda r: (-r["score"], r["doc_id"]))
         return rounded
-
-    def search_found(self, text: str | None = None, k: int = 10,
-                     skip: int = 0, filters: dict | None = None,
-                     round_score: int | None = 4,
-                     synonyms: dict[str, list[str]] | None = None,
-                     ) -> tuple[list, int]:
-        """Cached (page rows, numFound) — Solr's queryResultCache entry
-        is a DocList that CARRIES the match total (DocList.matches()), so
-        a repeated envelope request is served entirely from cache. The
-        miss path is ONE exhaustive traversal (search_with_found) whose
-        unrounded window also seeds the plain page cache — a later
-        search() with the same query hits without re-scoring."""
-        k = k if isinstance(k, int) and k >= 1 else 10
-        skip = skip if isinstance(skip, int) and skip >= 0 else 0
-        upper = skip + k
-        if upper > QUERY_RESULT_MAX_DOCS:
-            page_df, found = search_with_found(
-                self.index, text, k=k, skip=skip, filters=filters,
-                round_score=round_score, synonyms=synonyms,
-                fq_docset=self.filter_docset(filters))
-            return page_df.collect(), found
-        window = -(-upper // QUERY_RESULT_WINDOW) * QUERY_RESULT_WINDOW
-        base = (self._searcher_key(), text, _canon(filters),
-                json.dumps(synonyms, sort_keys=True) if synonyms else "",
-                window)
-        hit = self.results.get(("found",) + base)
-        if hit is None:
-            fq = self.filter_docset(filters)
-            page_df, found = search_with_found(
-                self.index, text, k=window, skip=0, filters=filters,
-                round_score=None, synonyms=synonyms, fq_docset=fq)
-            rows = page_df.collect()
-            hit = (rows, found)
-            self.results.put(("found",) + base, hit)
-            self.results.put(base, rows)  # seed the page cache too
-        rows, found = hit
-        return self._slice(rows, skip, upper, round_score), found
-
-    def search_df(self, text: str | None = None, k: int = 10, skip: int = 0,
-                  filters: dict | None = None, round_score: int | None = 4,
-                  synonyms: dict[str, list[str]] | None = None) -> DataFrame:
-        from .wand import _PAGE_SCHEMA
-        rows = self.search(text, k=k, skip=skip, filters=filters,
-                           round_score=round_score, synonyms=synonyms)
-        return self.index.spark.createDataFrame(rows, _PAGE_SCHEMA)

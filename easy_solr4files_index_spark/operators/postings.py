@@ -25,8 +25,8 @@ Physical design (why it scales):
   size is bounded by span regardless of df).
 * Blocks carry max_tfnorm = max over the block of the idf-free BM25
   factor tf·(k1+1)/(tf+k1·(1−b+b·dl/avgdl)); query-time upper bound for
-  a block is idf·max_tfnorm — the block-max pruning key of
-  wand.search_budgeted.
+  a block is idf·max_tfnorm — the block-max pruning key of a
+  time-budgeted wand.search.
 * ``tbucket = pmod(xxhash64(term), T)`` is the partition directory —
   term lookups prune to 1 directory per query term (partition pruning
   visible in the scan's PushedFilters).
@@ -171,6 +171,24 @@ def _dense_expected(n: int) -> tuple[int, int]:
     return summod, xor
 
 
+def _assert_dense(n: int, mn, mx, summod, xr, label: str,
+                  offset: int = 0) -> None:
+    """Raise unless (min, max, sum(id % _DENSITY_MOD), xor(id)) of n ids,
+    taken relative to ``offset``, are those of the dense series 0..n-1
+    (the overflow-free closed forms of _dense_expected — the exact sum
+    n(n-1)/2 overflows int64 past ~4.3e9 docs). An empty set is dense."""
+    if not n:
+        return
+    exp_summod, exp_xor = _dense_expected(n)
+    if (int(mn) != 0 or int(mx) != n - 1
+            or int(summod) != exp_summod or int(xr) != exp_xor):
+        raise RuntimeError(
+            f"docID assignment produced a non-dense id space in {label} "
+            f"(n={n}, min={mn}, max={mx}, offset={offset}): "
+            "the input plan re-executed non-deterministically between the "
+            "rank passes — materialize the input (checkpoint/write) and retry")
+
+
 def check_dense_ids(df: DataFrame, offset: int = 0, label: str = "build",
                     with_stats: bool = False,
                     repos: list[str] | None = None) -> dict | None:
@@ -207,16 +225,8 @@ def check_dense_ids(df: DataFrame, offset: int = 0, label: str = "build",
               "degraded": int(row["deg"] or 0)} if with_stats else None)
     if with_stats and repos is not None:
         stats["outside_repos"] = int(row["outside"] or 0)
-    if n == 0:
-        return stats
-    exp_summod, exp_xor = _dense_expected(n)
-    if (int(row["mn"]) != 0 or int(row["mx"]) != n - 1
-            or int(row["summod"]) != exp_summod or int(row["xr"]) != exp_xor):
-        raise RuntimeError(
-            f"docID assignment produced a non-dense id space in {label} "
-            f"(n={n}, min={row['mn']}, max={row['mx']}, offset={offset}): "
-            "the input plan re-executed non-deterministically between the "
-            "rank passes — materialize the input (checkpoint/write) and retry")
+    _assert_dense(n, row["mn"], row["mx"], row["summod"], row["xr"], label,
+                  offset)
     return stats
 
 
@@ -352,10 +362,7 @@ def write_index(spark: SparkSession, docs: DataFrame, index_dir: str,
                 fail_after_group: int | None = None) -> BuildReport:
     """Build the physical index at ``index_dir``; resumable. ``fail_after_group``
     injects a crash after that many postings groups (kill/resume tests)."""
-    import sys
-
     _t_start = time.perf_counter()
-    _verbose = os.environ.get("SPARK_FTS_TIMINGS")
     _marks: list[tuple[str, float]] = []
 
     def _mark(label: str) -> None:
@@ -363,9 +370,6 @@ def write_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         # (BuildReport.stage_sec) so the scaling harness can attribute
         # the N-vs-4N gap stage-by-stage instead of arguing from totals
         _marks.append((label, time.perf_counter() - _t_start))
-        if _verbose:
-            print(f"[write_index] {label:24s} +{_marks[-1][1]:7.2f}s",
-                  file=sys.stderr, flush=True)
 
     config = config or IndexConfig()
     os.makedirs(index_dir, exist_ok=True)
@@ -418,25 +422,14 @@ def write_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         n_docs, avgdl = stats["n"] or 0, float(stats["avgdl"] or 0.0)
         dl_sum = int(stats["dl_sum"] or 0)
         degraded = int(stats["degraded"] or 0)
-        # docID-density tripwire (rides the write job — zero extra scans):
-        # ids must be exactly the dense series 0..n-1, checked via the
-        # overflow-free closed forms (see _dense_expected — the exact sum
-        # n(n-1)/2 overflows int64 past ~4.3e9 docs). Guards the
-        # assign_doc_ids two-pass determinism precondition (docids.py) —
-        # a duplicated/skipped rank from a non-deterministic input plan
-        # fails the build loudly instead of corrupting the index, and the
-        # unmarked lineage stage makes the re-run recompute docs_store.
-        exp_summod, exp_xor = _dense_expected(n_docs)
-        if n_docs and (int(stats["id_min"]) != 0
-                       or int(stats["id_max"]) != n_docs - 1
-                       or int(stats["id_summod"]) != exp_summod
-                       or int(stats["id_xor"]) != exp_xor):
-            raise RuntimeError(
-                "docID assignment produced a non-dense id space "
-                f"(n={n_docs}, min={stats['id_min']}, max={stats['id_max']}): "
-                "the input plan re-executed non-deterministically between "
-                "the rank passes — materialize the input (checkpoint/write) "
-                "and rebuild")
+        # docID-density tripwire (rides the write job — zero extra scans).
+        # Guards the assign_doc_ids two-pass determinism precondition
+        # (docids.py): a duplicated/skipped rank from a non-deterministic
+        # input plan fails the build loudly instead of corrupting the
+        # index, and the unmarked lineage stage makes the re-run
+        # recompute docs_store.
+        _assert_dense(n_docs, stats["id_min"], stats["id_max"],
+                      stats["id_summod"], stats["id_xor"], "build")
         if fingerprint is None:
             fingerprint = f"{stats['n']}:{stats['h']}"
         _append_lineage(spark, index_dir, "docs_store", 0, fingerprint, "done", t0)

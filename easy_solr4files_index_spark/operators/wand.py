@@ -25,19 +25,23 @@ a top-k heap. The Spark-native shape of that pass is BUCKET-LOCAL top-k:
 
 This is the partition-local top-k aggregation of "Cache-Efficient Top-k
 Aggregation over High Cardinality Large Datasets" (VLDB 2023), run as a
-batch kernel instead of per-row Python. ``search_with_found`` runs the
-same kernel with no local cut (exact counting must visit every match),
-and ``search_budgeted`` keeps block-max bucket bounds (Σ idf·max_tfnorm,
+batch kernel instead of per-row Python.
+
+``search`` is the one query entry point and returns
+``SearchResult(page, found, partial)``. ``found=True`` runs the same
+kernel with no local cut (exact counting must visit every match); a
+``time_allowed_ms`` budget keeps block-max bucket bounds (Σ idf·max_tfnorm,
 from block metadata alone) to order the kernel's work into a hot phase
-and a completion phase that a time budget can skip. Correctness gate:
-tests/test_physical_index.py asserts rank-identity vs the numpy oracle
-(oracle/bm25_oracle.py) on every entry point.
+and a completion phase that the budget can skip. ``envelope`` renders
+the reference's ``{summary, fileitems}`` response from one
+``search(found=True)``. Correctness gate: tests/test_physical_index.py
+asserts rank-identity vs the numpy oracle (oracle/bm25_oracle.py) in
+every mode.
 """
 
 from __future__ import annotations
 
-import json
-import os
+import time
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -152,8 +156,11 @@ def _term_clause_rows(blocks: DataFrame, cmap: list[tuple[str, int, str]],
 # lookup reads ~k row groups instead of the whole store (Lucene's
 # fetch-stored-fields-by-docID shape; at 100 TB the full-store scan is
 # the difference between milliseconds and a cluster-wide pass).
-_FETCH_BY_ID_BYTES = int(os.environ.get("SPARK_FTS_FETCH_BY_ID_BYTES",
-                                        str(1 << 30)))
+_FETCH_BY_ID_BYTES = 1 << 30
+
+# the timeAllowed the reference pins on every request (SearchServlet.scala:97),
+# echoed in the envelope's summary
+_TIME_ALLOWED_MS = 5000
 
 _PAGE_COLS = ("doc_id", "repo", "path", "lang", "score")
 _PAGE_SCHEMA = "doc_id long, repo string, path string, lang string, score double"
@@ -400,35 +407,65 @@ def _page(index: PhysicalIndex, q: _Query, round_score: int | None) -> DataFrame
     return _topk_page(index, scored, q, round_score)
 
 
-def search_blockmax(index: PhysicalIndex, text: str | None = None, k: int = 10,
-                    skip: int = 0, filters: dict[str, list[str]] | None = None,
-                    round_score: int | None = 4,
-                    synonyms: dict[str, list[str]] | None = None,
-                    fq_docset: DataFrame | None = None) -> DataFrame:
-    """Top-k page over the physical index as a DataFrame of (doc_id,
-    repo, path, lang, score), ordered score desc then doc_id asc.
+class SearchResult(NamedTuple):
+    """One query's answer: the page, a DataFrame of (doc_id, repo, path,
+    lang, score) ordered score desc then doc_id asc; the exact match count
+    (None unless ``found=True`` asked for it); and whether an exhausted
+    time budget cut the plan short."""
+    page: DataFrame
+    found: int | None
+    partial: bool
+
+
+def search(index: PhysicalIndex, text: str | None = None, k: int = 10,
+           skip: int = 0, filters: dict[str, list[str]] | None = None,
+           round_score: int | None = 4,
+           synonyms: dict[str, list[str]] | None = None, *,
+           found: bool = False, time_allowed_ms: float | None = None,
+           fq_docset: DataFrame | None = None) -> SearchResult:
+    """The one query operation (SearchServlet.scala:76-103): text, skip,
+    limit and filters in, one result out.
 
     A plain-OR query is scored in one bucket-local top-(k+skip) pass
     (_bucket_topk); +/-/phrase queries by the boolean combiner; no text
     is match-all. On a warm reader (idf memoized) a one-term query runs
     2 Spark jobs and a multi-term or filtered one 3.
 
+    ``found=True`` also counts every match (_found), the numFound the
+    reference's envelope always carries (Solr.scala:91-103). A
+    ``time_allowed_ms`` budget runs the phased block-max plan
+    (_budgeted), Solr's ``timeAllowed``/partialResults. The two cannot
+    combine — an exact count must visit every match, so no budget could
+    cut it short — and asking for both raises ValueError.
+
     ``fq_docset``: an already-materialized doc_id DocSet for ``filters``
     (the filterCache path, operators/caches.py) — substituted for the
     fq doc ids of the scoring pass; ``filters`` must still be passed
     (the match-all/store paths and validation use it)."""
+    if found and time_allowed_ms is not None:
+        raise ValueError("found=True counts every match, so it cannot "
+                         "run under a time_allowed_ms budget")
+    t_start = time.perf_counter()
     q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
-    return _page(index, q, round_score)
+    if found:
+        return _found(index, q, round_score)
+    if time_allowed_ms is not None:
+        return _budgeted(index, q, round_score, t_start, time_allowed_ms)
+    return SearchResult(_page(index, q, round_score), None, False)
 
 
-def search_budgeted(index: PhysicalIndex, text: str | None = None, k: int = 10,
+def search_blockmax(index: PhysicalIndex, text: str | None = None, k: int = 10,
                     skip: int = 0, filters: dict[str, list[str]] | None = None,
-                    time_allowed_ms: float = 5000.0,
-                    round_score: int | None = 4,
-                    synonyms: dict[str, list[str]] | None = None,
-                    ) -> tuple[DataFrame, bool]:
+                    round_score: int | None = 4) -> DataFrame:
+    """``search(...).page``. It stays for perfbench/workload.py until the
+    next benchmark change; everything else calls ``search``."""
+    return search(index, text, k, skip, filters, round_score).page
+
+
+def _budgeted(index: PhysicalIndex, q: _Query, round_score: int | None,
+              t_start: float, time_allowed_ms: float) -> SearchResult:
     """T3 `timeAllowed` analog (SearchServlet.scala:97 pins 5000 ms;
-    Solr's partialResults). Returns (page, partial).
+    Solr's partialResults).
 
     Lucene's TimeLimitingCollector aborts a cursor walk mid-traversal;
     Spark can't interrupt a running stage, so the budget gates PHASES of
@@ -443,13 +480,9 @@ def search_budgeted(index: PhysicalIndex, text: str | None = None, k: int = 10,
     partial results. A query that completes within budget (or whose
     matches fit in P buckets, or that is not plain OR) returns the exact
     answer and ``partial=False``."""
-    import time
-
-    t_start = time.perf_counter()
-    q = _prepare(index, text, k, skip, filters, synonyms, None)
     idf = _idf_map_cached(index, q.terms) if q.kind == "or" else {}
     if not idf:
-        return _page(index, q, round_score), False
+        return SearchResult(_page(index, q, round_score), None, False)
     n = q.k + q.skip
     p = max(4 * n, 32)
     blocks = _idf_blocks(index, sorted(idf), idf)
@@ -465,15 +498,15 @@ def search_budgeted(index: PhysicalIndex, text: str | None = None, k: int = 10,
     # bucket, and one pass over all of them is exact and final
     ub_rows = ub.orderBy(F.col("ub").desc()).limit(p + 1).collect()
     if len(ub_rows) <= p:
-        return _topk_page(index, _bucket_topk(index, q, idf, n), q,
-                          round_score), False
+        return SearchResult(_topk_page(index, _bucket_topk(index, q, idf, n), q,
+                                       round_score), None, False)
     hot = [r["bucket"] for r in ub_rows[:p]]
     a_rows = (_bucket_topk(index, q, idf, n, blocks.filter(F.col("bucket").isin(hot)))
               .orderBy(F.col("score").desc(), F.col("doc_id").asc())
               .limit(n).collect())
     phase_a = index.spark.createDataFrame(a_rows, "doc_id long, score double")
     if (time.perf_counter() - t_start) * 1000.0 > time_allowed_ms:
-        return _topk_page(index, phase_a, q, round_score), True
+        return SearchResult(_topk_page(index, phase_a, q, round_score), None, True)
     tau = a_rows[-1]["score"] if len(a_rows) >= n else float("-inf")
     # a doc's postings all live in its one bucket, so the phases score
     # disjoint doc sets and a plain union is exact. >= tau, not > tau: a
@@ -482,17 +515,12 @@ def search_budgeted(index: PhysicalIndex, text: str | None = None, k: int = 10,
     rest = ub.filter(~F.col("bucket").isin(hot) & (F.col("ub") >= tau))
     phase_b = _bucket_topk(index, q, idf, n,
                            blocks.join(rest.select("bucket"), "bucket", "left_semi"))
-    return _topk_page(index, phase_a.unionByName(phase_b), q,
-                      round_score), False
+    return SearchResult(_topk_page(index, phase_a.unionByName(phase_b), q,
+                                   round_score), None, False)
 
 
-def search_with_found(index: PhysicalIndex, text: str | None = None,
-                      k: int = 10, skip: int = 0,
-                      filters: dict[str, list[str]] | None = None,
-                      round_score: int | None = 4,
-                      synonyms: dict[str, list[str]] | None = None,
-                      fq_docset: DataFrame | None = None,
-                      ) -> tuple[DataFrame, int]:
+def _found(index: PhysicalIndex, q: _Query,
+           round_score: int | None) -> SearchResult:
     """(page, found) from ONE scoring traversal — the reference's envelope
     ALWAYS carries numFound alongside the page (Solr.scala:91-103,
     api.yml:181).
@@ -504,71 +532,39 @@ def search_with_found(index: PhysicalIndex, text: str | None = None,
     BOTH the page (TakeOrderedAndProject) and the count from it. The
     returned page is a small local DataFrame (k rows) — the persisted
     stream is released before returning."""
-    q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
     if q.kind == "all":
-        found = q.store.count()
-        return _matchall_page(q), found
+        return SearchResult(_matchall_page(q), q.store.count(), False)
     scored = None if q.kind == "none" else _scored(index, q, None)
     if scored is None:
-        return _empty_page(index), 0
+        return SearchResult(_empty_page(index), 0, False)
     scored = scored.persist()
     try:
         found = scored.count()
         if found == 0:
-            return _empty_page(index), 0
+            return SearchResult(_empty_page(index), 0, False)
         out = _topk_page(index, scored, q, round_score)
         # pin the k winners locally so the persisted stream can be released
         rows = out.collect()
-        return index.spark.createDataFrame(rows, out.schema), found
+        return SearchResult(index.spark.createDataFrame(rows, out.schema),
+                            found, False)
     finally:
         scored.unpersist()
 
 
-def _envelope(index: PhysicalIndex, text: str | None, k: int, skip: int,
-              filters, synonyms, time_allowed_ms: int) -> tuple[dict, list]:
-    """(summary, page rows) of the reference's response envelope
-    (Solr.scala:91-103,173-181; api.yml:172-256) from one scoring pass
-    (search_with_found). ``time_allowed`` echoes the pinned 5000 ms
-    budget (SearchServlet.scala:97). Exact ``found`` requires visiting
-    every match, so the count pass is never early-terminated (the same
-    trade-off Lucene makes for exact totalHits); the budget is honored
-    by the page-only path (search_budgeted)."""
-    page, found = search_with_found(index, text, k, skip, filters,
-                                    synonyms=synonyms)
-    rows = page.collect()
+def envelope(index: PhysicalIndex, text: str | None = None, k: int = 10,
+             skip: int = 0, filters: dict[str, list[str]] | None = None,
+             synonyms: dict[str, list[str]] | None = None) -> dict:
+    """The reference's response envelope ``{summary, fileitems}``
+    (Solr.scala:91-103,173-181; api.yml:172-256) from one
+    ``search(..., found=True)``. ``time_allowed`` echoes the pinned
+    5000 ms budget (SearchServlet.scala:97); exact ``found`` requires
+    visiting every match, so the count pass is never early-terminated
+    (the same trade-off Lucene makes for exact totalHits)."""
+    res = search(index, text, k, skip, filters, synonyms=synonyms, found=True)
+    rows = res.page.collect()
     summary = {"text": text if text is not None else "*",
-               "skip": skip, "limit": k,
-               "time_allowed": int(time_allowed_ms),
-               "found": found, "returned": len(rows)}
-    return summary, rows
-
-
-def search_envelope_df(index: PhysicalIndex, text: str | None = None,
-                       k: int = 10, skip: int = 0,
-                       filters: dict[str, list[str]] | None = None,
-                       synonyms: dict[str, list[str]] | None = None,
-                       time_allowed_ms: int = 5000) -> DataFrame:
-    """S13 result-sink envelope as a DataFrame: the summary fields
-    ``found``, ``returned`` and ``time_allowed`` carried as columns on
-    the page rows, so the whole envelope is oracle-checkable as one
-    relational result."""
-    summary, rows = _envelope(index, text, k, skip, filters, synonyms,
-                              time_allowed_ms)
-    head = (summary["found"], summary["returned"], summary["time_allowed"])
-    return index.spark.createDataFrame(
-        [head + tuple(r) for r in rows],
-        "found long, returned long, time_allowed int, " + _PAGE_SCHEMA)
-
-
-def search_envelope_physical(index: PhysicalIndex, text: str | None = None,
-                             k: int = 10, skip: int = 0,
-                             filters: dict[str, list[str]] | None = None,
-                             synonyms: dict[str, list[str]] | None = None,
-                             time_allowed_ms: int = 5000) -> str:
-    """The response envelope as the reference's JSON document (the CLI's
-    ``query`` output)."""
-    summary, rows = _envelope(index, text, k, skip, filters, synonyms,
-                              time_allowed_ms)
+               "skip": skip, "limit": k, "time_allowed": _TIME_ALLOWED_MS,
+               "found": res.found, "returned": len(rows)}
     items = [{"repo": r["repo"], "path": r["path"], "lang": r["lang"],
               "score": r["score"]} for r in rows]
-    return json.dumps({"summary": summary, "fileitems": items})
+    return {"summary": summary, "fileitems": items}

@@ -146,8 +146,8 @@ LIMIT {k} OFFSET {skip}
 def envelope_sql(terms: list[str], k: int = 10, skip: int = 0,
                  filters=None, time_allowed_ms: int = 5000) -> str:
     """S13 envelope twin: the page rows with the summary fields (found,
-    returned, time_allowed) as columns — matches
-    operators/wand.search_envelope_df column-for-column."""
+    returned, time_allowed) as columns — matches the fts_envelope driver
+    row (operators/wand.envelope plus doc_id) column-for-column."""
     return f"""{PREFIX},
 q(term) AS (VALUES {_values(terms)}),
 sc AS (

@@ -7,8 +7,7 @@ import pytest
 
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import (
-    search_blockmax, search_envelope_physical, search_with_found)
+from easy_solr4files_index_spark.operators.wand import envelope, search
 from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
 
 # query coverage per FIXTURES.md §2: single-term, multi-term OR, path-token
@@ -29,7 +28,7 @@ QUERIES = [
 
 
 def _found(idx, text, **kw) -> int:
-    return search_with_found(idx, text, **kw)[1]
+    return search(idx, text, found=True, **kw).found
 
 
 @pytest.fixture(scope="module")
@@ -41,8 +40,8 @@ def corpus(code_index):
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)
 def test_rank_identical(corpus, text, k, skip, filters):
     idx, _, oracle = corpus
-    got = search_blockmax(idx, text, k=k, skip=skip, filters=filters,
-                          round_score=None).collect()
+    got = search(idx, text, k=k, skip=skip, filters=filters,
+                 round_score=None).page.collect()
     exp = oracle_search(oracle, text, k=k, skip=skip, filters=filters)
     assert len(got) == len(exp), (text, len(got), len(exp))
     for g, e in zip(got, exp):
@@ -61,9 +60,8 @@ def test_found_count(corpus):
 
 
 def test_envelope_shape(corpus):
-    import json
     idx, _, _ = corpus
-    env = json.loads(search_envelope_physical(idx, "parse", k=3))
+    env = envelope(idx, "parse", k=3)
     assert set(env) == {"summary", "fileitems"}
     assert set(env["summary"]) == {"text", "skip", "limit", "found", "returned",
                                 "time_allowed"}  # Solr.scala:97 echoes timeAllowed
@@ -78,8 +76,8 @@ def test_arrow_tokenizer_same_index(spark, corpus, tmp_path):
     write_index(spark, docs, str(tmp_path), lineage_groups=1,
                 config=IndexConfig(use_arrow_tokenizer=True, term_buckets=8))
     idx2 = open_index(spark, str(tmp_path))
-    got = search_blockmax(idx2, "parse merge token", k=10,
-                          round_score=None).collect()
+    got = search(idx2, "parse merge token", k=10,
+                 round_score=None).page.collect()
     exp = oracle_search(oracle, "parse merge token", k=10)
     assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp]
     assert [g["score"] for g in got] == pytest.approx([e["score"] for e in exp], rel=1e-9)
@@ -90,12 +88,10 @@ def test_found_count_synonyms(corpus):
     the count of the very query that produced the page, so a
     synonym-expanded page paired with a synonym-blind count could report
     found < returned."""
-    import json
     idx, _, _ = corpus
     syn = {"parse": ["merge", "token"]}
     expanded = _found(idx, "parse", synonyms=syn)
     assert expanded == _found(idx, "parse merge token")
     assert expanded >= _found(idx, "parse")
-    env = json.loads(search_envelope_physical(idx, "parse", k=10**6,
-                                              synonyms=syn))
+    env = envelope(idx, "parse", k=10**6, synonyms=syn)
     assert env["summary"]["found"] == expanded == env["summary"]["returned"]

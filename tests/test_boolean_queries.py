@@ -15,8 +15,7 @@ from easy_solr4files_index_spark.operators.dismax import (
     MUST, MUST_NOT, SHOULD, Clause, is_plain_or, parse_dismax)
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import (
-    search_blockmax, search_with_found)
+from easy_solr4files_index_spark.operators.wand import search
 from easy_solr4files_index_spark.oracle.bm25_oracle import (
     build_oracle, oracle_search_boolean)
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
@@ -101,7 +100,7 @@ BOOL_QUERIES = [
 @pytest.mark.parametrize("text", BOOL_QUERIES)
 def test_physical_boolean_vs_oracle(built, text):
     pidx, oracle = built
-    got = search_blockmax(pidx, text, k=15, round_score=None).collect()
+    got = search(pidx, text, k=15, round_score=None).page.collect()
     exp = oracle_search_boolean(oracle, text, k=15)
     assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp], text
     assert [g["score"] for g in got] == pytest.approx(
@@ -113,8 +112,8 @@ def test_boolean_with_filters(built):
     flt = {"lang": ["java", "python"]}
     text = '+"parse merge" token'
     exp = oracle_search_boolean(oracle, text, k=10, filters=flt)
-    got = search_blockmax(pidx, text, k=10, filters=flt,
-                          round_score=None).collect()
+    got = search(pidx, text, k=10, filters=flt,
+                 round_score=None).page.collect()
     assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp]
 
 
@@ -122,7 +121,7 @@ def test_numfound_boolean(built):
     pidx, oracle = built
     text = '+"parse merge" -license'
     exp = len(oracle_search_boolean(oracle, text, k=10 ** 9))
-    _, found = search_with_found(pidx, text)
+    found = search(pidx, text, found=True).found
     assert found == exp
 
 
@@ -130,7 +129,7 @@ def test_phrase_pagination(built):
     pidx, oracle = built
     text = '"parse merge" token'
     exp = oracle_search_boolean(oracle, text, k=5, skip=3)
-    got = search_blockmax(pidx, text, k=5, skip=3, round_score=None).collect()
+    got = search(pidx, text, k=5, skip=3, round_score=None).page.collect()
     assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp]
 
 
@@ -158,9 +157,9 @@ def test_phrase_after_upsert_matches_fresh_build(spark, tmp_path_factory):
     idx_fresh = open_index(spark, d_fresh)
 
     text = '"parse merge"'
-    got = search_blockmax(idx_inc, text, k=100000).select(
+    got = search(idx_inc, text, k=100000).page.select(
         "repo", "path", "score").collect()
-    exp = search_blockmax(idx_fresh, text, k=100000).select(
+    exp = search(idx_fresh, text, k=100000).page.select(
         "repo", "path", "score").collect()
     assert sorted((r["repo"], r["path"], r["score"]) for r in got) == \
         sorted((r["repo"], r["path"], r["score"]) for r in exp)
@@ -168,7 +167,7 @@ def test_phrase_after_upsert_matches_fresh_build(spark, tmp_path_factory):
     # ... and after compaction the phrase results are unchanged
     from easy_solr4files_index_spark.operators.maintenance import compact_index
     idx_c = compact_index(spark, d_inc)
-    got_c = search_blockmax(idx_c, text, k=100000).select(
+    got_c = search(idx_c, text, k=100000).page.select(
         "repo", "path", "score").collect()
     assert sorted((r["repo"], r["path"], r["score"]) for r in got_c) == \
         sorted((r["repo"], r["path"], r["score"]) for r in exp)
@@ -183,7 +182,7 @@ def test_phrase_respects_tombstones(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ph_del") / "index")
     write_index(spark, docs, d, CFG, lineage_groups=1)
     idx = delete_repo_physical(spark, d, repo0, auto_compact=False)
-    got = search_blockmax(idx, '"parse merge"', k=100000).collect()
+    got = search(idx, '"parse merge"', k=100000).page.collect()
     assert all(r["repo"] != repo0 for r in got)
 
 
@@ -195,9 +194,9 @@ def test_positions_optional(spark, tmp_path_factory):
     idx = open_index(spark, d)
     assert not idx.has_positions
     # plain OR queries still work; phrase queries fail loudly
-    assert search_blockmax(idx, "parse merge", k=5).count() <= 5
+    assert search(idx, "parse merge", k=5).page.count() <= 5
     with pytest.raises(ValueError, match="positions"):
-        search_blockmax(idx, '"parse merge"', k=5).collect()
+        search(idx, '"parse merge"', k=5).page.collect()
 
 
 def test_idf_cache_skips_termstats_on_repeat(built):
@@ -209,8 +208,8 @@ def test_idf_cache_skips_termstats_on_repeat(built):
 
     pidx, _ = built
     pidx.__dict__.pop("_idf_cache", None)
-    first = search_blockmax(pidx, '+"parse merge" token -license',
-                            k=15, round_score=None).collect()
+    first = search(pidx, '+"parse merge" token -license',
+                   k=15, round_score=None).page.collect()
     cache = pidx.__dict__["_idf_cache"]
     assert {"parse", "merge", "token", "license"} <= set(cache)
     # absent term: looked up once, remembered as absent
@@ -224,8 +223,8 @@ def test_idf_cache_skips_termstats_on_repeat(built):
     orig = type(pidx).termstats
     type(pidx).termstats = _Boom()
     try:
-        again = search_blockmax(pidx, '+"parse merge" token -license',
-                                k=15, round_score=None).collect()
+        again = search(pidx, '+"parse merge" token -license',
+                       k=15, round_score=None).page.collect()
         m2 = _idf_map_cached(pidx, ["parse", "zzznotaterm"])
     finally:
         type(pidx).termstats = orig

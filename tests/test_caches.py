@@ -15,7 +15,7 @@ from easy_solr4files_index_spark.operators.maintenance import (
 from easy_solr4files_index_spark.operators.postings import (
     open_index, write_index)
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
 CFG = IndexConfig(bucket_span=64, term_buckets=8)
@@ -42,10 +42,10 @@ QUERIES = [
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)
 def test_cached_equals_uncached(pidx, text, k, skip, filters):
     caches = SearcherCaches(pidx)
-    want = search_blockmax(pidx, text, k=k, skip=skip,
-                           filters=filters).collect()
-    cold = caches.search(text, k=k, skip=skip, filters=filters)
-    warm = caches.search(text, k=k, skip=skip, filters=filters)
+    want = search(pidx, text, k=k, skip=skip,
+                  filters=filters).page.collect()
+    cold, _ = caches.search(text, k=k, skip=skip, filters=filters)
+    warm, _ = caches.search(text, k=k, skip=skip, filters=filters)
     assert cold == want == warm
     assert caches.results.hits >= 1  # second call was a cache hit
 
@@ -55,21 +55,21 @@ def test_pagination_shares_window(pidx):
     20-row window (queryResultWindowSize, solrconfig.xml:588): one miss,
     then hits — and both slices match direct offset/limit search."""
     caches = SearcherCaches(pidx)
-    p1 = caches.search("parse merge", k=10, skip=0)
+    p1, _ = caches.search("parse merge", k=10, skip=0)
     assert (caches.results.misses, caches.results.hits) == (1, 0)
-    p2 = caches.search("parse merge", k=5, skip=10)
+    p2, _ = caches.search("parse merge", k=5, skip=10)
     assert (caches.results.misses, caches.results.hits) == (1, 1)
-    assert p1 == search_blockmax(pidx, "parse merge", k=10).collect()
-    assert p2 == search_blockmax(pidx, "parse merge", k=5, skip=10).collect()
+    assert p1 == search(pidx, "parse merge", k=10).page.collect()
+    assert p2 == search(pidx, "parse merge", k=5, skip=10).page.collect()
 
 
 def test_deep_pages_bypass(pidx):
     """skip+k beyond queryResultMaxDocsCached=200 (solrconfig.xml:593)
     is answered but never cached."""
     caches = SearcherCaches(pidx)
-    got = caches.search("parse", k=10, skip=QUERY_RESULT_MAX_DOCS)
-    assert got == search_blockmax(pidx, "parse", k=10,
-                                  skip=QUERY_RESULT_MAX_DOCS).collect()
+    got, _ = caches.search("parse", k=10, skip=QUERY_RESULT_MAX_DOCS)
+    assert got == search(pidx, "parse", k=10,
+                         skip=QUERY_RESULT_MAX_DOCS).page.collect()
     assert len(caches.results) == 0
 
 
@@ -95,41 +95,40 @@ def test_maintenance_invalidates(spark, tmp_path_factory):
     write_index(spark, docs, index_dir, CFG, lineage_groups=1)
     idx = open_index(spark, index_dir)
     caches = SearcherCaches(idx)
-    before = caches.search("parse", k=10)
+    before, _ = caches.search("parse", k=10)
     repo = before[0]["repo"]
     idx2 = delete_repo_physical(spark, index_dir, repo, auto_compact=False)
     caches.rebind(idx2)
-    after = caches.search("parse", k=10)
+    after, _ = caches.search("parse", k=10)
     assert caches.results.misses == 2  # new searcher key -> cold
     assert all(r["repo"] != repo for r in after)
-    assert after == search_blockmax(idx2, "parse", k=10).collect()
+    assert after == search(idx2, "parse", k=10).page.collect()
 
 
 def test_search_found_cached_envelope(pidx):
     """Solr's DocList carries numFound: the cached envelope returns the
-    exact (page, found) of search_with_found, the repeat is a pure cache
+    exact (page, found) of search(found=True), the repeat is a pure cache
     hit, and the miss seeds the plain page cache (a later search() with
     the same query re-scores nothing)."""
-    from easy_solr4files_index_spark.operators.wand import search_with_found
-
     caches = SearcherCaches(pidx)
-    want_df, want_found = search_with_found(pidx, "parse merge", k=10)
-    want = want_df.collect()
-    rows1, found1 = caches.search_found("parse merge", k=10)
-    rows2, found2 = caches.search_found("parse merge", k=10)
+    want_res = search(pidx, "parse merge", k=10, found=True)
+    want = want_res.page.collect()
+    rows1, found1 = caches.search("parse merge", k=10, found=True)
+    rows2, found2 = caches.search("parse merge", k=10, found=True)
     assert rows1 == want == rows2
-    assert found1 == want_found == found2
+    assert found1 == want_res.found == found2
     assert caches.results.hits >= 1
     # the envelope miss seeded the page cache: plain search() is a hit
     hits_before = caches.results.hits
-    page = caches.search("parse merge", k=10)
+    page, found = caches.search("parse merge", k=10)
     assert caches.results.hits == hits_before + 1
-    assert page == search_blockmax(pidx, "parse merge", k=10).collect()
+    assert page == search(pidx, "parse merge", k=10).page.collect()
+    assert found is None  # not asked for
     # filtered + paginated envelope, same contracts
     f = {"lang": ["java", "python"]}
-    wdf, wf = search_with_found(pidx, "parse", k=5, skip=5, filters=f)
-    rows3, found3 = caches.search_found("parse", k=5, skip=5, filters=f)
-    assert rows3 == wdf.collect() and found3 == wf
+    w = search(pidx, "parse", k=5, skip=5, filters=f, found=True)
+    rows3, found3 = caches.search("parse", k=5, skip=5, filters=f, found=True)
+    assert rows3 == w.page.collect() and found3 == w.found
 
 
 def test_concurrent_requests_share_one_docset(pidx):
@@ -143,12 +142,12 @@ def test_concurrent_requests_share_one_docset(pidx):
     f = {"lang": ["java"]}
     with cf.ThreadPoolExecutor(8) as ex:
         pages = list(ex.map(
-            lambda _: caches.search("parse merge", k=10, filters=f),
+            lambda _: caches.search("parse merge", k=10, filters=f)[0],
             range(16)))
     assert all(p == pages[0] for p in pages)
     assert len(caches.filters) == 1
-    assert pages[0] == search_blockmax(pidx, "parse merge", k=10,
-                                       filters=f).collect()
+    assert pages[0] == search(pidx, "parse merge", k=10,
+                              filters=f).page.collect()
 
 
 def test_round_half_up_matches_catalyst(spark):
@@ -199,7 +198,7 @@ def test_warm_searcher_identical_results_and_release(pidx):
     queries = [("spark join", 10, 0, None),
                ('+"spark merge" -dup join', 10, 0, None),
                (None, 5, 2, {"lang": ["en"]})]
-    cold = [search_blockmax(pidx, t, k=k, skip=s, filters=f).collect()
+    cold = [search(pidx, t, k=k, skip=s, filters=f).page.collect()
             for t, k, s, f in queries]
 
     spark = pidx.spark
@@ -209,7 +208,7 @@ def test_warm_searcher_identical_results_and_release(pidx):
     assert caches._warmed  # datasets actually persisted
     assert (spark.sparkContext._jsc.getPersistentRDDs().size()
             > base_persisted)
-    warm = [search_blockmax(pidx, t, k=k, skip=s, filters=f).collect()
+    warm = [search(pidx, t, k=k, skip=s, filters=f).page.collect()
             for t, k, s, f in queries]
     assert warm == cold
 

@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 from easy_solr4files_index_spark.functions import multimodal as mm
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -145,7 +145,7 @@ def test_extracted_corpus_indexes_end_to_end(spark, tmp_path):
     assert n_degraded == n_binary > 0
     # a term that exists ONLY via html extraction ("T&T" -> tokens t, t)
     # plus corpus terms: search a body word, get html/xml/plain docs only
-    page = search_blockmax(idx, "cdata", k=50)
+    page = search(idx, "cdata", k=50).page
     langs = {r["lang"] for r in page.collect()}
     assert langs == {"text/xml"}  # "raw cdata 42" is the XML CDATA wrap
     # binary-mime docs remain path/metadata-searchable (S10)

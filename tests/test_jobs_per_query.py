@@ -14,7 +14,7 @@ from easy_solr4files_index_spark.operators.index_build import IndexConfig
 from easy_solr4files_index_spark.operators.maintenance import (
     delete_repo_physical, upsert_repos_physical)
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
 # (family, text, k, skip, filters, max jobs)
@@ -60,8 +60,8 @@ def _jobs(spark, group, run):
 def test_jobs_per_query(spark, many_buckets, family, text, k, skip, filters,
                         limit):
     def run():
-        rows = search_blockmax(many_buckets, text, k=k, skip=skip,
-                               filters=filters).collect()
+        rows = search(many_buckets, text, k=k, skip=skip,
+                      filters=filters).page.collect()
         assert rows, family
 
     run()  # warm the reader
@@ -69,6 +69,53 @@ def test_jobs_per_query(spark, many_buckets, family, text, k, skip, filters,
     assert jobs <= limit, f"{family}: {jobs} jobs > {limit}"
     if family == "all":
         assert jobs == 1
+
+
+# found=True: the same families with an exact count — the scoring pass
+# with no local cut, a persist, the count and the page pinned locally.
+# The limits are the counts this mode ran on this fixture when it was
+# still a function of its own, so the fold into search() added no job.
+FOUND_JOBS = {"or1": 6, "or3": 7, "fq": 7, "page": 7, "bool": 7,
+              "phrase": 8, "all": 3}
+FOUND_FAMILIES = [f[:5] + (FOUND_JOBS[f[0]],) for f in FAMILIES]
+
+
+@pytest.mark.parametrize("family,text,k,skip,filters,limit", FOUND_FAMILIES,
+                         ids=[f[0] for f in FOUND_FAMILIES])
+def test_jobs_per_query_found(spark, many_buckets, family, text, k, skip,
+                              filters, limit):
+    def run():
+        res = search(many_buckets, text, k=k, skip=skip, filters=filters,
+                     found=True)
+        assert res.page.collect() and res.found, family
+
+    run()  # warm the reader
+    jobs = _jobs(spark, f"jobs-per-query-found-{family}", run)
+    assert jobs <= limit, f"{family}: {jobs} jobs > {limit}"
+
+
+def test_jobs_per_query_budgeted(spark, many_buckets):
+    """A multi-term OR under a budget it never exhausts runs every phase
+    of the block-max plan: 75 buckets exceed the hot set P=40 of k=10, so
+    the UB job, phase A and phase B all run."""
+    def run():
+        res = search(many_buckets, "parse merge token", k=10,
+                     time_allowed_ms=1e9)
+        assert res.page.collect() and res.partial is False
+
+    run()  # warm the reader
+    jobs = _jobs(spark, "jobs-per-query-budgeted", run)
+    assert jobs <= 9, f"budgeted: {jobs} jobs > 9"
+
+
+def test_found_with_budget_rejected(spark, many_buckets):
+    """An exact count visits every match, so it cannot honour a time
+    budget: asking for both fails before any Spark job."""
+    def run():
+        with pytest.raises(ValueError, match="time_allowed_ms"):
+            search(many_buckets, "parse", found=True, time_allowed_ms=1e9)
+
+    assert _jobs(spark, "jobs-found-with-budget", run) == 0
 
 
 # (op, max jobs): a one-repo delete, and a one-repo upsert with repo

@@ -17,7 +17,7 @@ from easy_solr4files_index_spark.operators.maintenance import (
     compact_index, delete_path_prefix_physical, delete_repo_physical,
     upsert_repos_physical)
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax, search_budgeted
+from easy_solr4files_index_spark.operators.wand import search
 from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
 from easy_solr4files_index_spark.sources.docs_source import (DOCS_SCHEMA,
                                                             synth_code_docs)
@@ -26,13 +26,10 @@ QUERY = "parse index license"
 
 
 def _listing(idx, text=QUERY, budgeted=False):
-    if budgeted:
-        page, partial = search_budgeted(idx, text, k=10 ** 6,
-                                        time_allowed_ms=1e9)
-        assert partial is False
-    else:
-        page = search_blockmax(idx, text, k=10 ** 6)
-    rows = page.select("repo", "path", "score").collect()
+    res = search(idx, text, k=10 ** 6,
+                 time_allowed_ms=1e9 if budgeted else None)
+    assert res.partial is False
+    rows = res.page.select("repo", "path", "score").collect()
     return sorted((r["repo"], r["path"], r["score"]) for r in rows)
 
 
@@ -254,10 +251,9 @@ def test_no_orphaned_persistent_rdds_after_release(spark, corpus, tmp_path,
     """Judge r2 #4 'Done' check: a build + query cycle leaves the
     session's persistent-RDD map exactly as it found it. write_index
     releases its own caches, and the query path that persist()s —
-    search_with_found (its scored stream) — releases it in its finally
+    search(found=True) (its scored stream) — releases it in its finally
     block; the one-pass and budgeted block-max paths persist nothing."""
     from easy_solr4files_index_spark.operators.index_build import IndexConfig
-    from easy_solr4files_index_spark.operators.wand import search_with_found
 
     corpus.count()  # the module fixture's own cache is not part of the check
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -276,13 +272,13 @@ def test_no_orphaned_persistent_rdds_after_release(spark, corpus, tmp_path,
         return real_persist(self, *args, **kwargs)
 
     monkeypatch.setattr(type(corpus), "persist", spy)
-    assert search_blockmax(idx, QUERY, k=3).count() == 3
-    page, partial = search_budgeted(idx, QUERY, k=3, time_allowed_ms=1e9)
-    assert page.count() == 3 and partial is False
+    assert search(idx, QUERY, k=3).page.count() == 3
+    res = search(idx, QUERY, k=3, time_allowed_ms=1e9)
+    assert res.page.count() == 3 and res.partial is False
     assert not persisted, "a block-max query path persisted"
-    _, found = search_with_found(idx, QUERY, k=3)
+    found = search(idx, QUERY, k=3, found=True).found
     assert found > 3
-    assert persisted, "search_with_found did not persist"
+    assert persisted, "search(found=True) did not persist"
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after == before, f"leaked persistent RDDs: {before} -> {after}"
 
@@ -435,6 +431,31 @@ def test_check_dense_ids_offset_and_corruption(spark):
     check_dense_ids(ok.limit(0), offset=0, label="test")
 
 
+def test_build_density_tripwire_rejects_non_dense():
+    """write_index's tripwire: the docs_store Observation's (min, max,
+    summod, xor) aggregate goes through the same assertion as
+    check_dense_ids, under the build label. A duplicated rank — id 4
+    assigned twice, 5 skipped — fails; the dense series passes."""
+    import functools
+    import operator
+
+    import pytest as _pytest
+
+    from easy_solr4files_index_spark.operators.postings import (
+        _DENSITY_MOD, _assert_dense)
+
+    def agg(ids):
+        return (len(ids), min(ids), max(ids),
+                sum(i % _DENSITY_MOD for i in ids),
+                functools.reduce(operator.xor, ids))
+
+    dense = list(range(1000))
+    _assert_dense(*agg(dense), "build")
+    dup = [i if i != 5 else 4 for i in dense]
+    with _pytest.raises(RuntimeError, match="non-dense id space in build"):
+        _assert_dense(*agg(dup), "build")
+
+
 def test_upsert_with_repos_hint_matches_discovery(spark, corpus,
                                                   tmp_path_factory):
     """repos= (the reference's one-bag update convention — bag id known,
@@ -485,7 +506,7 @@ def test_upsert_rejects_rows_outside_repos_hint(spark, corpus,
     idx = open_index(spark, d)
     oracle = build_oracle([r.asDict() for r in corpus.collect()])
     for text in (QUERY, "hintToken"):
-        got = search_blockmax(idx, text, k=10 ** 6, round_score=None).collect()
+        got = search(idx, text, k=10 ** 6, round_score=None).page.collect()
         exp = oracle_search(oracle, text, k=10 ** 6)
         assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp], text
         assert ([g["score"] for g in got]

@@ -10,7 +10,7 @@ import pytest
 from easy_solr4files_index_spark.functions.codec import decode_postings
 from easy_solr4files_index_spark.operators.index_build import IndexConfig
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax, search_budgeted
+from easy_solr4files_index_spark.operators.wand import envelope, search
 from easy_solr4files_index_spark.oracle.bm25_oracle import build_oracle, oracle_search
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
@@ -43,8 +43,8 @@ QUERIES = [
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)
 def test_wand_rank_identical(built, text, k, skip, filters):
     pidx, _, oracle, _ = built
-    got = search_blockmax(pidx, text, k=k, skip=skip, filters=filters,
-                          round_score=None).collect()
+    got = search(pidx, text, k=k, skip=skip, filters=filters,
+                 round_score=None).page.collect()
     exp = oracle_search(oracle, text, k=k, skip=skip, filters=filters)
     assert [g["doc_id"] for g in got] == [e["doc_id"] for e in exp], text
     assert [g["score"] for g in got] == pytest.approx([e["score"] for e in exp], rel=1e-9)
@@ -53,17 +53,17 @@ def test_wand_rank_identical(built, text, k, skip, filters):
 def _budgeted(pidx, text, k, skip=0):
     """The block-max plan (UB job, phase A, phase B) with a budget it
     never exhausts: it must return the one-pass page exactly."""
-    page, partial = search_budgeted(pidx, text, k=k, skip=skip,
-                                    time_allowed_ms=1e9, round_score=None)
-    assert partial is False
-    return page.collect()
+    res = search(pidx, text, k=k, skip=skip, time_allowed_ms=1e9,
+                 round_score=None)
+    assert res.partial is False
+    return res.page.collect()
 
 
 @pytest.mark.parametrize("text,k", [("parse merge token", 10), ("license", 25)])
 def test_prune_equals_exhaustive(built, text, k):
     pidx, *_ = built
     a = _budgeted(pidx, text, k)
-    b = search_blockmax(pidx, text, k=k, round_score=None).collect()
+    b = search(pidx, text, k=k, round_score=None).page.collect()
     assert [(r["doc_id"], r["score"]) for r in a] == [(r["doc_id"], r["score"]) for r in b]
 
 
@@ -89,7 +89,7 @@ def built_many_buckets(spark, tmp_path_factory):
 def test_real_pruning_rank_identical(built_many_buckets, text, k, skip):
     pidx, oracle = built_many_buckets
     a = _budgeted(pidx, text, k, skip)
-    b = search_blockmax(pidx, text, k=k, skip=skip, round_score=None).collect()
+    b = search(pidx, text, k=k, skip=skip, round_score=None).page.collect()
     assert [(r["doc_id"], r["score"]) for r in a] == \
         [(r["doc_id"], r["score"]) for r in b], text
     exp = oracle_search(oracle, text, k=k, skip=skip)
@@ -113,7 +113,7 @@ def test_prune_tie_at_tau_keeps_lower_docid(spark, tmp_path):
     pidx = open_index(spark, d)
     assert pidx.n_buckets > 32
     a = _budgeted(pidx, "alpha", 4)
-    b = search_blockmax(pidx, "alpha", k=4, round_score=None).collect()
+    b = search(pidx, "alpha", k=4, round_score=None).page.collect()
     assert [(r["doc_id"], r["score"]) for r in a] == \
         [(r["doc_id"], r["score"]) for r in b]
     # tie-break is doc_id asc among equal scores
@@ -180,8 +180,8 @@ def test_kill_resume_identical(spark, tmp_path):
 
     assert canon(a) == canon(b)
     assert a.n_docs == b.n_docs and a.avgdl == b.avgdl
-    got = search_blockmax(a, "parse merge", k=10, round_score=None).collect()
-    exp = search_blockmax(b, "parse merge", k=10, round_score=None).collect()
+    got = search(a, "parse merge", k=10, round_score=None).page.collect()
+    exp = search(b, "parse merge", k=10, round_score=None).page.collect()
     assert [(r["doc_id"], r["score"]) for r in got] == [(r["doc_id"], r["score"]) for r in exp]
 
 
@@ -196,26 +196,27 @@ def test_fetch_by_id_page_identical(built, monkeypatch, text, k, skip, filters):
     pidx, *_ = built
     if text is None:
         pytest.skip("match-all path bypasses scoring/fetch")
-    base = search_blockmax(pidx, text, k=k, skip=skip, filters=filters,
-                           round_score=None).collect()
+    base = search(pidx, text, k=k, skip=skip, filters=filters,
+                  round_score=None).page.collect()
     monkeypatch.setattr(wand_mod, "_FETCH_BY_ID_BYTES", 0)
-    forced = search_blockmax(pidx, text, k=k, skip=skip, filters=filters,
-                             round_score=None).collect()
+    forced = search(pidx, text, k=k, skip=skip, filters=filters,
+                    round_score=None).page.collect()
     assert [tuple(r) for r in forced] == [tuple(r) for r in base], text
 
 
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)
 def test_search_with_found_page_and_count(built, text, k, skip, filters):
-    """Single-pass physical numFound: the page matches search_blockmax
-    and found matches the oracle's full match count (with fq applied)."""
-    from easy_solr4files_index_spark.operators.wand import search_with_found
-
+    """Single-pass physical numFound: the found=True page matches the
+    plain page and found matches the oracle's full match count (with fq
+    applied)."""
     pidx, _, oracle, _ = built
-    page, found = search_with_found(pidx, text, k=k, skip=skip,
-                                    filters=filters, round_score=None)
-    got = page.collect()
-    exp_page = search_blockmax(pidx, text, k=k, skip=skip, filters=filters,
-                               round_score=None).collect()
+    res = search(pidx, text, k=k, skip=skip, filters=filters,
+                 round_score=None, found=True)
+    assert res.partial is False
+    found = res.found
+    got = res.page.collect()
+    exp_page = search(pidx, text, k=k, skip=skip, filters=filters,
+                      round_score=None).page.collect()
     assert [(r["doc_id"], r["score"]) for r in got] == \
         [(r["doc_id"], r["score"]) for r in exp_page], text
     exp_all = oracle_search(oracle, text, k=10 ** 9, skip=0, filters=filters)
@@ -223,13 +224,8 @@ def test_search_with_found_page_and_count(built, text, k, skip, filters):
 
 
 def test_search_envelope_physical_shape(built):
-    import json
-
-    from easy_solr4files_index_spark.operators.wand import (
-        search_envelope_physical)
-
     pidx, *_ = built
-    env = json.loads(search_envelope_physical(pidx, "parse merge", k=5))
+    env = envelope(pidx, "parse merge", k=5)
     # reference summary shape: Solr.scala:91-103 / api.yml:172-256
     assert set(env["summary"]) == {"text", "skip", "limit", "time_allowed",
                                    "found", "returned"}
@@ -245,16 +241,14 @@ def test_search_budgeted_partial_and_complete(built_many_buckets):
     pidx, oracle = built_many_buckets
     text, k = "license merge", 4
 
-    full, partial = search_budgeted(pidx, text, k=k, time_allowed_ms=1e9,
-                                    round_score=None)
-    assert partial is False
+    full = search(pidx, text, k=k, time_allowed_ms=1e9, round_score=None)
+    assert full.partial is False and full.found is None
     exp = oracle_search(oracle, text, k=k, skip=0)
-    assert [r["doc_id"] for r in full.collect()] == [e["doc_id"] for e in exp]
+    assert [r["doc_id"] for r in full.page.collect()] == [e["doc_id"] for e in exp]
 
-    page, partial = search_budgeted(pidx, text, k=k, time_allowed_ms=0.0,
-                                    round_score=None)
-    rows = page.collect()
-    assert partial is True
+    res = search(pidx, text, k=k, time_allowed_ms=0.0, round_score=None)
+    rows = res.page.collect()
+    assert res.partial is True
     assert 0 < len(rows) <= k
     # partial results are a SUBSET of real matches with exact scores
     truth = {e["doc_id"]: e["score"] for e in
@@ -268,10 +262,9 @@ def test_search_budgeted_small_index_completes(built):
     """Below the hot-set size the plan is exhaustive in one pass — the
     budget can never split it, so partial is always False."""
     pidx, *_ = built
-    page, partial = search_budgeted(pidx, "parse", k=5, time_allowed_ms=0.0,
-                                    round_score=None)
-    assert partial is False
-    assert len(page.collect()) == 5
+    res = search(pidx, "parse", k=5, time_allowed_ms=0.0, round_score=None)
+    assert res.partial is False
+    assert len(res.page.collect()) == 5
 
 
 def test_degraded_docs_counted_and_metadata_only(spark, tmp_path):
@@ -300,11 +293,11 @@ def test_degraded_docs_counted_and_metadata_only(spark, tmp_path):
     assert pidx.degraded_docs == 2
     # metadata-only: reachable by match-all + metadata filter and by its
     # PATH tokens (copyField path -> text), invisible to content terms
-    rows = search_blockmax(pidx, None, k=10,
-                           filters={"repo": ["org0/broken"]}).collect()
+    rows = search(pidx, None, k=10,
+                  filters={"repo": ["org0/broken"]}).page.collect()
     assert {r["path"] for r in rows} == {"bin/Corrupt0001.pdf",
                                          "bin/Corrupt0002.pdf"}
-    hits = search_blockmax(pidx, "corrupt0001", k=5).collect()
+    hits = search(pidx, "corrupt0001", k=5).page.collect()
     assert [r["path"] for r in hits] == ["bin/Corrupt0001.pdf"]
     # the flag is an ordinary filterable docs_store column
     assert pidx.docs_store.filter(F.col("meta_only")).count() == 2

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from easy_solr4files_index_spark.operators.query import QueryParseError
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import envelope, search
 
 
 @pytest.fixture(scope="module")
@@ -18,33 +18,33 @@ def idx(code_index):
 
 def test_undefined_filter_field_raises(idx):
     with pytest.raises(QueryParseError, match="undefined filter field"):
-        search_blockmax(idx, "parse", filters={"no_such_col": ["x"]}).collect()
+        search(idx, "parse", filters={"no_such_col": ["x"]}).page.collect()
 
 
 def test_unknown_filter_op_raises(idx):
     with pytest.raises(QueryParseError, match="unknown filter op"):
-        search_blockmax(idx, "parse", filters=["xor", ["in", "lang", ["java"]]]).collect()
+        search(idx, "parse", filters=["xor", ["in", "lang", ["java"]]]).page.collect()
 
 
 def test_invalid_limit_skip_default_like_reference(idx):
     """SearchServlet.scala:76-77: invalid limit/skip silently default to
     10/0 — NOT an error (only parse errors 400)."""
-    rows = search_blockmax(idx, "parse", k=-3, skip=-1).collect()
+    rows = search(idx, "parse", k=-3, skip=-1).page.collect()
     assert 0 < len(rows) <= 10
 
 
 def test_empty_synonyms_is_identity(idx):
-    a = [(r["doc_id"], r["score"]) for r in search_blockmax(idx, "parse merge").collect()]
+    a = [(r["doc_id"], r["score"]) for r in search(idx, "parse merge").page.collect()]
     b = [(r["doc_id"], r["score"])
-         for r in search_blockmax(idx, "parse merge", synonyms={}).collect()]
+         for r in search(idx, "parse merge", synonyms={}).page.collect()]
     assert a == b
 
 
 def test_synonyms_expand_the_disjunction(idx):
     """search('parse', {parse: [merge]}) == search('parse merge')."""
     a = [(r["doc_id"], r["score"])
-         for r in search_blockmax(idx, "parse", synonyms={"parse": ["merge"]}).collect()]
-    b = [(r["doc_id"], r["score"]) for r in search_blockmax(idx, "parse merge").collect()]
+         for r in search(idx, "parse", synonyms={"parse": ["merge"]}).page.collect()]
+    b = [(r["doc_id"], r["score"]) for r in search(idx, "parse merge").page.collect()]
     assert a == b
 
 
@@ -53,10 +53,10 @@ def test_multiword_synonyms_tokenize_through_analyzer(idx):
     synonym STRING goes through the same analyzer chain — 'Index License'
     contributes BOTH terms (lowercased) to the disjunction."""
     a = [(r["doc_id"], r["score"])
-         for r in search_blockmax(idx, "parse",
-                         synonyms={"parse": ["Index License"]}).collect()]
+         for r in search(idx, "parse",
+                         synonyms={"parse": ["Index License"]}).page.collect()]
     b = [(r["doc_id"], r["score"])
-         for r in search_blockmax(idx, "parse index license").collect()]
+         for r in search(idx, "parse index license").page.collect()]
     assert a == b
 
 
@@ -64,9 +64,9 @@ def test_multiword_synonym_stopwords_dropped(idx):
     """Stopwords inside a synonym phrase are filtered exactly like query
     text ('the merge' expands to just 'merge')."""
     a = [(r["doc_id"], r["score"])
-         for r in search_blockmax(idx, "parse", synonyms={"parse": ["the merge"]}).collect()]
+         for r in search(idx, "parse", synonyms={"parse": ["the merge"]}).page.collect()]
     b = [(r["doc_id"], r["score"])
-         for r in search_blockmax(idx, "parse merge").collect()]
+         for r in search(idx, "parse merge").page.collect()]
     assert a == b
 
 
@@ -74,20 +74,15 @@ def test_logical_envelope_single_pass_found(idx):
     """The JSON envelope: found == the full match count, page == search
     — from ONE scoring pass (Solr returns both from one query
     execution)."""
-    import json
-
-    from easy_solr4files_index_spark.operators.wand import (
-        search_envelope_physical)
-
-    env = json.loads(search_envelope_physical(idx, "parse merge", k=5))
+    env = envelope(idx, "parse merge", k=5)
     assert env["summary"]["found"] == \
-        search_blockmax(idx, "parse merge", k=10 ** 6).count()
+        search(idx, "parse merge", k=10 ** 6).page.count()
     assert env["summary"]["returned"] == len(env["fileitems"]) == 5
-    page = search_blockmax(idx, "parse merge", k=5).collect()
+    page = search(idx, "parse merge", k=5).page.collect()
     assert [(i["repo"], i["path"], i["score"]) for i in env["fileitems"]] == \
         [(r["repo"], r["path"], r["score"]) for r in page]
 
-    env_all = json.loads(search_envelope_physical(idx, None, k=7))
+    env_all = envelope(idx, None, k=7)
     assert env_all["summary"]["found"] == idx.docs_store.count()
     assert env_all["summary"]["returned"] == 7
 
@@ -95,9 +90,9 @@ def test_logical_envelope_single_pass_found(idx):
 def test_fq_pushdown_same_results(idx):
     """fq below the aggregate (round-3 plan change) must not change any
     result: filtered search == unfiltered search restricted to the fq."""
-    unfiltered = search_blockmax(idx, "parse merge", k=10 ** 6).collect()
-    filtered = search_blockmax(idx, "parse merge", k=10 ** 6,
-                      filters={"lang": ["java", "python"]}).collect()
+    unfiltered = search(idx, "parse merge", k=10 ** 6).page.collect()
+    filtered = search(idx, "parse merge", k=10 ** 6,
+                      filters={"lang": ["java", "python"]}).page.collect()
     expect = [(r["doc_id"], r["score"]) for r in unfiltered
               if r["lang"] in ("java", "python")]
     assert [(r["doc_id"], r["score"]) for r in filtered] == expect

@@ -8,13 +8,13 @@ from pyspark.sql import functions as F
 
 from easy_solr4files_index_spark.functions import similarity
 from easy_solr4files_index_spark.operators.postings import open_index, write_index
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search
 from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 from easy_solr4files_index_spark.streaming.ingest import stream_upsert
 
 
 def _listing(idx, text="parse index"):
-    rows = (search_blockmax(idx, text, k=10 ** 6)
+    rows = (search(idx, text, k=10 ** 6).page
             .select("repo", "path", "score").collect())
     return sorted((r["repo"], r["path"], r["score"]) for r in rows)
 

@@ -14,7 +14,7 @@ import zipimport
 import pandas as pd
 import pytest
 
-from easy_solr4files_index_spark.operators.wand import search_blockmax
+from easy_solr4files_index_spark.operators.wand import search
 from easy_solr4files_index_spark.zipguard import install_zip_guard
 
 guarded_python = pytest.mark.skipif(
@@ -116,7 +116,7 @@ def test_worker_does_not_reread_archives_per_task(spark, code_index):
     PySpark makes at the start of every task); without the guard
     Python 3.11 re-reads one directory per zipimporter, 16 in all."""
     _, idx = code_index
-    search_blockmax(idx, "parse merge", k=3).collect()
+    search(idx, "parse merge", k=3).page.collect()
 
     def probe(batches):
         import importlib

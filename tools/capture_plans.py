@@ -26,7 +26,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from easy_solr4files_index_spark.operators.postings import open_index, write_index
-    from easy_solr4files_index_spark.operators.wand import search_blockmax
+    from easy_solr4files_index_spark.operators.wand import search
     from easy_solr4files_index_spark.functions.similarity import ivf_topk
     from easy_solr4files_index_spark.session import get_spark
     from easy_solr4files_index_spark.sources.docs_source import load_docs
@@ -42,15 +42,20 @@ def main() -> None:
 
     sections.append((
         "Top-k BM25 over the physical index",
-        "`search_blockmax(idx, 'spark join', k=5)` (exhaustive path — the "
-        "prune path adds one bucket-UB aggregate over the same pruned scan).\n"
+        "`search(idx, 'spark join', k=5).page` — the one-pass bucket-local "
+        "top-k of a plain OR query.\n"
         "Look for: `PartitionFilters` with `tbucket` (term-bucket partition "
-        "pruning), `PushedFilters: In(term, ...)` (parquet row-group "
-        "pruning) on BOTH the postings and termstats scans (idf is now "
-        "joined in-plan, not collected), a single `TakeOrderedAndProject` "
-        "cut on the narrow (doc_id, score) stream, and the broadcast join "
-        "of the k winners back to docs_store.",
-        fmt(search_blockmax(idx, "spark join", k=5, prune=False)),
+        "pruning) and `PushedFilters: In(term, ...)` (parquet row-group "
+        "pruning) on the postings scan, and NO termstats scan or join — idf "
+        "is a literal `CASE` column from the reader's memoized idf map; ONE "
+        "`Exchange hashpartitioning(bucket)` (the `repartition(\"bucket\")`) "
+        "feeding ONE `MapInPandas` (the top-k kernel: decode, tombstone "
+        "mask, per-doc sum and local top `k+skip` in one pass — no "
+        "`HashAggregate` over doc_id); a `TakeOrderedAndProject` cut on "
+        "the narrow (doc_id, score) stream; and the `BroadcastExchange` of "
+        "those k winners into a `BroadcastHashJoin` with docs_store for "
+        "their stored fields.",
+        fmt(search(idx, "spark join", k=5).page),
     ))
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -104,22 +109,24 @@ def main() -> None:
     ))
 
     sections.append((
-        "Filter query pushed BELOW the scoring aggregate (round-3)",
-        "`search_blockmax(idx, 'parse merge', k=5, filters={lang:[java]})`.\n"
-        "Look for: the `LeftSemi` join of the decoded (doc_id, contrib) "
-        "stream against the fq's doc_id projection BELOW the "
-        "`HashAggregate(keys=[doc_id], sum(contrib))` — scores are never "
-        "computed for docs the fq excludes; with a 1%-selective fq the "
-        "aggregate processes 1% of the rows. The semijoin and the "
-        "aggregate share the doc_id key, so no extra shuffle of the "
-        "posting stream is introduced.",
-        fmt(search_blockmax(idx, "parse merge", k=5, prune=False,
-                            filters={"lang": ["java"]})),
+        "Filter query applied INSIDE the scoring kernel",
+        "`search(idx, 'parse merge', k=5, filters={lang:[java]}).page`.\n"
+        "Look for: the fq's docs_store scan (`lang` pushed as a parquet "
+        "filter) projected to empty block rows keyed by "
+        "`bucket = doc_id DIV bucket_span` and `Union`ed with the pruned "
+        "postings blocks, both under the same `Exchange "
+        "hashpartitioning(bucket)` into the one `MapInPandas` kernel, which "
+        "masks the decoded postings by the fq ids — scores are never summed "
+        "for docs the fq excludes, and the fq adds no join and no second "
+        "exchange. `TakeOrderedAndProject` and the broadcast stored-field "
+        "join finish the page as above.",
+        fmt(search(idx, "parse merge", k=5,
+                   filters={"lang": ["java"]}).page),
     ))
 
     sections.append((
         "Boolean/phrase dismax query over the physical index (round-3)",
-        "`search_blockmax(idx, '+\\\"spark join\\\" merge -parse', k=5)` — "
+        "`search(idx, '+\\\"spark join\\\" merge -parse', k=5).page` — "
         "required phrase + optional term + prohibited term.\n"
         "Look for: the positions/ scan pruned by `PartitionFilters` on "
         "`tbucket` and `PushedFilters: In(term, ...)` (the phrase reads "
@@ -135,7 +142,7 @@ def main() -> None:
         "plain count over the unique-by-construction (doc_id, cid) rows "
         "— no count_distinct double-aggregate) — clause count never "
         "multiplies the shuffle count.",
-        fmt(search_blockmax(idx, '+"spark join" merge -parse', k=5)),
+        fmt(search(idx, '+"spark join" merge -parse', k=5).page),
     ))
 
     from easy_solr4files_index_spark.operators.docids import assign_doc_ids

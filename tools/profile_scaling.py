@@ -1,6 +1,6 @@
 """Per-stage build-scaling profiler: run the SAME physical index build at
-two pinned core counts with SPARK_FTS_TIMINGS marks, and print the
-per-stage wall-clock so non-scaling (Amdahl) stages are visible.
+two pinned core counts and print the per-stage wall-clock
+(BuildReport.stage_sec) so non-scaling (Amdahl) stages are visible.
 
 Usage:
     python tools/profile_scaling.py gen <n_docs>      # materialize corpus
@@ -31,7 +31,6 @@ def main() -> None:
     cpus = int(sys.argv[2])
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 200000
     corpus = f"/tmp/fts_scale_corpus_v2_{n}"
-    os.environ["SPARK_FTS_TIMINGS"] = "1"
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
     from easy_solr4files_index_spark.session import get_spark
     from easy_solr4files_index_spark.operators.postings import write_index
@@ -48,7 +47,9 @@ def main() -> None:
     idx = tempfile.mkdtemp(prefix="fts_prof_idx_")
     try:
         t0 = time.perf_counter()
-        write_index(spark, docs, idx, lineage_groups=1)
+        report = write_index(spark, docs, idx, lineage_groups=1)
+        for stage, sec in report.stage_sec.items():
+            print(f"[write_index] {stage:24s} {sec:7.2f}s", file=sys.stderr, flush=True)
         print(f"TOTAL build_sec={time.perf_counter() - t0:.2f} cpus={cpus}", file=sys.stderr, flush=True)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
