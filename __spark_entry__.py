@@ -161,11 +161,14 @@ def _q_cached_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing of the deterministic total order)."""
     from easy_solr4files_index_spark.operators.caches import SearcherCaches
 
+    import pyarrow as pa
+
     caches = SearcherCaches(_index(spark, sf_dir))
     caches.search("spark join merge", k=10)            # populate
     rows, _ = caches.search("spark join merge", k=10)  # LRU hit
     assert caches.results.hits >= 1
-    return spark.createDataFrame(rows, _PAGE_SCHEMA)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [r.asDict() for r in rows], schema=_PAGE_SCHEMA))
 
 
 def _index_maint(spark: SparkSession, sf_dir: str, mode: str):

@@ -44,7 +44,7 @@ from pyspark.storagelevel import StorageLevel
 _PageRow = Row("doc_id", "repo", "path", "lang", "score")
 
 from .postings import PhysicalIndex
-from .wand import search
+from .wand import _cut, search
 
 QUERY_RESULT_WINDOW = 20    # solrconfig.xml:588
 QUERY_RESULT_MAX_DOCS = 200  # solrconfig.xml:593
@@ -58,10 +58,10 @@ class _LRU:
     cache stats Solr exposes on its admin handler).
 
     No separate documentCache: Solr needs one because its DocList holds
-    bare ids that a second lookup resolves to stored fields; here the
-    stored-field join is fused INTO the page plan (wand._stored_fields_
-    page), so the queryResultCache entry already carries the complete
-    rendered rows and a per-doc cache would never be consulted."""
+    bare ids that a second lookup resolves to stored fields; here every
+    page already carries its winners' stored fields (wand._local_page),
+    so the queryResultCache entry holds the complete rendered rows and a
+    per-doc cache would never be consulted."""
 
     def __init__(self, size: int, on_evict: Callable | None = None):
         self.size, self.on_evict = size, on_evict
@@ -110,17 +110,6 @@ class _LRU:
     def __len__(self) -> int:
         with self._lock:
             return len(self._d)
-
-
-def _round_half_up(x: float, scale: int) -> float:
-    """Exact driver-side twin of Catalyst's Round on DoubleType:
-    BigDecimal(Double.toString(x)).setScale(scale, HALF_UP). Python's
-    repr is the same shortest round-trip decimal as Double.toString, so
-    quantizing it HALF_UP reproduces F.round bit-for-bit."""
-    import decimal
-    q = decimal.Decimal(1).scaleb(-scale)
-    return float(decimal.Decimal(repr(x)).quantize(
-        q, rounding=decimal.ROUND_HALF_UP))
 
 
 def _canon(filters: dict | None) -> str:
@@ -180,7 +169,7 @@ class SearcherCaches:
 
         What it can and cannot buy (measured, BENCH/README q-row
         `query_p95_warm_sec`): scan+decode time goes away, but a query's
-        2-4 sequential jobs keep their per-job scheduling floor —
+        1-3 sequential jobs keep their per-job scheduling floor —
         the cache removes I/O from each job, not the jobs. positions is
         included automatically when the index carries it (phrase
         queries). Warmed data is dropped by clear()/rebind() along with
@@ -252,14 +241,11 @@ class SearcherCaches:
 
         The direct path cuts the page by UNROUNDED score (the
         deterministic total order) and only then rounds + re-sorts the
-        page rows (wand._topk_page → _stored_fields_page). A window cached
-        already-rounded would re-sort across the page boundary: two
-        distinct raw scores that round equal straddling rank skip+k
-        would swap membership vs the direct cut. So the cache stores the
-        UNROUNDED window (its order IS the cut order — slicing it equals
-        offset/limit), and the slice is rounded + re-sorted here with an
-        exact driver-side twin of F.round (HALF_UP over the shortest
-        round-trip decimal — BigDecimal(Double.toString) semantics).
+        page rows (wand._cut). A window cached already-rounded would
+        re-sort across the page boundary: two distinct raw scores that
+        round equal straddling rank skip+k would swap membership vs the
+        direct cut. So the cache stores the UNROUNDED window (its order
+        IS the cut order) and cuts it with the same wand._cut.
 
         Solr's queryResultCache entry is a DocList that CARRIES the match
         total (DocList.matches()), so a repeated ``found=True`` request is
@@ -293,19 +279,4 @@ class SearcherCaches:
             if found:
                 self.results.put(base, (hit[0], None))  # seed the page entry
         rows, n = hit
-        return self._slice(rows, skip, upper, round_score), n
-
-    @staticmethod
-    def _slice(rows: list, skip: int, upper: int,
-               round_score: int | None) -> list:
-        """Cut the UNROUNDED cached window exactly like the direct path:
-        slice the deterministic total order, then round + re-sort the
-        page rows by (rounded score, doc_id)."""
-        page = rows[skip:upper]
-        if round_score is None:
-            return page
-        rounded = [_PageRow(r["doc_id"], r["repo"], r["path"], r["lang"],
-                            _round_half_up(r["score"], round_score))
-                   for r in page]
-        rounded.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        return rounded
+        return [_PageRow(*r) for r in _cut(rows, skip, k, round_score)], n

@@ -634,14 +634,38 @@ class PhysicalIndex:
         # re-reads footers on every call — a fixed per-query driver cost
         # worth paying once per open, not once per property access
         self._cache: dict[str, DataFrame] = {}
+        self._datasets: dict = {}
 
     def path_of(self, name: str) -> str:
         return os.path.join(self.index_dir, gen_name(name, self.generation))
 
     def _read(self, name: str) -> DataFrame:
         if name not in self._cache:
-            self._cache[name] = self.spark.read.parquet(self.path_of(name))
+            reader = self.spark.read
+            schema = self._footer_schema(name)
+            if schema is not None:
+                reader = reader.schema(schema)
+            self._cache[name] = reader.parquet(self.path_of(name))
         return self._cache[name]
+
+    def _footer_schema(self, name: str):
+        """The Spark schema a Spark write left in the dataset's parquet
+        footer, plus its hive partition columns: what Spark's own schema
+        inference reads, without the Spark job that inference runs on a
+        reader's first read of each dataset. None (infer) when the footer
+        carries no Spark schema."""
+        from pyspark.sql.pandas.types import from_arrow_type
+        from pyspark.sql.types import StructType
+        data = self.arrow(name)
+        meta = (data.schema.metadata or {}) if data is not None else {}
+        row = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if row is None:
+            return None
+        schema = StructType.fromJson(json.loads(row))
+        for f in data.schema:
+            if f.name not in schema.names:
+                schema.add(f.name, from_arrow_type(f.type))
+        return schema
 
     def _not_tombstoned(self) -> F.Column:
         cond = F.lit(True)
@@ -662,23 +686,19 @@ class PhysicalIndex:
             df = df.filter(self._not_tombstoned())
         return df
 
-    @property
-    def docs_store_bytes(self) -> int:
-        """On-disk size of the stored-fields dataset (memoized). Drives
-        the query-side fetch strategy: past a threshold the k winners'
-        stored fields are fetched via a doc_id IN (...) pushed filter
-        (row-group pruning) instead of a full-store broadcast join —
-        see operators/wand._stored_fields_page."""
-        if not hasattr(self, "_docs_store_bytes"):
-            total = 0
-            for root, _dirs, files in os.walk(self.path_of("docs_store")):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-            self._docs_store_bytes = total
-        return self._docs_store_bytes
+    def arrow(self, name: str):
+        """Dataset ``name`` as a memoized pyarrow dataset (hive
+        partitions read as columns), or None when it holds no file: the
+        driver's by-key reads — a page's stored fields, a query's term
+        df (operators/wand.py) — filter it without a Spark job. Like
+        ``_read`` it lists the files once per reader."""
+        if name not in self._datasets:
+            import pyarrow.dataset as pads
+            path = self.path_of(name)
+            data = (pads.dataset(path, format="parquet", partitioning="hive")
+                    if os.path.exists(path) else None)
+            self._datasets[name] = data if data and data.files else None
+        return self._datasets[name]
 
     @property
     def postings(self) -> DataFrame:

@@ -20,16 +20,23 @@ a top-k heap. The Spark-native shape of that pass is BUCKET-LOCAL top-k:
      (np.unique + np.bincount) and keeps the local top ``k+skip`` rows by
      (score desc, doc_id asc). With one term and no fq each doc sits in
      exactly one block, so the repartition is skipped.
-  4. TakeOrdered over the partitions' local winners cuts the page,
-     and the k winners' stored fields come from a broadcast join.
+  4. The partitions' local winners come back in ONE collect; the driver
+     cuts the page, reads the k winners' stored fields by doc_id with
+     Arrow (row-group statistics prune the docs_store read) and returns
+     the page as a local DataFrame — no broadcast, join or sort job.
+     idf comes the same way: df read by term from termstats with Arrow,
+     no Spark job (Lucene reads stored fields and term statistics by
+     docID and term, not by a second pass).
 
 This is the partition-local top-k aggregation of "Cache-Efficient Top-k
 Aggregation over High Cardinality Large Datasets" (VLDB 2023), run as a
 batch kernel instead of per-row Python.
 
 ``search`` is the one query entry point and returns
-``SearchResult(page, found, partial)``. ``found=True`` runs the same
-kernel with no local cut (exact counting must visit every match); a
+``SearchResult(page, found, partial)``; the page is computed eagerly.
+``found=True`` runs the same kernel, whose partitions also report their
+match counts beside their winners (exact counting visits every match
+anyway); a
 ``time_allowed_ms`` budget keeps block-max bucket bounds (Σ idf·max_tfnorm,
 from block metadata alone) to order the kernel's work into a hot phase
 and a completion phase that the budget can skip. ``envelope`` renders
@@ -44,16 +51,20 @@ from __future__ import annotations
 import time
 from typing import Iterator, NamedTuple
 
+import decimal
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.codec import decode_blocks, in_ranges
 from ..functions.xxhash import term_bucket
 from .dismax import is_plain_or, parse_dismax, plain_terms
 from .postings import PhysicalIndex
-from .query import (_dlit, _expand_clause_synonyms, _filters_expr, _idf_expr,
-                    _sstr, _term_case_sql, combine_clause_rows, score_phrase,
+from .query import (_dlit, _expand_clause_synonyms, _filters_expr, _sstr,
+                    _term_case_sql, combine_clause_rows, score_phrase,
                     validate_filters)
 
 
@@ -66,9 +77,10 @@ def _bm25(idf: np.ndarray, tfs: np.ndarray, dls: np.ndarray, k1: float,
 
 def _topk_kernel(k1: float, b: float, avgdl: float,
                  tombstones: tuple[tuple[int, int], ...], use_fq: bool,
-                 cut: int | None):
+                 cut: int):
     """The bucket-local top-k pass over one partition of
-    (bucket, term, n, doc_ids, tfs, dls, idf, fq) rows -> (doc_id, score).
+    (bucket, term, n, doc_ids, tfs, dls, idf, fq) rows -> (doc_id, score,
+    matches).
 
     Block rows carry ``fq = -1``; with an fq each passing doc adds one
     empty block row carrying its id in ``fq``. The whole partition is
@@ -76,7 +88,9 @@ def _topk_kernel(k1: float, b: float, avgdl: float,
     (bucket, term) so every doc sums its terms in one fixed order — the
     scores are bit-identical whichever partition or batch a block arrived
     in — and decoded in one pass. ``cut`` keeps the local top ``cut``
-    by (score desc, doc_id asc); None keeps every match."""
+    by (score desc, doc_id asc). The partition's match count rides on its
+    first row's ``matches`` (0 on the others), so the column sums to the
+    query's exact match count: a doc's postings all reach one partition."""
     avgdl = avgdl if avgdl > 0 else 1.0
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -100,10 +114,14 @@ def _topk_kernel(k1: float, b: float, avgdl: float,
         docs, inv = np.unique(ids, return_inverse=True)
         scores = np.bincount(inv, weights=_bm25(idf, tfs, dls, k1, b, avgdl),
                              minlength=docs.size)
-        if cut is not None and docs.size > cut:
+        matches = docs.size
+        if docs.size > cut:
             top = np.lexsort((docs, -scores))[:cut]
             docs, scores = docs[top], scores[top]
-        yield pd.DataFrame({"doc_id": docs, "score": scores})
+        counts = np.zeros(docs.size, np.int64)
+        counts[0] = matches
+        yield pd.DataFrame({"doc_id": docs, "score": scores,
+                            "matches": counts})
 
     return kernel
 
@@ -148,49 +166,77 @@ def _term_clause_rows(blocks: DataFrame, cmap: list[tuple[str, int, str]],
                         "contrib"))
 
 
-# Stored-field fetch strategy cutover (bytes of docs_store on disk).
-# Below: broadcast the ≤k-row page onto a full store scan — one job, and
-# at small scale the scan is cheaper than a second driver round-trip.
-# Above: collect the k winner ids and fetch stored fields through a
-# doc_id IN (...) filter PUSHED to parquet row-group statistics — the
-# lookup reads ~k row groups instead of the whole store (Lucene's
-# fetch-stored-fields-by-docID shape; at 100 TB the full-store scan is
-# the difference between milliseconds and a cluster-wide pass).
-_FETCH_BY_ID_BYTES = 1 << 30
-
 # the timeAllowed the reference pins on every request (SearchServlet.scala:97),
 # echoed in the envelope's summary
 _TIME_ALLOWED_MS = 5000
 
 _PAGE_COLS = ("doc_id", "repo", "path", "lang", "score")
-_PAGE_SCHEMA = "doc_id long, repo string, path string, lang string, score double"
+_PAGE_SCHEMA = pa.schema([("doc_id", pa.int64()), ("repo", pa.string()),
+                          ("path", pa.string()), ("lang", pa.string()),
+                          ("score", pa.float64())])
 
 
-def _stored_fields_page(index: PhysicalIndex, page_narrow: DataFrame,
-                        k: int) -> DataFrame:
-    """(doc_id, score) page (≤ k rows) -> full result page with stored
-    fields, ordered (score desc, doc_id asc). See _FETCH_BY_ID_BYTES for
-    the two physical strategies. Both end in orderBy + limit, which plans
-    as TakeOrderedAndProject: a bare orderBy would plan a range-partition
-    exchange (a sampling job and a shuffle job) to sort ≤ k rows."""
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
-    cols = list(_PAGE_COLS)
-    if index.docs_store_bytes < _FETCH_BY_ID_BYTES:
-        return (F.broadcast(page_narrow)
-                .join(index.docs_store.select("doc_id", "repo", "path", "lang"),
-                      "doc_id")
-                .orderBy(*order).limit(k).select(*cols))
-    rows = page_narrow.collect()
-    if not rows:
-        return index.spark.createDataFrame([], _PAGE_SCHEMA)
-    score_df = index.spark.createDataFrame(
-        [(int(r["doc_id"]), float(r["score"])) for r in rows],
-        "doc_id long, score double")
-    fields = (index.docs_store
-              .filter(F.col("doc_id").isin([int(r["doc_id"]) for r in rows]))
-              .select("doc_id", "repo", "path", "lang"))
-    return (fields.join(F.broadcast(score_df), "doc_id")
-            .orderBy(*order).limit(k).select(*cols))
+def _round_half_up(x: float, scale: int) -> float:
+    """Exact driver-side twin of Catalyst's Round on DoubleType:
+    BigDecimal(Double.toString(x)).setScale(scale, HALF_UP). Python's
+    repr is the same shortest round-trip decimal as Double.toString, so
+    quantizing it HALF_UP reproduces F.round bit-for-bit."""
+    q = decimal.Decimal(1).scaleb(-scale)
+    return float(decimal.Decimal(repr(x)).quantize(
+        q, rounding=decimal.ROUND_HALF_UP))
+
+
+def _rank(r: tuple) -> tuple:
+    """Sort key of a (doc_id, ..., score) record: score desc, doc_id asc."""
+    return (-r[-1], r[0])
+
+
+def _cut(rows: list, skip: int, k: int, round_score: int | None) -> list[tuple]:
+    """The page of ``rows``, records (doc_id, ..., score) in the unrounded
+    (score desc, doc_id asc) order: sliced to ``[skip, skip+k)`` on that
+    order, then the scores rounded HALF_UP to ``round_score`` places and
+    the slice re-sorted by (rounded score desc, doc_id asc). Cutting
+    before rounding keeps the page set exact when two scores that round
+    equal straddle the page boundary. The direct path (_finish) and the
+    queryResultCache's window slices (caches.SearcherCaches) both cut
+    here, so their pages agree bit for bit."""
+    page = [tuple(r) for r in rows[skip:skip + k]]
+    if round_score is None:
+        return page
+    page = [(*r[:-1], _round_half_up(r[-1], round_score)) for r in page]
+    page.sort(key=_rank)
+    return page
+
+
+def _local_page(index: PhysicalIndex, page: list[tuple]) -> DataFrame:
+    """(doc_id, score) page rows -> the result page with stored fields,
+    in the given order, as a local DataFrame (LocalTableScan: collecting
+    it runs no Spark job). The stored fields of just those ids are read
+    with Arrow, ``doc_id`` range and IN filters letting row-group
+    statistics prune the docs_store read — Lucene's fetch of stored
+    fields by docID. A winner is never tombstoned, so the raw store (a
+    tombstoned doc's row stays on disk under its old id) serves it."""
+    rows = []
+    if page:
+        ids = [d for d, _ in page]
+        field = pc.field("doc_id")
+        t = index.arrow("docs_store").to_table(
+            columns=["doc_id", "repo", "path", "lang"],
+            filter=((field >= min(ids)) & (field <= max(ids))
+                    & field.isin(ids)))
+        stored = {r["doc_id"]: r for r in t.to_pylist()}
+        rows = [{**stored[d], "score": s} for d, s in page if d in stored]
+    return index.spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=_PAGE_SCHEMA))
+
+
+def _finish(index: PhysicalIndex, winners: list[tuple[int, float]], q: _Query,
+            round_score: int | None) -> DataFrame:
+    """The page from a scoring pass's collected (doc_id, score) winners:
+    ranked on the driver, cut (_cut), stored fields fetched by key
+    (_local_page)."""
+    return _local_page(index, _cut(sorted(winners, key=_rank), q.skip, q.k,
+                                   round_score))
 
 
 def _prune_pred_sql(terms: list[str], term_buckets: int) -> str:
@@ -203,6 +249,35 @@ def _prune_pred_sql(terms: list[str], term_buckets: int) -> str:
             f"AND term IN ({tlist})")
 
 
+def _df_map(index: PhysicalIndex, terms: list[str]) -> dict[str, int]:
+    """{term: df} for the index's live terms among ``terms``: base
+    termstats plus the maintenance deltas, read by key with Arrow (the
+    tbucket partition directories and the term row-group statistics
+    prune the read), summed per term, df > 0 kept — the merged view of
+    ``PhysicalIndex.termstats`` without a Spark job."""
+    tbs = sorted({term_bucket(t, index.config.term_buckets) for t in terms})
+    pred = pc.field("tbucket").isin(tbs) & pc.field("term").isin(terms)
+    df: dict[str, int] = {}
+    for name in ("termstats", "_termstats_delta"):
+        data = index.arrow(name)
+        if data is None:
+            continue
+        t = data.to_table(columns=["term", "df"], filter=pred)
+        for term, n in zip(t.column("term").to_pylist(),
+                           t.column("df").to_pylist()):
+            df[term] = df.get(term, 0) + n
+    return {t: n for t, n in df.items() if n > 0}
+
+
+def _idf(index: PhysicalIndex, df: int) -> float:
+    """Lucene idf log(1 + (N − df + 0.5)/(df + 0.5)), bit-identical to
+    query._idf_expr: the same double operations in the same order, and
+    the log is java.lang.StrictMath.log, which Spark's ``log`` evaluates
+    (Python's math.log differs from it in the last bit for some df)."""
+    x = 1.0 + (float(index.n_docs) - df + 0.5) / (df + 0.5)
+    return index.spark.sparkContext._jvm.java.lang.StrictMath.log(x)
+
+
 def _idf_map_cached(index: PhysicalIndex, terms: list[str]) -> dict[str, float]:
     """{term: Lucene idf} for the index's terms among ``terms``, memoized
     for the lifetime of the reader — Lucene likewise resolves term
@@ -210,21 +285,13 @@ def _idf_map_cached(index: PhysicalIndex, terms: list[str]) -> dict[str, float]:
     index (new PhysicalIndex), so the cache cannot outlive the n_docs/df
     values it was computed from. Terms absent from the index are
     remembered as absent (no repeat lookups for them either); only
-    genuinely new terms pay the pruned termstats collect."""
+    genuinely new terms pay the Arrow df read (_df_map)."""
     cache: dict[str, float | None] = index.__dict__.setdefault("_idf_cache", {})
     miss = sorted(t for t in terms if t not in cache)
     if miss:
-        tbs = sorted({term_bucket(t, index.config.term_buckets) for t in miss})
-        found = {
-            r["term"]: float(r["idf"])
-            for r in (index.termstats
-                      .filter(F.col("tbucket").isin(tbs)
-                              & F.col("term").isin(miss))
-                      .withColumn("idf", _idf_expr(index.n_docs))
-                      .select("term", "idf").collect())
-        }
+        df = _df_map(index, miss)
         for t in miss:
-            cache[t] = found.get(t)
+            cache[t] = _idf(index, df[t]) if t in df else None
     return {t: v for t in terms if (v := cache.get(t)) is not None}
 
 
@@ -233,8 +300,8 @@ def _idf_blocks(index: PhysicalIndex, terms: list[str],
     """Postings blocks of ``terms``, term/tbucket-pruned, with their idf
     from ``idf_map`` as a literal CASE column: one parsed expression (a
     per-term F.when chain costs a Py4J round-trip per node) and no join
-    against termstats. idf was evaluated JVM-side by the same _idf_expr
-    plan, so scores are bit-identical to an in-plan join."""
+    against termstats. idf is bit-identical to the _idf_expr plan
+    (_idf), so scores equal an in-plan join's."""
     idf = _term_case_sql({t: _dlit(idf_map[t]) for t in terms if t in idf_map},
                          "CAST(NULL AS DOUBLE)")
     return (index.postings
@@ -260,11 +327,11 @@ def _score_boolean_physical(index: PhysicalIndex, clauses,
     phrase_clauses = [(i, c) for i, c in enumerate(clauses) if c.is_phrase]
     all_terms = sorted({t for _, c in term_clauses for t in c.terms}
                        | {t for _, c in phrase_clauses for t in c.terms})
-    # idf for the query's terms comes from ONE collect of the pruned
-    # termstats scan (≤ |query terms| rows at any corpus size — the scan
-    # is partition- and row-group-pruned), memoized per reader; the
-    # literal map replaces three exchange stages (idf broadcast join,
-    # per-phrase Σidf aggregate, its crossJoin broadcast)
+    # idf for the query's terms comes from the driver's Arrow df read
+    # (≤ |query terms| rows at any corpus size — partition- and
+    # row-group-pruned), memoized per reader; the literal map replaces
+    # three exchange stages (idf broadcast join, per-phrase Σidf
+    # aggregate, its crossJoin broadcast)
     idf_map = _idf_map_cached(index, all_terms)
 
     parts: list[DataFrame] = []
@@ -338,39 +405,20 @@ def _prepare(index: PhysicalIndex, text: str | None, k: int, skip: int,
     return _Query(k, skip, store, kind, clauses, terms, fq_ids)
 
 
-def _empty_page(index: PhysicalIndex) -> DataFrame:
-    return (index.docs_store.withColumn("score", F.lit(0.0))
-            .select(*_PAGE_COLS).limit(0))
-
-
 def _matchall_page(q: _Query) -> DataFrame:
     """match-all *:* (SearchServlet.scala:80): constant score, docID order."""
     return (q.store.orderBy(F.col("doc_id").asc()).offset(q.skip).limit(q.k)
             .withColumn("score", F.lit(1.0)).select(*_PAGE_COLS))
 
 
-def _topk_page(index: PhysicalIndex, scored: DataFrame, q: _Query,
-               round_score: int | None) -> DataFrame:
-    """Cut FIRST on the narrow (doc_id, score) stream (TakeOrdered — no
-    global shuffle), then join stored fields only for the k winners
-    (_stored_fields_page). The fq was already applied in the scoring
-    pass (fq_ids)."""
-    sc = (F.round(F.col("score"), round_score) if round_score is not None
-          else F.col("score"))
-    page = (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .offset(q.skip).limit(q.k)
-            .select("doc_id", sc.alias("score")))
-    return _stored_fields_page(index, page, q.k)
-
-
 def _bucket_topk(index: PhysicalIndex, q: _Query, idf: dict[str, float],
-                 cut: int | None, blocks: DataFrame | None = None) -> DataFrame:
-    """(doc_id, score) of the plain-OR query ``q`` in one pass: the
-    pruned blocks of the terms in ``idf`` (or the given subset of them,
-    ``blocks``) and the fq doc ids, repartitioned by doc-range bucket,
-    through _topk_kernel with local cut ``cut``. With one term and no fq
-    a doc's only posting sits in one block, so the scan partitions feed
-    the kernel directly."""
+                 cut: int, blocks: DataFrame | None = None) -> DataFrame:
+    """(doc_id, score, matches) of the plain-OR query ``q`` in one pass:
+    the pruned blocks of the terms in ``idf`` (or the given subset of
+    them, ``blocks``) and the fq doc ids, repartitioned by doc-range
+    bucket, through _topk_kernel with local cut ``cut``. With one term
+    and no fq a doc's only posting sits in one block, so the scan
+    partitions feed the kernel directly."""
     cfg = index.config
     if blocks is None:
         blocks = _idf_blocks(index, sorted(idf), idf)
@@ -385,26 +433,47 @@ def _bucket_topk(index: PhysicalIndex, q: _Query, idf: dict[str, float],
         stream = stream.repartition("bucket")
     kernel = _topk_kernel(cfg.k1, cfg.b, index.avgdl, index.tombstones,
                           q.fq_ids is not None, cut)
-    return stream.mapInPandas(kernel, "doc_id long, score double")
+    return stream.mapInPandas(kernel,
+                              "doc_id long, score double, matches long")
 
 
-def _scored(index: PhysicalIndex, q: _Query, cut: int | None) -> DataFrame | None:
-    """(doc_id, score) of a "bool" or "or" query; None when no term of an
-    OR query is in the index."""
+def _local_winners(topk: DataFrame) -> tuple[list[tuple[int, float]], int]:
+    """One collect of a _bucket_topk pass: its (doc_id, score) winners and
+    the exact match count."""
+    rows = topk.collect()
+    return [(r[0], r[1]) for r in rows], sum(r[2] for r in rows)
+
+
+def _top(scored: DataFrame, n: int) -> DataFrame:
+    """The top ``n`` of a (doc_id, score) stream by (score desc, doc_id
+    asc): TakeOrderedAndProject, no range-partition sort."""
+    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(n)
+
+
+def _winners(index: PhysicalIndex, q: _Query,
+             found: bool) -> tuple[list[tuple[int, float]], int]:
+    """A scored query's (doc_id, score) winners, a superset of its top
+    ``k+skip``, from ONE collect of its scoring pass, and its match count
+    (exact when ``found``). Plain OR: the bucket-local top-k kernel's
+    local winners, the count riding beside them. Boolean: the combiner's
+    top ``k+skip``; an exact count persists the combiner's output and
+    counts it first."""
+    n = q.k + q.skip
     if q.kind == "bool":
-        # +/-/phrase clauses: exact boolean scoring, scans term-pruned
-        return _score_boolean_physical(index, q.clauses, q.fq_ids)
-    idf = _idf_map_cached(index, q.terms)
-    return _bucket_topk(index, q, idf, cut) if idf else None
-
-
-def _page(index: PhysicalIndex, q: _Query, round_score: int | None) -> DataFrame:
-    if q.kind == "all":
-        return _matchall_page(q)
-    scored = None if q.kind == "none" else _scored(index, q, q.k + q.skip)
-    if scored is None:
-        return _empty_page(index)
-    return _topk_page(index, scored, q, round_score)
+        scored = _score_boolean_physical(index, q.clauses, q.fq_ids)
+        if not found:
+            return [(r[0], r[1]) for r in _top(scored, n).collect()], 0
+        scored = scored.persist()
+        try:
+            count = scored.count()
+            rows = _top(scored, n).collect() if count else []
+            return [(r[0], r[1]) for r in rows], count
+        finally:
+            scored.unpersist()
+    idf = _idf_map_cached(index, q.terms) if q.kind == "or" else {}
+    if not idf:
+        return [], 0
+    return _local_winners(_bucket_topk(index, q, idf, n))
 
 
 class SearchResult(NamedTuple):
@@ -427,12 +496,17 @@ def search(index: PhysicalIndex, text: str | None = None, k: int = 10,
     limit and filters in, one result out.
 
     A plain-OR query is scored in one bucket-local top-(k+skip) pass
-    (_bucket_topk); +/-/phrase queries by the boolean combiner; no text
-    is match-all. On a warm reader (idf memoized) a one-term query runs
-    2 Spark jobs and a multi-term or filtered one 3.
+    (_bucket_topk); +/-/phrase queries by the boolean combiner. Either
+    way the scoring pass's winners are collected once and the page is
+    finished on the driver (_finish) and returned as a local DataFrame,
+    so collecting it runs no job. On a warm reader (idf memoized) a
+    one-term query runs 1 Spark job and a multi-term, filtered or
+    boolean one 2; a cold term's idf costs no job. No text is match-all,
+    whose page stays a lazy one-job plan.
 
-    ``found=True`` also counts every match (_found), the numFound the
-    reference's envelope always carries (Solr.scala:91-103). A
+    ``found=True`` also counts every match, the numFound the reference's
+    envelope always carries (Solr.scala:91-103): for plain OR the count
+    rides out of the same kernel beside the winners (no extra job). A
     ``time_allowed_ms`` budget runs the phased block-max plan
     (_budgeted), Solr's ``timeAllowed``/partialResults. The two cannot
     combine — an exact count must visit every match, so no budget could
@@ -447,11 +521,14 @@ def search(index: PhysicalIndex, text: str | None = None, k: int = 10,
                          "run under a time_allowed_ms budget")
     t_start = time.perf_counter()
     q = _prepare(index, text, k, skip, filters, synonyms, fq_docset)
-    if found:
-        return _found(index, q, round_score)
+    if q.kind == "all":
+        return SearchResult(_matchall_page(q),
+                            q.store.count() if found else None, False)
     if time_allowed_ms is not None:
         return _budgeted(index, q, round_score, t_start, time_allowed_ms)
-    return SearchResult(_page(index, q, round_score), None, False)
+    winners, count = _winners(index, q, found)
+    return SearchResult(_finish(index, winners, q, round_score),
+                        count if found else None, False)
 
 
 def search_blockmax(index: PhysicalIndex, text: str | None = None, k: int = 10,
@@ -474,15 +551,17 @@ def _budgeted(index: PhysicalIndex, q: _Query, round_score: int | None,
     UB job); phase A runs the bucket-local top-k pass over the hot set —
     the P = max(4·(k+skip), 32) buckets of highest UB — and its
     (k+skip)-th score is the threshold τ; phase B runs the same pass over
-    the remaining buckets with UB ≥ τ. If the budget is exhausted before
-    phase B it is skipped and ``partial=True``: the page is then the
-    exact top-k over the hot subset, the best-effort contract of Solr's
-    partial results. A query that completes within budget (or whose
-    matches fit in P buckets, or that is not plain OR) returns the exact
-    answer and ``partial=False``."""
+    the remaining buckets with UB ≥ τ. Each phase's winners are
+    collected once and merged on the driver. If the budget is exhausted
+    before phase B it is skipped and ``partial=True``: the page is then
+    the exact top-k over the hot subset, the best-effort contract of
+    Solr's partial results. A query that completes within budget (or
+    whose matches fit in P buckets, or that is not plain OR) returns the
+    exact answer and ``partial=False``."""
     idf = _idf_map_cached(index, q.terms) if q.kind == "or" else {}
     if not idf:
-        return SearchResult(_page(index, q, round_score), None, False)
+        winners, _ = _winners(index, q, False)
+        return SearchResult(_finish(index, winners, q, round_score), None, False)
     n = q.k + q.skip
     p = max(4 * n, 32)
     blocks = _idf_blocks(index, sorted(idf), idf)
@@ -498,57 +577,24 @@ def _budgeted(index: PhysicalIndex, q: _Query, round_score: int | None,
     # bucket, and one pass over all of them is exact and final
     ub_rows = ub.orderBy(F.col("ub").desc()).limit(p + 1).collect()
     if len(ub_rows) <= p:
-        return SearchResult(_topk_page(index, _bucket_topk(index, q, idf, n), q,
-                                       round_score), None, False)
+        winners, _ = _local_winners(_bucket_topk(index, q, idf, n))
+        return SearchResult(_finish(index, winners, q, round_score), None, False)
     hot = [r["bucket"] for r in ub_rows[:p]]
-    a_rows = (_bucket_topk(index, q, idf, n, blocks.filter(F.col("bucket").isin(hot)))
-              .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-              .limit(n).collect())
-    phase_a = index.spark.createDataFrame(a_rows, "doc_id long, score double")
+    phase_a, _ = _local_winners(
+        _bucket_topk(index, q, idf, n, blocks.filter(F.col("bucket").isin(hot))))
     if (time.perf_counter() - t_start) * 1000.0 > time_allowed_ms:
-        return SearchResult(_topk_page(index, phase_a, q, round_score), None, True)
-    tau = a_rows[-1]["score"] if len(a_rows) >= n else float("-inf")
+        return SearchResult(_finish(index, phase_a, q, round_score), None, True)
+    top_a = sorted(phase_a, key=_rank)[:n]
+    tau = top_a[-1][1] if len(top_a) >= n else float("-inf")
     # a doc's postings all live in its one bucket, so the phases score
     # disjoint doc sets and a plain union is exact. >= tau, not > tau: a
     # pruned doc whose exact score EQUALS tau but whose doc_id is lower
     # than the (k+skip)-th would win the tie-break
     rest = ub.filter(~F.col("bucket").isin(hot) & (F.col("ub") >= tau))
-    phase_b = _bucket_topk(index, q, idf, n,
-                           blocks.join(rest.select("bucket"), "bucket", "left_semi"))
-    return SearchResult(_topk_page(index, phase_a.unionByName(phase_b), q,
-                                   round_score), None, False)
-
-
-def _found(index: PhysicalIndex, q: _Query,
-           round_score: int | None) -> SearchResult:
-    """(page, found) from ONE scoring traversal — the reference's envelope
-    ALWAYS carries numFound alongside the page (Solr.scala:91-103,
-    api.yml:181).
-
-    Exact total-hit counting must visit every matched posting no matter
-    what (the same reason Lucene disables WAND skipping when an exact
-    totalHits is requested), so this path runs the scoring pass with no
-    local cut, persists the narrow (doc_id, score) stream, and derives
-    BOTH the page (TakeOrderedAndProject) and the count from it. The
-    returned page is a small local DataFrame (k rows) — the persisted
-    stream is released before returning."""
-    if q.kind == "all":
-        return SearchResult(_matchall_page(q), q.store.count(), False)
-    scored = None if q.kind == "none" else _scored(index, q, None)
-    if scored is None:
-        return SearchResult(_empty_page(index), 0, False)
-    scored = scored.persist()
-    try:
-        found = scored.count()
-        if found == 0:
-            return SearchResult(_empty_page(index), 0, False)
-        out = _topk_page(index, scored, q, round_score)
-        # pin the k winners locally so the persisted stream can be released
-        rows = out.collect()
-        return SearchResult(index.spark.createDataFrame(rows, out.schema),
-                            found, False)
-    finally:
-        scored.unpersist()
+    phase_b, _ = _local_winners(_bucket_topk(
+        index, q, idf, n, blocks.join(rest.select("bucket"), "bucket", "left_semi")))
+    return SearchResult(_finish(index, top_a + phase_b, q, round_score),
+                        None, False)
 
 
 def envelope(index: PhysicalIndex, text: str | None = None, k: int = 10,

@@ -199,11 +199,12 @@ def test_positions_optional(spark, tmp_path_factory):
         search(idx, '"parse merge"', k=5).page.collect()
 
 
-def test_idf_cache_skips_termstats_on_repeat(built):
+def test_idf_cache_skips_termstats_on_repeat(built, monkeypatch):
     """The per-reader idf memo (wand._idf_map_cached): a repeated
-    boolean/phrase query must not re-collect termstats — Lucene resolves
-    term statistics once per IndexReader. Absent terms are cached as
-    absent too."""
+    boolean/phrase query must not re-read term statistics (the Arrow df
+    read, wand._df_map) — Lucene resolves term statistics once per
+    IndexReader. Absent terms are cached as absent too."""
+    import easy_solr4files_index_spark.operators.wand as wand_mod
     from easy_solr4files_index_spark.operators.wand import _idf_map_cached
 
     pidx, _ = built
@@ -216,18 +217,13 @@ def test_idf_cache_skips_termstats_on_repeat(built):
     m = _idf_map_cached(pidx, ["parse", "zzznotaterm"])
     assert "zzznotaterm" not in m and cache["zzznotaterm"] is None
 
-    class _Boom:
-        def __get__(self, obj, objtype=None):
-            raise AssertionError("termstats re-collected on warm query")
+    def boom(*_args):
+        raise AssertionError("term statistics re-read on warm query")
 
-    orig = type(pidx).termstats
-    type(pidx).termstats = _Boom()
-    try:
-        again = search(pidx, '+"parse merge" token -license',
-                       k=15, round_score=None).page.collect()
-        m2 = _idf_map_cached(pidx, ["parse", "zzznotaterm"])
-    finally:
-        type(pidx).termstats = orig
+    monkeypatch.setattr(wand_mod, "_df_map", boom)
+    again = search(pidx, '+"parse merge" token -license',
+                   k=15, round_score=None).page.collect()
+    m2 = _idf_map_cached(pidx, ["parse", "zzznotaterm"])
     assert [(r["doc_id"], r["score"]) for r in again] == \
         [(r["doc_id"], r["score"]) for r in first]
     assert m2 == {"parse": m["parse"]}

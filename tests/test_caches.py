@@ -154,7 +154,7 @@ def test_round_half_up_matches_catalyst(spark):
     """_round_half_up must reproduce F.round on doubles bit-for-bit —
     it is what makes a cached unrounded-window slice identical to the
     direct page (including page-boundary rounding collisions)."""
-    from easy_solr4files_index_spark.operators.caches import _round_half_up
+    from easy_solr4files_index_spark.operators.wand import _round_half_up
 
     vals = [0.12345, 0.123449999999, 2.675, 0.00005, 1.0, 0.0,
             5.19625, 0.99995, 3.00004999999, 123.456789, 7e-05,

@@ -1,8 +1,11 @@
 """Spark jobs per query, pinned per family on a many-bucket index with a
 warm reader (idf memoized, plans compiled once): a plan change that adds
 a job — a broadcast, an exchange, a range sort, a second pass — fails
-here before it shows up as latency. The same counter pins a one-repo
-delete and upsert, each on its own copy of the index."""
+here before it shows up as latency. A scored query collects its scoring
+pass once and finishes the page on the driver, so its jobs are the
+scoring pass's own. The same counter pins a freshly opened reader's
+first query, and a one-repo delete and upsert, each on its own copy of
+the index."""
 
 from __future__ import annotations
 
@@ -19,12 +22,12 @@ from easy_solr4files_index_spark.sources.docs_source import synth_code_docs
 
 # (family, text, k, skip, filters, max jobs)
 FAMILIES = [
-    ("or1", "parse", 10, 0, None, 2),
-    ("or3", "parse merge token", 10, 0, None, 3),
-    ("fq", "license merge", 10, 0, {"lang": ["java", "python"]}, 3),
-    ("page", "merge parse", 10, 40, None, 3),
-    ("bool", "+parse -merge token", 10, 0, None, 3),
-    ("phrase", '"parse merge" token', 10, 0, None, 4),
+    ("or1", "parse", 10, 0, None, 1),
+    ("or3", "parse merge token", 10, 0, None, 2),
+    ("fq", "license merge", 10, 0, {"lang": ["java", "python"]}, 2),
+    ("page", "merge parse", 10, 40, None, 2),
+    ("bool", "+parse -merge token", 10, 0, None, 2),
+    ("phrase", '"parse merge" token', 10, 0, None, 3),
     ("all", None, 10, 0, {"lang": ["go"]}, 1),
 ]
 
@@ -71,12 +74,13 @@ def test_jobs_per_query(spark, many_buckets, family, text, k, skip, filters,
         assert jobs == 1
 
 
-# found=True: the same families with an exact count — the scoring pass
-# with no local cut, a persist, the count and the page pinned locally.
-# The limits are the counts this mode ran on this fixture when it was
-# still a function of its own, so the fold into search() added no job.
-FOUND_JOBS = {"or1": 6, "or3": 7, "fq": 7, "page": 7, "bool": 7,
-              "phrase": 8, "all": 3}
+# found=True: the same families with an exact count. Plain OR reads the
+# count from the page's own collect (each kernel partition reports its
+# matches beside its winners), so it costs no job; a boolean query
+# persists the combiner's output and counts it before the page, and
+# match-all counts the filtered store.
+FOUND_JOBS = {"or1": 1, "or3": 2, "fq": 2, "page": 2, "bool": 5,
+              "phrase": 6, "all": 3}
 FOUND_FAMILIES = [f[:5] + (FOUND_JOBS[f[0]],) for f in FAMILIES]
 
 
@@ -97,7 +101,8 @@ def test_jobs_per_query_found(spark, many_buckets, family, text, k, skip,
 def test_jobs_per_query_budgeted(spark, many_buckets):
     """A multi-term OR under a budget it never exhausts runs every phase
     of the block-max plan: 75 buckets exceed the hot set P=40 of k=10, so
-    the UB job, phase A and phase B all run."""
+    the UB job, phase A and phase B all run, each phase collected once
+    and merged on the driver."""
     def run():
         res = search(many_buckets, "parse merge token", k=10,
                      time_allowed_ms=1e9)
@@ -105,7 +110,35 @@ def test_jobs_per_query_budgeted(spark, many_buckets):
 
     run()  # warm the reader
     jobs = _jobs(spark, "jobs-per-query-budgeted", run)
-    assert jobs <= 9, f"budgeted: {jobs} jobs > 9"
+    assert jobs <= 8, f"budgeted: {jobs} jobs > 8"
+
+
+def test_cold_reader_first_query(spark, many_buckets):
+    """A freshly opened reader's first multi-term query runs only its
+    scoring pass: the terms' df is read by key with Arrow (no termstats
+    job) and every dataset's schema comes from its parquet footer (no
+    schema-inference job)."""
+    idx = open_index(spark, many_buckets.index_dir)
+
+    def run():
+        assert search(idx, "parse merge token").page.collect()
+
+    jobs = _jobs(spark, "jobs-cold-reader", run)
+    assert jobs <= 2, f"cold reader: {jobs} jobs > 2"
+
+
+def test_page_order_rounded_then_doc_id(many_buckets):
+    """The page set is cut on the unrounded score, then ordered by
+    (rounded score desc, doc_id asc): docs 34 and 95 both round to
+    0.1278 here (34 scores lower unrounded), so 34 comes first."""
+    rows = search(many_buckets, "license merge",
+                  filters={"lang": ["java", "python"]}).page.collect()
+    assert (rows[2]["doc_id"], rows[2]["score"]) == (34, 0.1278)
+    assert (rows[3]["doc_id"], rows[3]["score"]) == (95, 0.1278)
+    raw = {r["doc_id"]: r["score"] for r in search(
+        many_buckets, "license merge", filters={"lang": ["java", "python"]},
+        round_score=None).page.collect()}
+    assert raw[95] > raw[34]
 
 
 def test_found_with_budget_rejected(spark, many_buckets):

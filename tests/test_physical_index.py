@@ -185,23 +185,105 @@ def test_kill_resume_identical(spark, tmp_path):
     assert [(r["doc_id"], r["score"]) for r in got] == [(r["doc_id"], r["score"]) for r in exp]
 
 
+@pytest.fixture(scope="module")
+def upserted(spark, tmp_path_factory):
+    """The ``built`` corpus written, then one repo upserted with content
+    that ranks its docs high: docs_store holds the base files and a
+    segment file, and the repo's old rows stay on disk under tombstoned
+    ids."""
+    from pyspark.sql import functions as F
+
+    from easy_solr4files_index_spark.operators.maintenance import (
+        upsert_repos_physical)
+
+    docs = synth_code_docs(spark, n_docs=250, seed=23)
+    d = str(tmp_path_factory.mktemp("fetch") / "index")
+    write_index(spark, docs, d, CFG, lineage_groups=4)
+    repo = "org1/proj0"
+    mod = (docs.filter(F.col("repo") == repo)
+           .withColumn("content", F.concat(
+               "content", F.lit(" parse merge license query score"))))
+    pidx = upsert_repos_physical(spark, d, mod)
+    assert pidx.tombstones
+    merged = docs.filter(F.col("repo") != repo).unionByName(mod)
+    oracle = build_oracle([r.asDict() for r in merged.collect()])
+    return pidx, oracle
+
+
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)
-def test_fetch_by_id_page_identical(built, monkeypatch, text, k, skip, filters):
-    """Stored-field fetch strategies are interchangeable: forcing the
-    large-store path (collect k winner ids, fetch via a doc_id IN (...)
-    filter pushed to parquet row-group stats) returns byte-identical
-    pages to the default broadcast-join path."""
-    import easy_solr4files_index_spark.operators.wand as wand_mod
+def test_fetch_by_id_page_identical(upserted, text, k, skip, filters):
+    """Stored fields fetched by doc_id from a docs_store of several
+    files: every page row carries its own doc's live stored fields, no
+    tombstoned doc appears, and the page equals the oracle's over the
+    live corpus (its ids differ from the index's after the upsert, so
+    rows compare by (repo, path, lang) and score)."""
+    pidx, oracle = upserted
+    got = search(pidx, text, k=k, skip=skip, filters=filters,
+                 round_score=None).page.collect()
+    exp = oracle_search(oracle, text, k=k, skip=skip, filters=filters)
+    assert len(got) == len(exp), text
+    assert [g["score"] for g in got] == \
+        pytest.approx([e["score"] for e in exp], rel=1e-9), text
+    truth = {(e["repo"], e["path"], e["lang"]): e["score"] for e in
+             oracle_search(oracle, text, k=10 ** 9, skip=0, filters=filters)}
+    live = {r["doc_id"]: (r["repo"], r["path"], r["lang"])
+            for r in pidx.docs_store.collect()}
+    for g in got:
+        assert not any(lo <= g["doc_id"] <= hi for lo, hi in pidx.tombstones)
+        assert live[g["doc_id"]] == (g["repo"], g["path"], g["lang"])
+        assert g["score"] == pytest.approx(
+            truth[(g["repo"], g["path"], g["lang"])], rel=1e-9)
+    if text in ("parse", "license"):
+        assert any(g["repo"] == "org1/proj0" for g in got), text
+
+
+def test_fresh_reader_concurrent_queries(spark, built):
+    """Eight threads (more than the local Spark master's cores) query one
+    freshly opened reader at once, so they race to fill its memoized
+    Spark frames, Arrow datasets and idf map: every page equals the one
+    a second fresh reader returns serially."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
 
     pidx, *_ = built
-    if text is None:
-        pytest.skip("match-all path bypasses scoring/fetch")
-    base = search(pidx, text, k=k, skip=skip, filters=filters,
-                  round_score=None).page.collect()
-    monkeypatch.setattr(wand_mod, "_FETCH_BY_ID_BYTES", 0)
-    forced = search(pidx, text, k=k, skip=skip, filters=filters,
-                    round_score=None).page.collect()
-    assert [tuple(r) for r in forced] == [tuple(r) for r in base], text
+    texts = ["parse", "parse merge token", "license", "buildIndex cache",
+             "query score", "merge", '"parse merge" token', "+parse -merge"]
+
+    def page(idx, text):
+        return [tuple(r) for r in search(idx, text, k=10).page.collect()]
+
+    serial = open_index(spark, pidx.index_dir)
+    want = [page(serial, t) for t in texts]
+    fresh = open_index(spark, pidx.index_dir)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(texts)) as ex:
+            futs = [ex.submit(page, fresh, t) for t in texts]
+            got = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert got == want
+
+
+def test_driver_idf_bit_identical(spark, built):
+    """The driver's idf (wand._idf: StrictMath.log over the same double
+    operations) equals the Spark plan's _idf_expr bit for bit for every
+    df from 1 to n_docs."""
+    from pyspark.sql import functions as F
+
+    from easy_solr4files_index_spark.operators.query import _idf_expr
+    from easy_solr4files_index_spark.operators.wand import _idf
+
+    pidx, *_ = built
+    n = pidx.n_docs
+    want = {r["df"]: r["idf"] for r in spark.range(1, n + 1)
+            .select(F.col("id").alias("df"))
+            .withColumn("idf", _idf_expr(n)).collect()}
+    got = {df: _idf(pidx, df) for df in range(1, n + 1)}
+    assert len(want) == n
+    assert all(got[df] == want[df] for df in want), \
+        [df for df in want if got[df] != want[df]][:5]
 
 
 @pytest.mark.parametrize("text,k,skip,filters", QUERIES)

@@ -22,6 +22,19 @@ def fmt(df) -> str:
     return buf.getvalue()
 
 
+def scoring_pass(idx, text, k, filters=None):
+    """The one plan ``search`` collects for a scored query (its page is
+    then finished on the driver): the bucket-local top-k kernel for plain
+    OR, the boolean combiner's top k otherwise."""
+    from easy_solr4files_index_spark.operators import wand
+
+    q = wand._prepare(idx, text, k, 0, filters, None, None)
+    if q.kind == "bool":
+        return wand._top(wand._score_boolean_physical(idx, q.clauses,
+                                                      q.fq_ids), k)
+    return wand._bucket_topk(idx, q, wand._idf_map_cached(idx, q.terms), k)
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -42,19 +55,30 @@ def main() -> None:
 
     sections.append((
         "Top-k BM25 over the physical index",
-        "`search(idx, 'spark join', k=5).page` — the one-pass bucket-local "
-        "top-k of a plain OR query.\n"
+        "The scoring pass `search(idx, 'spark join', k=5)` collects — the "
+        "one-pass bucket-local top-k of a plain OR query.\n"
         "Look for: `PartitionFilters` with `tbucket` (term-bucket partition "
         "pruning) and `PushedFilters: In(term, ...)` (parquet row-group "
         "pruning) on the postings scan, and NO termstats scan or join — idf "
-        "is a literal `CASE` column from the reader's memoized idf map; ONE "
+        "is a literal `CASE` column from the reader's memoized idf map "
+        "(df read by term with Arrow on the driver); ONE "
         "`Exchange hashpartitioning(bucket)` (the `repartition(\"bucket\")`) "
         "feeding ONE `MapInPandas` (the top-k kernel: decode, tombstone "
-        "mask, per-doc sum and local top `k+skip` in one pass — no "
-        "`HashAggregate` over doc_id); a `TakeOrderedAndProject` cut on "
-        "the narrow (doc_id, score) stream; and the `BroadcastExchange` of "
-        "those k winners into a `BroadcastHashJoin` with docs_store for "
-        "their stored fields.",
+        "mask, per-doc sum and local top `k+skip` in one pass, each "
+        "partition's match count beside its winners — no `HashAggregate` "
+        "over doc_id); and nothing above it: no `TakeOrderedAndProject`, "
+        "no `BroadcastExchange`, no docs_store scan. The winners are "
+        "collected once and the driver cuts the page and reads their "
+        "stored fields by doc_id with Arrow.",
+        fmt(scoring_pass(idx, "spark join", 5)),
+    ))
+
+    sections.append((
+        "The returned page",
+        "`search(idx, 'spark join', k=5).page` — the page itself.\n"
+        "Look for: a lone `LocalTableScan` of the k rows with stored "
+        "fields: the page was finished on the driver, so collecting it "
+        "runs no Spark job.",
         fmt(search(idx, "spark join", k=5).page),
     ))
 
@@ -110,7 +134,8 @@ def main() -> None:
 
     sections.append((
         "Filter query applied INSIDE the scoring kernel",
-        "`search(idx, 'parse merge', k=5, filters={lang:[java]}).page`.\n"
+        "The scoring pass of "
+        "`search(idx, 'parse merge', k=5, filters={lang:[java]})`.\n"
         "Look for: the fq's docs_store scan (`lang` pushed as a parquet "
         "filter) projected to empty block rows keyed by "
         "`bucket = doc_id DIV bucket_span` and `Union`ed with the pruned "
@@ -118,31 +143,33 @@ def main() -> None:
         "hashpartitioning(bucket)` into the one `MapInPandas` kernel, which "
         "masks the decoded postings by the fq ids — scores are never summed "
         "for docs the fq excludes, and the fq adds no join and no second "
-        "exchange. `TakeOrderedAndProject` and the broadcast stored-field "
-        "join finish the page as above.",
-        fmt(search(idx, "parse merge", k=5,
-                   filters={"lang": ["java"]}).page),
+        "exchange. The page is finished on the driver as above.",
+        fmt(scoring_pass(idx, "parse merge", 5, {"lang": ["java"]})),
     ))
 
     sections.append((
         "Boolean/phrase dismax query over the physical index (round-3)",
-        "`search(idx, '+\\\"spark join\\\" merge -parse', k=5).page` — "
+        "The scoring pass of "
+        "`search(idx, '+\\\"spark join\\\" merge -parse', k=5)` — "
         "required phrase + optional term + prohibited term.\n"
         "Look for: the positions/ scan pruned by `PartitionFilters` on "
         "`tbucket` and `PushedFilters: In(term, ...)` (the phrase reads "
         "only its own terms' partition dirs — Lucene .prx analog, same "
         "layout discipline as the postings scan above it); NO broadcast "
         "exchanges for query-sized metadata — per-term idf and the "
-        "clause tag map are literal CASE projections (idf collected once "
-        "from the pruned termstats scan; ≤|query terms| rows at any "
-        "corpus size), and the phrase Σidf is a literal multiplier; the "
-        "phrase tf computed as a Catalyst array expression (no Python in "
-        "that branch); and ONE `HashAggregate(keys=[doc_id])` computing "
-        "the score and the MUST/MUST_NOT match predicate together (a "
-        "plain count over the unique-by-construction (doc_id, cid) rows "
-        "— no count_distinct double-aggregate) — clause count never "
-        "multiplies the shuffle count.",
-        fmt(search(idx, '+"spark join" merge -parse', k=5).page),
+        "clause tag map are literal CASE projections (idf from the "
+        "driver's Arrow df read; ≤|query terms| rows at any corpus "
+        "size), and the phrase Σidf is a literal multiplier; the phrase "
+        "tf computed as a Catalyst array expression (no Python in that "
+        "branch), each phrase clause grouping its own positions in an "
+        "`ObjectHashAggregate` → `Exchange` → `ObjectHashAggregate` "
+        "below the union, so every phrase clause adds one shuffle; then "
+        "ONE `HashAggregate(keys=[doc_id])` computing the score and the "
+        "MUST/MUST_NOT match predicate together (a plain count over the "
+        "unique-by-construction (doc_id, cid) rows — no count_distinct "
+        "double-aggregate) and a `TakeOrderedAndProject` of the top k, "
+        "the rows the driver collects to finish the page.",
+        fmt(scoring_pass(idx, '+"spark join" merge -parse', 5)),
     ))
 
     from easy_solr4files_index_spark.operators.docids import assign_doc_ids
